@@ -320,7 +320,7 @@ class Bench:
         """Cost of ``fits_local_kernel()`` on a cold, uncounted Graph, the
         check every generic-graph dispatch pays. Closure-keyed graphs
         dispatch before consulting it, and the corpus has no graph."""
-        if not self.wl.has_graph or self.wl.closure:
+        if self.wl.closure:
             return 0.0
         sc = self.spark.sparkContext
         sc.setJobGroup(f"{self.wl.name}.cold-graph", "probe")
@@ -489,8 +489,8 @@ def end_to_end(bench: Bench, passes: list[dict]) -> tuple[dict, list[str]]:
     lines.append(f"{'pass walls':22s} " + " ".join(f"{w:.3f}" for w in walls))
     pr = [p["walls"]["pagerank"] for p in passes if "pagerank" in p["walls"]]
     if pr:
-        rate = wl.m_expected * wl.pr_rounds / median(pr)
-        lines.append(f"{'pagerank_edges_per_s':22s} {rate:10.0f} 1/s (m={wl.m_expected}, rounds={wl.pr_rounds})")
+        rate = wl.pr_edges * wl.pr_rounds / median(pr)
+        lines.append(f"{'pagerank_edges_per_s':22s} {rate:10.0f} 1/s (m={wl.pr_edges}, rounds={wl.pr_rounds})")
     lines.append(
         f"{'fail_ratio':22s} {bench.failed / max(bench.attempted, 1):10.4f}     "
         f"({bench.failed} of {bench.attempted})"

@@ -275,15 +275,14 @@ class Workload:
 
     name = ""
     env: dict[str, str] = {}
-    has_graph = True
     closure = False
     python_workers = True  # the queries run Python (Arrow) kernels
 
     def __init__(self, seed: int, workdir: str) -> None:
         self.seed = seed
         self.path = os.path.join(workdir, self.name + ".parquet")
-        self.m_expected: int | None = None
-        self.pr_rounds = 0
+        self.m_expected = None
+        self.pr_edges = self.pr_rounds = 0
 
     def construct(self, spark):
         raise NotImplementedError
@@ -297,11 +296,12 @@ class Workload:
 
 class TranscriptsClosed(Workload):
     """North-star input: transcript link graph with a closure key, so
-    every query runs in the fused closed.py kernels."""
+    every query runs in the fused closed.py kernels. A part of
+    ``TranscriptsAnn``."""
 
     name = "transcripts-closed"
     closure = True
-    N_CONV = 3000
+    N_CONV = 2000  # a pass stays near 2.5 s, so a run times three or more
 
     def make_inputs(self, spark) -> None:
         generate_transcripts(spark, self.N_CONV, seed=self.seed).write.mode(
@@ -319,7 +319,7 @@ class TranscriptsClosed(Workload):
         t = g.closed_edges.select("src", "dst").toArrow()
         src = t.column(0).to_numpy()
         dst = t.column(1).to_numpy()
-        self.m_expected = len(src)
+        self.m_expected = self.pr_edges = len(src)
         pr_ref, self.pr_rounds = ref_pagerank(src, dst, 20)
         return [
             Query(
@@ -372,7 +372,7 @@ class RmatDist(Workload):
 
     def build_queries(self, g) -> list[Query]:
         src, dst = _symmetric_edges(self._edges())
-        self.m_expected = len(src)
+        self.m_expected = self.pr_edges = len(src)
         r = self.PR_ROUNDS
         pr_ref, self.pr_rounds = ref_pagerank(src, dst, r)
         return [
@@ -396,10 +396,10 @@ class RmatDist(Workload):
 
 
 class AnnTopk(Workload):
-    """Exact cosine top-k over a parquet corpus of seeded vectors."""
+    """Exact cosine top-k over a parquet corpus of seeded vectors. A part
+    of ``TranscriptsAnn``."""
 
     name = "ann-topk"
-    has_graph = False
     N_VEC = 50_000
     DIM = 128
     N_QUERY = 2000
@@ -454,5 +454,45 @@ class AnnTopk(Workload):
         ]
 
 
-WORKLOADS = {w.name: w for w in (TranscriptsClosed, RmatDist, AnnTopk)}
+class TranscriptsAnn(Workload):
+    """The two Python/Arrow kernel layers in one pass: the transcript
+    graph's closed.py kernels, then the vector top-k scan. Their load
+    steps, queries and references are those of the parts; a handle is
+    the pair of the parts' handles. One workload rather than two keeps
+    each run long enough to time several passes."""
+
+    name = "transcripts-ann"
+    closure = True
+
+    def __init__(self, seed: int, workdir: str) -> None:
+        super().__init__(seed, workdir)
+        self.parts = (TranscriptsClosed(seed, workdir), AnnTopk(seed, workdir))
+
+    def make_inputs(self, spark) -> None:
+        for part in self.parts:
+            part.make_inputs(spark)
+
+    def construct(self, spark):
+        return tuple(part.construct(spark) for part in self.parts)
+
+    def count(self, handle):
+        return tuple(part.count(h) for part, h in zip(self.parts, handle))
+
+    def unload(self, handle) -> None:
+        for part, h in zip(self.parts, handle):
+            part.unload(h)
+
+    def build_queries(self, handle) -> list[Query]:
+        queries = [
+            Query(q.name, lambda h, mt, call=q.call, i=i: call(h[i], mt), q.check, q.takes_metrics)
+            for i, (part, h) in enumerate(zip(self.parts, handle))
+            for q in part.build_queries(h)
+        ]
+        graph = self.parts[0]
+        self.m_expected = tuple(part.m_expected for part in self.parts)
+        self.pr_edges, self.pr_rounds = graph.pr_edges, graph.pr_rounds
+        return queries
+
+
+WORKLOADS = {w.name: w for w in (TranscriptsAnn, RmatDist)}
 QUERY_NAMES = ("pagerank", "cc", "lp", "triangle", "topk")
