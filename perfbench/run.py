@@ -3,10 +3,10 @@
     python3 perfbench/run.py --workload W --seed N --seconds S --trace 0|1
 
 Run from the repository root. Set-up starts a ``local[nproc]`` session,
-generates the workload's inputs from ``--seed`` and runs one untimed
-warm-up pass. The measured phase then repeats passes (load, then every
-query with the action on its result) until ``--seconds`` have elapsed,
-checking every result against a numpy reference.
+generates the workload's inputs from ``--seed`` and runs its untimed
+warm-up passes. The measured phase then repeats passes (load, then
+every query with the action on its result) until ``--seconds`` have
+elapsed, checking every result against a numpy reference.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` runs half
 the time untraced, restarts the session with Spark's JSON event log on,
@@ -71,34 +71,6 @@ class HostMonitor:
         }
 
 
-def peak_rss_bytes() -> int:
-    """Sum over every live process this one started (the JVM and the
-    Python workers) of its peak resident size (VmHWM). Read once, so
-    nothing samples /proc while passes are timed."""
-    parent: dict[int, int] = {}
-    for d in os.listdir("/proc"):
-        if d.isdigit():
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    parent[int(d)] = int(fh.read().rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                pass
-    kids: dict[int, list[int]] = {}
-    for pid, ppid in parent.items():
-        kids.setdefault(ppid, []).append(pid)
-    todo, total = list(kids.get(os.getpid(), [])), 0
-    while todo:
-        pid = todo.pop()
-        todo.extend(kids.get(pid, []))
-        try:
-            with open(f"/proc/{pid}/status") as fh:
-                hwm = next(line for line in fh if line.startswith("VmHWM:"))
-            total += int(hwm.split()[1]) * 1024
-        except (OSError, StopIteration, ValueError):
-            pass
-    return total
-
-
 def nproc() -> int:
     return len(os.sched_getaffinity(0))
 
@@ -115,6 +87,11 @@ def start_session(workdir: str, conf: dict[str, str]):
         "spark.local.dir": os.path.join(workdir, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(workdir, "warehouse"),
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        # The session's Unix sockets (accumulator server, Python workers)
+        # are named ".<uuid>.sock" in this directory, and a socket path
+        # may not exceed 107 bytes: relative to the working directory it
+        # stays short however deep the checkout lies.
+        "spark.python.unix.domain.socket.dir": os.path.relpath(tmp),
         "spark.ui.showConsoleProgress": "false",
         **conf,
     }
@@ -247,6 +224,8 @@ class Bench:
                 t1 = time.perf_counter()
                 out = action(res)
                 t2 = time.perf_counter()
+                err = q.check(out)
+                release(res)
             except Exception:  # noqa: BLE001 - count it, keep the loop going
                 self.fail(f"pass {i} {q.name}", traceback.format_exc(limit=3))
                 continue
@@ -255,31 +234,28 @@ class Bench:
             rec["walls"][q.name + ".action"] = t2 - t1
             if mt is not None:
                 rec["iters"][q.name] = mt.rounds
-            err = q.check(out)
             if err:
                 self.fail(f"pass {i} {q.name}", err)
-            release(res)
         if traced:
             sc.setJobGroup(group.format("unload"), f"pass {i}")
         self.wl.unload(handle)
         return rec
 
-    def measure(self, seconds: float, traced: bool, first: int, min_passes: int = 2) -> list[dict]:
-        """Passes until ``seconds`` have elapsed, and at least
-        ``min_passes``, so that a reported median never rests on one
-        sample."""
+    def measure(self, seconds: float, traced: bool, first: int) -> list[dict]:
+        """Passes until ``seconds`` have elapsed, and at least two, so
+        that a reported median never rests on one sample."""
         passes, deadline = [], time.perf_counter() + seconds
         while True:
             passes.append(self.run_pass(first + len(passes), traced))
-            if len(passes) >= min_passes and time.perf_counter() >= deadline:
+            if len(passes) >= 2 and time.perf_counter() >= deadline:
                 return passes
 
     # ---- set-up ----------------------------------------------------------
     def set_up(self) -> None:
         """Session launch, Python-worker warm-up (when the queries use
         workers), input generation SETUP_REPS times (the median counts),
-        the reference computation (not part of set-up time), then one
-        untimed warm-up pass."""
+        the reference computation and the one-off input check (not part
+        of set-up time), then the workload's untimed warm-up passes."""
         t = time.perf_counter()
         self.spark = start_session(self.workdir, {})
         self.setup["session.start_s"] = time.perf_counter() - t
@@ -294,9 +270,8 @@ class Bench:
             inputs.append(time.perf_counter() - t)
         self.setup["setup.inputs_s"] = median(inputs)
 
-        # The warm-up pass: its load also gives the references (for the
-        # transcript graph, the edge set the library derived), whose numpy
-        # computation is not set-up time.
+        # The first warm-up pass's load also gives the references and the
+        # input check, which are not set-up time.
         t = time.perf_counter()
         handle = self.wl.construct(self.spark)
         m = self.wl.count(handle)
@@ -304,11 +279,17 @@ class Bench:
         t = time.perf_counter()
         self.queries = self.wl.build_queries(handle)
         self.setup["refs_s"] = time.perf_counter() - t
-        self.attempted += 1
+        self.attempted += 2
         if m != self.wl.m_expected:
             self.fail("set-up load", f"m={m}, expected {self.wl.m_expected}")
+        err = self.wl.check_input(handle)
+        if err:
+            self.fail("set-up input check", err)
         t = time.perf_counter()
-        self.run_pass(-1, traced=False, handle=handle)
+        warmup = self.wl.warmup_passes
+        self.run_pass(-warmup, traced=False, handle=handle)
+        for i in range(1 - warmup, 0):
+            self.run_pass(i, traced=False)
         self.setup["setup.warmup_s"] = time.perf_counter() - t + load_s
         self.setup["setup_s"] = sum(
             self.setup[k]
@@ -318,13 +299,11 @@ class Bench:
     # ---- traced phase ----------------------------------------------------
     def fits_local_kernel_probe(self) -> float:
         """Cost of ``fits_local_kernel()`` on a cold, uncounted Graph, the
-        check every generic-graph dispatch pays. Closure-keyed graphs
-        dispatch before consulting it, and the corpus has no graph."""
-        if self.wl.closure:
-            return 0.0
+        check every generic-graph dispatch pays (closure-keyed graphs
+        dispatch before consulting it)."""
         sc = self.spark.sparkContext
         sc.setJobGroup(f"{self.wl.name}.cold-graph", "probe")
-        g = self.wl.construct(self.spark)
+        g = self.wl.cold_graph(self.spark)
         sc.setJobGroup(f"{self.wl.name}.fits_local_kernel", "probe")
         t0 = time.perf_counter()
         g.fits_local_kernel()
@@ -373,16 +352,16 @@ def step_values(row: dict, wall: float, span: tuple[float, float]) -> dict:
     return vals
 
 
-def backend_of(q: str, closure: bool, python_tasks: int) -> str:
+def backend_of(q, python_tasks: int) -> str:
     """Which engine path ran the query: the ANN scan, the distributed
     JVM rounds (no Python stage ran), or a Python kernel, which is the
     closed.py kernels on a closure-keyed graph and the whole-graph local
     kernel otherwise."""
-    if q == "topk":
+    if q.name == "topk":
         return "scan"
     if python_tasks == 0:
         return "distributed"
-    return "closed" if closure else "local"
+    return "closed" if q.closure else "local"
 
 
 def fold_trace(bench: Bench, log_dir: str, passes: list[dict], probe_s: float) -> tuple[dict, list[str]]:
@@ -392,6 +371,7 @@ def fold_trace(bench: Bench, log_dir: str, passes: list[dict], probe_s: float) -
     from workloads import QUERY_NAMES
 
     wl = bench.wl
+    queries = {q.name: q for q in bench.queries}
     rows = eventlog.fold(log_dir)
     per_q: dict[str, dict[str, list[float]]] = {}
     per_pass: dict[str, list[float]] = {}
@@ -420,7 +400,7 @@ def fold_trace(bench: Bench, log_dir: str, passes: list[dict], probe_s: float) -
                 action_s=p["walls"][name + ".action"],
                 rounds=rounds,
                 round_wall_s=round_wall,
-                backend=CODES[backend_of(name, wl.closure, row["python_tasks"])],
+                backend=CODES[backend_of(queries[name], row["python_tasks"])],
                 jobs_per_round=row["jobs"] / max(rounds, 1),
                 useful_attempt_ratio=row["ok_tasks"] / row["tasks"] if row["tasks"] else 0.0,
             )
@@ -474,33 +454,50 @@ def pass_walls(bench: Bench, passes: list[dict]) -> tuple[list[str], list[float]
     return names, walls
 
 
+def geomean(xs) -> float:
+    return math.exp(statistics.fmean(math.log(x) for x in xs)) if xs else 0.0
+
+
+# End-to-end metrics per algorithm, both run on every workload:
+# ``pagerank_s`` is the geometric mean of the median walls of a pass's
+# PageRank queries (``pagerank``, and ``pagerank_local`` on kernels), so
+# doubling any one of them raises it by at least 41%.
+FAMILIES = ("pagerank", "cc")
+
+
 def end_to_end(bench: Bench, passes: list[dict]) -> tuple[dict, list[str]]:
+    """The end-to-end metrics and the printed step table. Steps that
+    never succeeded are left out, so a run whose every pass failed
+    still reports (with ``correct: false``) instead of aborting."""
     wl = bench.wl
     names, walls = pass_walls(bench, passes)
-    if not walls:
-        raise RuntimeError("no pass completed without a failed step")
     lines, meds = [], {}
     for n in names:
         xs = [p["walls"][n] for p in passes if n in p["walls"]]
+        if not xs:
+            lines.append(f"{n + '_s':22s}        n/a     (no successful run)")
+            continue
         pct, tv = tail(xs)
         meds[n] = median(xs)
         extra = f", p{pct} {tv:.4f}" if pct else ""
-        lines.append(f"{n + '_s':22s} {median(xs):10.4f} s   (median of {len(xs)}{extra})")
+        samples = " ".join(f"{x:.3f}" for x in xs)
+        lines.append(f"{n + '_s':22s} {meds[n]:10.4f} s   (median of {len(xs)}{extra}: {samples})")
     lines.append(f"{'pass walls':22s} " + " ".join(f"{w:.3f}" for w in walls))
-    pr = [p["walls"]["pagerank"] for p in passes if "pagerank" in p["walls"]]
-    if pr:
-        rate = wl.pr_edges * wl.pr_rounds / median(pr)
+    if "pagerank" in meds:
+        rate = wl.pr_edges * wl.pr_rounds / meds["pagerank"]
         lines.append(f"{'pagerank_edges_per_s':22s} {rate:10.0f} 1/s (m={wl.pr_edges}, rounds={wl.pr_rounds})")
     lines.append(
         f"{'fail_ratio':22s} {bench.failed / max(bench.attempted, 1):10.4f}     "
         f"({bench.failed} of {bench.attempted})"
     )
-    lines.append(f"{'peak_rss_mb':22s} {peak_rss_bytes() / 2**20:10.1f} MB")
+    queries = [q.name for q in bench.queries if q.name in meds]
     metrics = {
         "setup_s": bench.setup["setup_s"],
         "pass_s": median(walls),
-        "query_geomean_s": math.exp(statistics.fmean(math.log(meds[q.name]) for q in bench.queries)),
+        "query_geomean_s": geomean([meds[q] for q in queries]),
     }
+    for fam in FAMILIES:
+        metrics[fam + "_s"] = geomean([meds[q] for q in queries if q.split("_")[0] == fam])
     return metrics, lines
 
 
@@ -542,6 +539,8 @@ def main(argv=None) -> int:
     os.makedirs(os.path.join(workdir, "tmp"), exist_ok=True)
     os.environ["TMPDIR"] = os.path.join(workdir, "tmp")
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = HEAP
+    # the library's default local-dispatch cap, whatever the caller set
+    os.environ.pop(workloads.LOCAL_CAP, None)
     os.environ.update(cls.env)
     tempfile.tempdir = None  # re-read TMPDIR
 
@@ -550,8 +549,7 @@ def main(argv=None) -> int:
     try:
         bench.set_up()
         budget = args.seconds / 2 if args.trace else args.seconds
-        # with --trace 1 the untraced half only gives trace.overhead_s
-        plain = bench.measure(budget, traced=False, first=0, min_passes=1 if args.trace else 2)
+        plain = bench.measure(budget, traced=False, first=0)
         metrics, lines = end_to_end(bench, plain)
         if args.trace:
             log_dir = os.path.join(workdir, "eventlog")

@@ -5,19 +5,24 @@ against.
 Every input is generated from the run's seed at set-up. The program
 under test only sees the generated parquet files. References are
 computed once per run with plain numpy/pandas, from the same seeded
-arrays or, for the transcript graph, from the edge set the library
-derived (the derivation itself is checked by its edge count).
+arrays or, for the transcript graph, from an edge set derived with
+pandas from the seeded transcripts table, which the library's derived
+edge set is compared with once.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from ligra_spark import Graph
 from ligra_spark.algorithms import (
@@ -48,6 +53,7 @@ class Query:
     call: Callable
     check: Callable
     takes_metrics: bool = True
+    closure: bool = False  # runs on the closure-keyed graph
 
 
 def action(result):
@@ -179,11 +185,46 @@ def ref_triangles(src, dst, chunk_wedges=4_000_000):
     return total
 
 
-def ref_topk(ids, mat, n_queries, k, chunk=12_500, margin=16):
+def ref_transcript_edges(turns: pd.DataFrame):
+    """The link graph of a transcripts table with an ``id`` per turn:
+    a reply edge from each turn to the previous turn of its
+    conversation, and for each assistant turn that calls a tool, an
+    edge to the first later tool turn with that tool and one back."""
+    t = turns.sort_values(["conv_id", "turn_idx"])
+    conv, ids = t["conv_id"].to_numpy(), t["id"].to_numpy()
+    has_prev = conv[1:] == conv[:-1]
+    reply_src, reply_dst = ids[1:][has_prev], ids[:-1][has_prev]
+    cols = ["conv_id", "turn_idx", "tool", "id"]
+    calls = t.loc[(t["role"] == "assistant") & t["tool"].notna(), cols]
+    replies = t.loc[t["role"] == "tool", cols]
+    pairs = calls.merge(replies, on=["conv_id", "tool"], suffixes=("_call", "_reply"))
+    first = (
+        pairs[pairs["turn_idx_reply"] > pairs["turn_idx_call"]]
+        .sort_values("turn_idx_reply")
+        .drop_duplicates(["conv_id", "turn_idx_call"])
+    )
+    call, reply = first["id_call"].to_numpy(), first["id_reply"].to_numpy()
+    return np.concatenate([reply_src, call, reply]), np.concatenate([reply_dst, reply, call])
+
+
+def same_edges(src, dst, ref_src, ref_dst) -> str | None:
+    """Compare two edge multisets; an error string or None."""
+    got = pd.DataFrame({"src": src, "dst": dst}).value_counts()
+    want = pd.DataFrame({"src": ref_src, "dst": ref_dst}).value_counts()
+    diff = got.sub(want, fill_value=0)
+    extra, missing = int(diff[diff > 0].sum()), int(-diff[diff < 0].sum())
+    if extra or missing:
+        return f"{extra} derived edges not expected, {missing} expected edges missing"
+    return None
+
+
+def ref_topk(ids, mat, n_queries, k, chunk=2_500, margin=16):
     """Exact cosine top-k, the query itself excluded, ties to the smaller
     id: a brute-force float32 scan keeps ``k + margin`` candidates per
     chunk, which are rescored in float64. Chunks run on one thread per
-    core (BLAS and numpy's partition release the GIL)."""
+    core (BLAS and numpy's partition release the GIL); a chunk's
+    temporaries take ~16 bytes per (query, row) pair, ~80 MB at 2000
+    queries, so the threads together stay well under a gigabyte."""
     unit = mat.astype(np.float64)
     unit /= np.maximum(np.linalg.norm(unit, axis=1), 1e-300)[:, None]
     unit32 = unit.astype(np.float32)
@@ -260,12 +301,9 @@ def check_topk(ref, k):
 # ----------------------------------------------------------------- workloads
 
 
-def _symmetric_edges(e: np.ndarray):
-    """The input as ``Graph(symmetric=True, dedupe=True)`` sees it: both
-    directions of every sample, self-loops and duplicate pairs gone."""
-    e = np.concatenate([e, e[:, ::-1]])
-    e = np.unique(e[e[:, 0] != e[:, 1]], axis=0)
-    return e[:, 0], e[:, 1]
+# The library's cap on the edge count of a graph that takes the
+# whole-graph local dispatch (default 2M), read at every dispatch.
+LOCAL_CAP = "LIGRA_LOCAL_GRAPH_EDGES"
 
 
 class Workload:
@@ -275,75 +313,197 @@ class Workload:
 
     name = ""
     env: dict[str, str] = {}
-    closure = False
     python_workers = True  # the queries run Python (Arrow) kernels
+    # Untimed passes before the timed ones: a fresh JVM's passes keep
+    # getting faster as its JIT compiles the hot paths; after one warm-up
+    # pass the next was still often 15-40% slower than the ones after it.
+    warmup_passes = 2
 
     def __init__(self, seed: int, workdir: str) -> None:
         self.seed = seed
-        self.path = os.path.join(workdir, self.name + ".parquet")
+        self.rmat = os.path.join(workdir, "rmat.parquet")
         self.m_expected = None
         self.pr_edges = self.pr_rounds = 0
 
-    def construct(self, spark):
-        raise NotImplementedError
+    def cold_graph(self, spark) -> Graph:
+        """A fresh, uncounted copy of the generic graph the workload
+        loads, for the probe of the dispatch check."""
+        return Graph(spark.read.parquet(self.rmat), symmetric=True, dedupe=True)
 
-    def count(self, handle) -> int:
-        return handle.m
-
-    def unload(self, handle) -> None:
-        handle.unpersist()
+    def check_input(self, handle) -> str | None:
+        """A check of the loaded input made once, at set-up."""
+        return None
 
 
-class TranscriptsClosed(Workload):
-    """North-star input: transcript link graph with a closure key, so
-    every query runs in the fused closed.py kernels. A part of
-    ``TranscriptsAnn``."""
+# The R-MAT graph both workloads load: generic (no closure key) and
+# symmetric, as Ligra's CC and triangle apps take it; ~30k edges.
+RMAT_LOG_N = 13
+RMAT_SAMPLES = 16_000
 
-    name = "transcripts-closed"
-    closure = True
-    N_CONV = 2000  # a pass stays near 2.5 s, so a run times three or more
+
+def write_rmat(spark, path: str, seed: int) -> None:
+    e = rmat_graph_df(spark, RMAT_LOG_N, RMAT_SAMPLES, seed=seed)
+    e.unionAll(e.select(e.dst.alias("src"), e.src.alias("dst"))).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def rmat_reference_edges(seed: int):
+    """The R-MAT input as ``Graph(symmetric=True, dedupe=True)`` sees it:
+    both directions of every sample, self-loops and duplicates gone."""
+    e = rmat_edges(RMAT_LOG_N, RMAT_SAMPLES, seed=seed)
+    e = np.concatenate([e, e[:, ::-1]])
+    e = np.unique(e[e[:, 0] != e[:, 1]], axis=0)
+    return e[:, 0], e[:, 1]
+
+
+class Kernels(Workload):
+    """Every Python/Arrow kernel path in one pass, on three inputs:
+
+    - the north-star input, a transcript link graph with a closure key,
+      whose queries run in the fused closed.py kernels (``pagerank``,
+      ``cc``, ``lp``);
+    - the R-MAT graph, under the local-dispatch cap, whose queries take
+      the whole-graph local dispatch: the cap check, ``coalesce(1)``
+      into the same kernels, the driver-side triangle orientation
+      (``*_local``);
+    - exact cosine top-k over a parquet corpus of seeded vectors
+      (``functions.similarity``, no graph layer; ``topk``).
+
+    The handle is (transcript graph, R-MAT graph, cached query
+    vectors). Each of PageRank and CC runs on both graphs, so their
+    end-to-end metrics rest on two queries."""
+
+    name = "kernels"
+    N_CONV = 2000  # the transcript queries take ~2 s a pass
+    PR_ROUNDS = 20
+    LP_ROUNDS = 5
+    N_VEC = 50_000
+    DIM = 128
+    N_QUERY = 2000
+    K = 5
+    FILES_PER_CORE = 4
+
+    def __init__(self, seed: int, workdir: str) -> None:
+        super().__init__(seed, workdir)
+        self.transcripts = os.path.join(workdir, "transcripts.parquet")
+        self.vectors = os.path.join(workdir, "vectors.parquet")
+        self.edges = None
 
     def make_inputs(self, spark) -> None:
         generate_transcripts(spark, self.N_CONV, seed=self.seed).write.mode(
             "overwrite"
-        ).parquet(self.path)
+        ).parquet(self.transcripts)
+        write_rmat(spark, self.rmat, self.seed)
+        # the corpus is plain input, written on the driver: a normal
+        # vector per row, in 4 files per core for the scan to split on
+        rng = np.random.default_rng(self.seed)
+        mat = rng.normal(size=(self.N_VEC, self.DIM)).astype(np.float32)
+        files = len(os.sched_getaffinity(0)) * self.FILES_PER_CORE
+        shutil.rmtree(self.vectors, ignore_errors=True)
+        os.makedirs(self.vectors)
+        for i, rows in enumerate(np.array_split(np.arange(self.N_VEC), files)):
+            emb = pa.FixedSizeListArray.from_arrays(mat[rows].ravel(), self.DIM)
+            table = pa.table({"vec_id": rows, "embedding": emb.cast(pa.list_(pa.float32()))})
+            pq.write_table(table, os.path.join(self.vectors, f"part-{i:05d}.parquet"))
 
     def construct(self, spark):
-        return Graph(
-            derive_edges(spark.read.parquet(self.path), closure_key=True),
+        transcripts = Graph(
+            derive_edges(spark.read.parquet(self.transcripts), closure_key=True),
             closure_key="ckey",
             validated_closure=True,
         )
+        queries = spark.read.parquet(self.vectors).where(f"vec_id < {self.N_QUERY}")
+        return transcripts, self.cold_graph(spark), queries.cache()
 
-    def build_queries(self, g) -> list[Query]:
-        t = g.closed_edges.select("src", "dst").toArrow()
-        src = t.column(0).to_numpy()
-        dst = t.column(1).to_numpy()
-        self.m_expected = self.pr_edges = len(src)
-        pr_ref, self.pr_rounds = ref_pagerank(src, dst, 20)
+    def count(self, handle) -> tuple[int, int, int]:
+        transcripts, rmat, queries = handle
+        return transcripts.m, rmat.m, queries.count()
+
+    def unload(self, handle) -> None:
+        for part in handle:
+            part.unpersist()
+
+    def build_queries(self, handle) -> list[Query]:
+        # vertex ids are Spark's xxhash64(conv_id, turn_idx), as
+        # derive_edges documents; the edges themselves come from pandas
+        turns = (
+            handle[0]
+            .spark.read.parquet(self.transcripts)
+            .select("conv_id", "turn_idx", "role", "tool",
+                    F.xxhash64("conv_id", "turn_idx").alias("id"))
+            .toArrow()
+            .to_pandas()
+        )
+        src, dst = self.edges = ref_transcript_edges(turns)
+        rsrc, rdst = rmat_reference_edges(self.seed)
+        self.m_expected = (len(src), len(rsrc), self.N_QUERY)
+        self.pr_edges = len(src)
+        pr, lp = self.PR_ROUNDS, self.LP_ROUNDS
+        pr_ref, self.pr_rounds = ref_pagerank(src, dst, pr)
+
+        t = pq.read_table(self.vectors, columns=["vec_id", "embedding"])
+        ids = t.column("vec_id").to_numpy()
+        flat = t.column("embedding").combine_chunks().flatten().to_numpy()
+        topk_ref = ref_topk(ids, flat.reshape(len(ids), self.DIM), self.N_QUERY, self.K)
+        path, k = self.vectors, self.K
         return [
             Query(
                 "pagerank",
-                lambda h, mt: pagerank(h, max_iters=20, **_kw(mt)),
+                lambda h, mt: pagerank(h[0], max_iters=pr, **_kw(mt)),
                 check_vector(pr_ref, "rank", exact=False),
+                closure=True,
             ),
             Query(
                 "cc",
-                lambda h, mt: cc_contract_local(h, **_kw(mt)),
+                lambda h, mt: cc_contract_local(h[0], **_kw(mt)),
                 check_vector(ref_components(src, dst), "comp", exact=True),
+                closure=True,
             ),
             Query(
                 "lp",
-                lambda h, mt: label_propagation(h, max_iters=5, **_kw(mt)),
-                check_vector(ref_label_propagation(src, dst, 5), "label", exact=True),
+                lambda h, mt: label_propagation(h[0], max_iters=lp, **_kw(mt)),
+                check_vector(ref_label_propagation(src, dst, lp), "label", exact=True),
+                closure=True,
+            ),
+            Query(
+                "pagerank_local",
+                lambda h, mt: pagerank(h[1], max_iters=pr, **_kw(mt)),
+                check_vector(ref_pagerank(rsrc, rdst, pr)[0], "rank", exact=False),
+            ),
+            Query(
+                "cc_local",
+                lambda h, mt: connected_components(h[1], **_kw(mt)),
+                check_vector(ref_components(rsrc, rdst), "comp", exact=True),
+            ),
+            Query(
+                "lp_local",
+                lambda h, mt: label_propagation(h[1], max_iters=lp, **_kw(mt)),
+                check_vector(ref_label_propagation(rsrc, rdst, lp), "label", exact=True),
+            ),
+            Query(
+                "triangle_local",
+                lambda h, mt: triangle_count(h[1]),
+                check_scalar(ref_triangles(rsrc, rdst)),
+                takes_metrics=False,
+            ),
+            Query(
+                "topk",
+                lambda h, mt: cosine_topk_parquet(path, h[2], k=k),
+                check_topk(topk_ref, k),
+                takes_metrics=False,
             ),
         ]
 
+    def check_input(self, handle) -> str | None:
+        t = handle[0].closed_edges.select("src", "dst").toArrow()
+        return same_edges(t.column(0).to_numpy(), t.column(1).to_numpy(), *self.edges)
+
 
 class RmatDist(Workload):
-    """Generic (no closure key) symmetric R-MAT graph, as Ligra's CC and
-    triangle apps take it, on the distributed fixpoint loops and the
-    wedge join. The library routes a graph to those when its edge count
+    """The R-MAT graph on the distributed fixpoint loops and the wedge
+    join: JVM DataFrame rounds, no Python worker, per-round driver
+    orchestration. The library routes a graph there when its edge count
     is above LIGRA_LOCAL_GRAPH_EDGES (default 2M); a graph that size
     takes ~30 s per CC call on 4 cores, too long for one run, so this
     workload lowers the cap below its ~30k edges instead. The dispatch
@@ -352,26 +512,27 @@ class RmatDist(Workload):
     in 20), so the work of a pass does not depend on the seed."""
 
     name = "rmat-dist"
-    env = {"LIGRA_LOCAL_GRAPH_EDGES": "1024"}
+    env = {LOCAL_CAP: "1024"}
     python_workers = False
-    LOG_N = 13
-    SAMPLES = 16_000
-    PR_ROUNDS = 3
-
-    def _edges(self) -> np.ndarray:
-        return rmat_edges(self.LOG_N, self.SAMPLES, seed=self.seed)
+    # its ~110 small jobs a pass level off later: after two warm-up passes
+    # each of the next three was still 5-10% faster than the one before
+    warmup_passes = 4
+    PR_ROUNDS = 3  # ~0.55 s a round; a pass stays near 7 s
 
     def make_inputs(self, spark) -> None:
-        e = rmat_graph_df(spark, self.LOG_N, self.SAMPLES, seed=self.seed)
-        e.unionAll(e.select(e.dst.alias("src"), e.src.alias("dst"))).write.mode(
-            "overwrite"
-        ).parquet(self.path)
+        write_rmat(spark, self.rmat, self.seed)
 
     def construct(self, spark):
-        return Graph(spark.read.parquet(self.path), symmetric=True, dedupe=True)
+        return self.cold_graph(spark)
+
+    def count(self, handle) -> int:
+        return handle.m
+
+    def unload(self, handle) -> None:
+        handle.unpersist()
 
     def build_queries(self, g) -> list[Query]:
-        src, dst = _symmetric_edges(self._edges())
+        src, dst = rmat_reference_edges(self.seed)
         self.m_expected = self.pr_edges = len(src)
         r = self.PR_ROUNDS
         pr_ref, self.pr_rounds = ref_pagerank(src, dst, r)
@@ -395,104 +556,8 @@ class RmatDist(Workload):
         ]
 
 
-class AnnTopk(Workload):
-    """Exact cosine top-k over a parquet corpus of seeded vectors. A part
-    of ``TranscriptsAnn``."""
-
-    name = "ann-topk"
-    N_VEC = 50_000
-    DIM = 128
-    N_QUERY = 2000
-    K = 5
-    FILES_PER_CORE = 4
-
-    def make_inputs(self, spark) -> None:
-        dim, seed = self.DIM, self.seed
-
-        def gen_vecs(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            for batch in batches:
-                ids = batch.column(0).to_numpy()
-                rng = np.random.default_rng([seed, int(ids[0])])
-                flat = rng.normal(size=len(ids) * dim).astype(np.float32)
-                offsets = np.arange(0, len(flat) + 1, dim, dtype=np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids), pa.ListArray.from_arrays(offsets, flat)],
-                    ["vec_id", "embedding"],
-                )
-
-        files = spark.sparkContext.defaultParallelism * self.FILES_PER_CORE
-        spark.range(0, self.N_VEC, 1, files).mapInArrow(
-            gen_vecs, "vec_id long, embedding array<float>"
-        ).write.mode("overwrite").parquet(self.path)
-
-    def construct(self, spark):
-        """The load step reads the query vectors into the cache."""
-        return spark.read.parquet(self.path).where(f"vec_id < {self.N_QUERY}").cache()
-
-    def count(self, handle) -> int:
-        return handle.count()
-
-    def build_queries(self, handle) -> list[Query]:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(self.path, columns=["vec_id", "embedding"])
-        ids = t.column("vec_id").to_numpy()
-        flat = t.column("embedding").combine_chunks().flatten().to_numpy()
-        mat = flat.reshape(len(ids), self.DIM)
-        self.m_expected = self.N_QUERY
-        path, k = self.path, self.K
-        return [
-            Query(
-                "topk",
-                lambda h, mt: cosine_topk_parquet(path, h, k=k),
-                check_topk(ref_topk(ids, mat, self.N_QUERY, k), k),
-                takes_metrics=False,
-            )
-        ]
-
-
-class TranscriptsAnn(Workload):
-    """The two Python/Arrow kernel layers in one pass: the transcript
-    graph's closed.py kernels, then the vector top-k scan. Their load
-    steps, queries and references are those of the parts; a handle is
-    the pair of the parts' handles. One workload rather than two keeps
-    each run long enough to time several passes."""
-
-    name = "transcripts-ann"
-    closure = True
-
-    def __init__(self, seed: int, workdir: str) -> None:
-        super().__init__(seed, workdir)
-        self.parts = (TranscriptsClosed(seed, workdir), AnnTopk(seed, workdir))
-
-    def make_inputs(self, spark) -> None:
-        for part in self.parts:
-            part.make_inputs(spark)
-
-    def construct(self, spark):
-        return tuple(part.construct(spark) for part in self.parts)
-
-    def count(self, handle):
-        return tuple(part.count(h) for part, h in zip(self.parts, handle))
-
-    def unload(self, handle) -> None:
-        for part, h in zip(self.parts, handle):
-            part.unload(h)
-
-    def build_queries(self, handle) -> list[Query]:
-        queries = [
-            Query(q.name, lambda h, mt, call=q.call, i=i: call(h[i], mt), q.check, q.takes_metrics)
-            for i, (part, h) in enumerate(zip(self.parts, handle))
-            for q in part.build_queries(h)
-        ]
-        graph = self.parts[0]
-        self.m_expected = tuple(part.m_expected for part in self.parts)
-        self.pr_edges, self.pr_rounds = graph.pr_edges, graph.pr_rounds
-        return queries
-
-
-WORKLOADS = {w.name: w for w in (TranscriptsAnn, RmatDist)}
-QUERY_NAMES = ("pagerank", "cc", "lp", "triangle", "topk")
+WORKLOADS = {w.name: w for w in (Kernels, RmatDist)}
+QUERY_NAMES = (
+    "pagerank", "cc", "lp", "triangle", "topk",
+    "pagerank_local", "cc_local", "lp_local", "triangle_local",
+)
