@@ -136,9 +136,12 @@ def unpersist(df: DataFrame) -> None:
 class IterMetrics:
     """Per-iteration metrics, the analog of the reference driver's
     per-round "Running time" reports (ligra.h:490-495) extended with
-    frontier/convergence telemetry (north_rule metrics requirement)."""
+    frontier/convergence telemetry (north_rule metrics requirement).
+    ``backend`` / ``reason`` hold the dispatch decision (dispatch.py)."""
 
     rounds: list[dict] = field(default_factory=list)
+    backend: str | None = None
+    reason: str | None = None
 
     def record(self, iteration: int, **kv) -> None:
         self.rounds.append({"iteration": iteration, **kv})

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -59,28 +60,24 @@ def connected_components(
         # is the balance). shortcut stays 1 = Components-Shortcut.C
         # parity.
         jumps = (1 if shortcut else 2) if (shortcut or contract) else 0
-    if (
-        checkpointer is None
-        and max_iters >= 1000  # kernel runs to fixpoint; a smaller cap
-        # is a request for PARTIAL labels the kernel cannot honor
-        and (symmetrize or graph.symmetric)
-        and getattr(graph, "closed_edges", None) is None
-        and graph.fits_local_kernel()
-    ):
-        # Whole-graph local dispatch (graph.py:_LocalClosedView): one
-        # Shiloach–Vishkin Arrow pass over the single-partition edge
-        # set replaces the multi-round hash-min loop (each round ~0.5s
-        # of driver orchestration at small scale). Output is the
-        # identical min-id fixpoint — the kernel is direction-agnostic,
-        # exactly the symmetrized semantics this branch requires.
-        # shortcut/jumps/contract only change round schedules, never
-        # the labels (module docstring), so all variants share this
-        # dispatch.
-        from ligra_spark.algorithms.closed import (
-            connected_components_closed,
-        )
+    # The fused kernel (dispatch.py) runs one Shiloach–Vishkin Arrow
+    # pass to the fixpoint, replacing the multi-round hash-min loop
+    # (each round ~0.5s of driver orchestration at small scale). It is
+    # direction-agnostic, i.e. symmetrized, and cannot stop early: a
+    # max_iters below the default asks for PARTIAL labels. Output is
+    # the identical min-id fixpoint; shortcut/jumps/contract only
+    # change round schedules, never the labels (module docstring).
+    _, _, view = choose_backend(
+        graph,
+        eligible=checkpointer is None
+        and max_iters >= 1000
+        and (symmetrize or graph.symmetric),
+        metrics=metrics,
+    )
+    if view is not None:
+        from ligra_spark.algorithms.closed import connected_components_closed
 
-        return connected_components_closed(graph.local_view(), metrics=metrics)
+        return connected_components_closed(view, metrics=metrics)
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
     state = g.vertices.select("id", F.col("id").alias("comp"))
@@ -202,16 +199,17 @@ def cc_contract_local(
     aggregation family (Kiveris et al., "Connected Components in
     MapReduce and Beyond" — public literature), re-expressed as Arrow
     kernels + DataFrame aggregation."""
-    if edges is None:
-        if getattr(graph, "closed_edges", None) is not None:
-            # declared closure: every component is inside one closure
-            # group, so the single-pass closed kernel is exact — no
-            # coupling rounds, no pair-stream sort-shuffle (closed.py)
-            from ligra_spark.algorithms.closed import (
-                connected_components_closed,
-            )
+    # declared closure: every component is inside one closure group,
+    # so the single-pass closed kernel is exact — no coupling rounds,
+    # no pair-stream sort-shuffle (closed.py)
+    _, _, view = choose_backend(
+        graph, eligible=edges is None, whole_graph=False, metrics=metrics
+    )
+    if view is not None:
+        from ligra_spark.algorithms.closed import connected_components_closed
 
-            return connected_components_closed(graph, metrics=metrics)
+        return connected_components_closed(view, metrics=metrics)
+    if edges is None:
         edges = graph.edges_derived
     edges = edges.select("src", "dst")
 

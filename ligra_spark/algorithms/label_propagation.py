@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 
 
@@ -40,29 +41,18 @@ def label_propagation(
     """Returns ``(id LONG, label LONG)`` after convergence or
     ``max_iters`` synchronous rounds.
 
-    Graphs with a declared closure key dispatch to the fused
-    partition-local kernel (closed.py): one Arrow pass, bit-identical
-    labels (a closed partition at a local fixpoint is fixed forever,
-    so per-partition early stop composes into the exact global
-    changed==0 stopping rule)."""
-    if getattr(graph, "closed_edges", None) is not None:
+    Closure-keyed graphs and graphs within the local edge cap dispatch
+    (dispatch.py) to the fused LP kernel (closed.py): one Arrow pass,
+    bit-identical labels (deterministic mode + min tie-break; a closed
+    partition at a local fixpoint is fixed forever, so per-partition
+    early stop composes into the exact global changed==0 stopping
+    rule)."""
+    _, _, view = choose_backend(graph, metrics=metrics)
+    if view is not None:
         from ligra_spark.algorithms.closed import label_propagation_closed
 
         return label_propagation_closed(
-            graph,
-            max_iters=max_iters,
-            symmetrize=symmetrize and not graph.symmetric,
-            metrics=metrics,
-        )
-    if graph.fits_local_kernel():
-        # Whole-graph local dispatch (graph.py:_LocalClosedView): the
-        # closed LP kernel over the single-partition edge set yields
-        # bit-identical labels (deterministic mode + min tie-break,
-        # global changed==0 stop) with all rounds fused in one pass.
-        from ligra_spark.algorithms.closed import label_propagation_closed
-
-        return label_propagation_closed(
-            graph.local_view(),
+            view,
             max_iters=max_iters,
             symmetrize=symmetrize and not graph.symmetric,
             metrics=metrics,

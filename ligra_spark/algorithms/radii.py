@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -258,10 +259,11 @@ def kbfs_exact(
     exact answer is ONE partition-local all-sources-BFS pass —
     Σ O(component²) total work, linear in the corpus for bounded
     conversation length, where this batched variant is O(n·m/64)."""
-    if getattr(graph, "closed_edges", None) is not None:
+    _, _, view = choose_backend(graph, whole_graph=False, metrics=metrics)
+    if view is not None:
         from ligra_spark.algorithms.closed import eccentricity_closed
 
-        return eccentricity_closed(graph, metrics=metrics)
+        return eccentricity_closed(view, metrics=metrics)
     from math import ceil
 
     from pyspark.sql import Window

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 
 
@@ -98,14 +99,15 @@ def triangle_count(graph: Graph) -> int:
     exchange reuse does not reliably cover all three."""
     from ligra_spark.algorithms._iter import materialize, unpersist
 
-    if getattr(graph, "closed_edges", None) is not None:
-        # closure-key dispatch (closed.py): triangles never cross a
-        # closure partition, so the count is one Arrow pass, no joins
+    backend, _, _ = choose_backend(graph)
+    if backend == "closed":
+        # triangles never cross a closure partition, so the count is
+        # one Arrow pass, no joins (closed.py)
         from ligra_spark.algorithms.closed import triangle_count_closed
 
         return triangle_count_closed(graph)
-    if graph.fits_local_kernel():
-        # Whole-graph local dispatch, parallel variant: the coalesce(1)
+    if backend == "local":
+        # Parallel variant of the whole-graph kernel: the coalesce(1)
         # closed kernel put the whole wedge enumeration on ONE core
         # (measured 0.88 s in-kernel for the 487k-edge rMat bench graph
         # while 31 cores idled, 1.6 s end to end). Orientation is tiny
@@ -224,7 +226,7 @@ def triangles_per_vertex(graph: Graph) -> DataFrame:
     Graph is built here either."""
     from ligra_spark.algorithms._iter import materialize
 
-    if getattr(graph, "closed_edges", None) is not None:
+    if choose_backend(graph, whole_graph=False)[0] == "closed":
         from ligra_spark.algorithms.closed import triangles_per_vertex_closed
 
         return triangles_per_vertex_closed(graph)

@@ -621,21 +621,21 @@ def cosine_topk_parquet(
     # JVM 128-task count is 0.26 s), so one-task-per-FILE overpays
     # whenever files outnumber cores — the bench's 128-file feed spent
     # 1.3 s of its 2.5 s scan wall on task dispatch alone. Group files
-    # into at most cores × LIGRA_ANN_WAVES tasks. Default 1 wave —
-    # measured end-to-end at the bench shape: 1.5-1.8 s at waves=1 vs
-    # 2.3-2.9 at 2 and 3.4+ at 4; the ~10 ms/task dispatch tax
-    # dominates the straggler spread extra waves would absorb (the
-    # host-probe equal-split ceiling is ~1.3×, i.e. ≤0.2 s on a 0.6 s
-    # task, vs +0.7 s of dispatch for wave 2). Raise it on clusters
-    # whose stragglers are worse than their scheduler is fast.
-    # Grouping is contiguous and
-    # deterministic (files sorted; slices differ by ≤1 file), each
+    # into at most one task per core, i.e. one wave — measured
+    # end-to-end at the bench shape: 1.5-1.8 s at one wave vs 2.3-2.9
+    # at 2 and 3.4+ at 4; the ~10 ms/task dispatch tax dominates the
+    # straggler spread extra waves would absorb (the host-probe
+    # equal-split ceiling is ~1.3×, i.e. ≤0.2 s on a 0.6 s task, vs
+    # +0.7 s of dispatch for wave 2). More waves pay only where
+    # stragglers cost more than the scheduler's per-task launch, which
+    # a cluster must show by its own measurement. Grouping is
+    # contiguous and deterministic (files sorted; slices differ by ≤1
+    # file), each
     # partition holds its own path list — never round-robin (ADVICE
     # r05: randomized-start round-robin gave some tasks 2 files and
-    # others 0). A manifest larger than cores × waves (the 100-TB
+    # others 0). A manifest larger than the core count (the 100-TB
     # shape) keeps per-task work ≈ equal at any cluster size.
-    waves = max(1, int(_os.environ.get("LIGRA_ANN_WAVES", "1")))
-    n_tasks = min(len(files), spark.sparkContext.defaultParallelism * waves)
+    n_tasks = min(len(files), spark.sparkContext.defaultParallelism)
     fdf = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(f,) for f in files], n_tasks

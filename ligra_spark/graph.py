@@ -76,19 +76,19 @@ class _LocalClosedView:
 
     def __init__(self, graph: "Graph") -> None:
         self.spark = graph.spark
-        self._n = graph.n
-        self._m = graph.m
+        self._graph = graph
         cols = ["src", "dst"] + (["w"] if graph.weighted else [])
         self.closed_edges = graph.edges_by_src.select(cols).coalesce(1)
         self.closure_key = "__whole_graph__"
 
+    # counted on first use by a kernel, not when the view is built
     @property
     def n(self) -> int:
-        return self._n
+        return self._graph.n
 
     @property
     def m(self) -> int:
-        return self._m
+        return self._graph.m
 
 
 def _auto_partitions(m: int, cap: int) -> int:

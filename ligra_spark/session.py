@@ -22,18 +22,6 @@ _DEFAULTS = {
     # Arrow transfer for pandas/Arrow UDF kernels and toPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-    # Speculative re-launch of straggling tasks (guide §2.6): this
-    # host's vCPUs stall individually for seconds at a time
-    # (host_capacity_probe: per-worker walls 1.75-2.48 s for identical
-    # work; observed as 7-11 s stage walls when a single-wave scan
-    # task lands on a stalled core). A re-launched twin on a healthy
-    # core bounds the stage at ~backup-task time. Every kernel task
-    # here is a pure read→compute (writes go through Spark's commit
-    # protocol), so duplicated attempts are safe; the cost is only
-    # duplicated tail work.
-    "spark.speculation": "true",
-    "spark.speculation.multiplier": "2",
-    "spark.speculation.quantile": "0.75",
     # JVM↔Python worker control plane over unix domain sockets
     # (Spark 4.1): every Python task pays a serialized per-task
     # handshake with its worker; over TCP+auth a no-op mapInArrow

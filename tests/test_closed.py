@@ -6,6 +6,8 @@ dispatches PageRank / LP to fused partition-local Arrow kernels. These
 tests pin the EXACTNESS contract: identical results to the generic
 shuffling paths (bit-identical labels for LP, rtol 1e-12 ranks for
 PageRank — float summation order is the only permitted difference).
+The local-kernel cap is 0 throughout, so the plain graph really runs
+the generic loops instead of dispatching to the same kernels.
 """
 
 from __future__ import annotations
@@ -14,11 +16,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics
-from ligra_spark.algorithms.components import cc_contract_local
+from ligra_spark.algorithms.components import (
+    cc_contract_local,
+    connected_components,
+)
 from ligra_spark.algorithms.label_propagation import label_propagation
 from ligra_spark.algorithms.pagerank import pagerank
 from ligra_spark.graph import Graph
 from ligra_spark.sources import derive_edges, generate_transcripts
+
+
+@pytest.fixture(autouse=True)
+def no_local(monkeypatch):
+    """Closure-keyed graphs dispatch before the cap is read; the plain
+    graph would otherwise take the whole-graph local kernels."""
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
 
 
 @pytest.fixture(scope="module")
@@ -113,6 +125,25 @@ def test_cc_single_round_on_closed(pair):
     assert diff == 0
 
 
+def test_cc_closed_parity(pair):
+    """connected_components on a closure-keyed graph takes the closed
+    kernel and matches the distributed hash-min fixpoint exactly."""
+    g_closed, g_plain = pair
+    mc, mp = IterMetrics(), IterMetrics()
+    a = connected_components(g_closed, metrics=mc)
+    b = connected_components(g_plain, metrics=mp)
+    assert (mc.backend, mp.backend) == ("closed", "distributed")
+    diff = (
+        a.withColumnRenamed("comp", "ca")
+        .join(b.withColumnRenamed("comp", "cb"), "id", "full_outer")
+        .where(
+            F.col("ca").isNull() | F.col("cb").isNull() | (F.col("ca") != F.col("cb"))
+        )
+        .count()
+    )
+    assert diff == 0
+
+
 def test_triangle_closed_parity(pair):
     """Transcript graphs DO contain triangles (a tool call at turn t
     answered at t+2 closes {t, t+1, t+2}); counts must match the
@@ -198,7 +229,6 @@ def test_closed_random_parity(spark, seed):
     generic engine exactly (PR rtol 1e-12, LP/CC/Triangle identical)."""
     import numpy as np
 
-    from ligra_spark.algorithms.components import cc_contract_local
     from ligra_spark.algorithms.triangle import triangle_count
 
     rng = np.random.default_rng(seed)

@@ -4,7 +4,8 @@ Small graphs (m ≤ LIGRA_LOCAL_GRAPH_EDGES) route the iterative
 fixpoints through the closed.py kernels over a single-partition view
 (graph.local_view()). These tests pin: (1) the dispatch produces
 results identical to the distributed fixpoints it replaces, (2) the
-env kill-switch (=0) really forces the distributed path."""
+env kill-switch (=0) really forces the distributed path, (3) every
+dispatch decision is recorded on the metrics with its reason."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ import math
 
 import pytest
 
-from conftest import CHAIN_64, STAR_HUB, TWO_COMPONENTS
+from conftest import CHAIN_64, K4, STAR_HUB, TWO_COMPONENTS
+from ligra_spark.algorithms import dispatch
+from ligra_spark.algorithms._iter import IterMetrics
 
 
 @pytest.fixture()
@@ -116,3 +119,65 @@ def test_triangle_parallel_local_random_graph(mk_graph, monkeypatch):
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "1000000")
     got = triangle_count(g)
     assert got == want > 0
+
+
+def _closed_graph(spark):
+    from ligra_spark.graph import Graph
+
+    df = spark.createDataFrame(
+        [(a, b, 1) for a, b in K4], "src long, dst long, ckey long"
+    )
+    return Graph(df, closure_key="ckey", num_partitions=4)
+
+
+@pytest.mark.parametrize(
+    "kind, algo, kw, cap, backend, reason",
+    [
+        ("closed", "pagerank", {}, "0", "closed", dispatch.CLOSURE_KEY),
+        ("generic", "pagerank", {}, None, "local", dispatch.UNDER_CAP),
+        ("generic", "pagerank", {}, "0", "distributed", dispatch.OVER_CAP),
+        ("generic", "pagerank", {"checkpointer": 1}, None, "distributed",
+         dispatch.INELIGIBLE),
+        ("generic", "connected_components", {"max_iters": 3}, None,
+         "distributed", dispatch.INELIGIBLE),
+        ("directed", "connected_components", {"symmetrize": False}, None,
+         "distributed", dispatch.INELIGIBLE),
+    ],
+    ids=["closure-key", "small-generic", "cap-0", "checkpointer",
+         "cc-max-iters", "cc-asymmetric"],
+)
+def test_dispatch_decision(spark, mk_graph, monkeypatch, tmp_path,
+                           kind, algo, kw, cap, backend, reason):
+    from ligra_spark import algorithms
+    from ligra_spark.checkpoint import Checkpointer
+
+    if cap is not None:
+        monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", cap)
+    if kind == "closed":
+        g = _closed_graph(spark)
+    else:
+        g = mk_graph(TWO_COMPONENTS if kind == "generic" else [(1, 2), (3, 2)])
+    kw = dict(kw)
+    if "checkpointer" in kw:
+        kw["checkpointer"] = Checkpointer(spark, str(tmp_path), run_id="ck")
+    m = IterMetrics()
+    getattr(algorithms, algo)(g, metrics=m, **kw).collect()
+    assert (m.backend, m.reason) == (backend, reason)
+    g.unpersist()
+
+
+def test_closed_dispatch_runs_no_job(spark, mk_graph):
+    """The closure key is read before the edge cap, so deciding on a
+    closure-keyed graph costs no Spark job; a cold generic graph pays
+    its count there."""
+    sc = spark.sparkContext
+    closed, cold = _closed_graph(spark), mk_graph(CHAIN_64)
+    for g, want in ((closed, "closed"), (cold, "local")):
+        sc.setJobGroup(f"dispatch-{want}", want)
+        backend, _, view = dispatch.choose_backend(g)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"dispatch-{want}")
+        assert backend == want and view is not None
+        assert (len(jobs) == 0) == (want == "closed"), jobs
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    closed.unpersist()
+    cold.unpersist()

@@ -54,52 +54,6 @@ def test_pagerank_records_metrics(mk_graph):
     g.unpersist()
 
 
-def test_pagerank_blocked_matches_block1(mk_graph):
-    """Superstep blocking (block>1) runs the SAME rounds as block=1 —
-    same iteration count, ranks equal to float-summation-order noise
-    (different plan shapes can reorder the contrib sum; the algorithm
-    itself is round-exact) — both for a fixed iteration count (tol=0,
-    the driver-entry shape) and when the L1 tolerance is crossed
-    MID-block (exercising the discard-and-replay path)."""
-
-    def close(a, b):
-        assert set(a) == set(b)
-        ks = sorted(a)
-        assert np.allclose(
-            [a[k] for k in ks], [b[k] for k in ks], rtol=1e-12, atol=0.0
-        )
-
-    edges = TWO_COMPONENTS + [(0, 10), (16, 4)]
-    g = mk_graph(edges)
-    # fixed 7 rounds: 7 = 4 + 3, so the second block is a partial one
-    a = {r["id"]: r["rank"] for r in pagerank(g, max_iters=7, tol=0.0).collect()}
-    b = {
-        r["id"]: r["rank"]
-        for r in pagerank(g, max_iters=7, tol=0.0, block=4).collect()
-    }
-    close(a, b)
-    # convergence mid-block: same iteration count and matching ranks
-    ma, mb = IterMetrics(), IterMetrics()
-    a = {
-        r["id"]: r["rank"]
-        for r in pagerank(g, tol=1e-4, max_iters=100, metrics=ma).collect()
-    }
-    b = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            g, tol=1e-4, max_iters=100, block=4, metrics=mb
-        ).collect()
-    }
-    close(a, b)
-    assert ma.iterations == mb.iterations
-    assert np.allclose(
-        [r["l1"] for r in ma.rounds],
-        [r["l1"] for r in mb.rounds],
-        rtol=1e-9,
-    )
-    g.unpersist()
-
-
 @pytest.mark.slow
 def test_pagerank_delta_matches_pagerank(mk_graph):
     edges = TWO_COMPONENTS + [(0, 10), (16, 4)]
