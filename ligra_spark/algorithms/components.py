@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms.closed import _cc_kernel, connected_components_closed
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
@@ -75,8 +76,6 @@ def connected_components(
         metrics=metrics,
     )
     if view is not None:
-        from ligra_spark.algorithms.closed import connected_components_closed
-
         return connected_components_closed(view, metrics=metrics)
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
@@ -206,73 +205,10 @@ def cc_contract_local(
         graph, eligible=edges is None, whole_graph=False, metrics=metrics
     )
     if view is not None:
-        from ligra_spark.algorithms.closed import connected_components_closed
-
         return connected_components_closed(view, metrics=metrics)
     if edges is None:
         edges = graph.edges_derived
     edges = edges.select("src", "dst")
-
-    # defined inline so cloudpickle ships it by value — executors need
-    # no importable ligra_spark on their path
-    def _local_cc_kernel(batches):
-        """Per-partition subgraph contraction (Arrow → numpy, no per-row
-        Python): collect the partition's edges, run vectorized min-label
-        propagation with pointer doubling to local convergence, and emit
-        one ``(v, lab)`` row per distinct vertex, ``lab`` = min vertex id
-        of v's partition-local component. Memory is O(partition edges) —
-        bounded by ``spark.sql.files.maxPartitionBytes`` / the graph's
-        ``num_partitions``, exactly the budget any Arrow-batch operator
-        already assumes."""
-        import numpy as np
-        import pyarrow as pa
-
-        srcs, dsts = [], []
-        for batch in batches:
-            srcs.append(batch.column(0).to_numpy(zero_copy_only=False))
-            dsts.append(batch.column(1).to_numpy(zero_copy_only=False))
-        if not srcs:
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        if src.size == 0:
-            return
-        ids = np.unique(np.concatenate([src, dst]))  # sorted
-        # int32 local indices when the partition's vertex count allows
-        # (always, at sane partition sizes): the kernel is bound by the
-        # random gathers lab[s]/lab[lab]/minimum.at — the exact pattern
-        # tools/membw_profile measures — so halving the element width
-        # halves the random-access traffic per pass (r03 verdict item
-        # 9; labels here are LOCAL ranks, remapped through ids[] at
-        # emit, so the downcast never touches global 64-bit vertex ids)
-        idx_t = np.int32 if len(ids) < 2**31 else np.int64
-        s = np.searchsorted(ids, src).astype(idx_t, copy=False)
-        d = np.searchsorted(ids, dst).astype(idx_t, copy=False)
-        lab = np.arange(len(ids), dtype=idx_t)
-        # Shiloach-Vishkin: hook each edge's two ROOTS to their min
-        # (updating roots — not endpoints — is what merges whole trees
-        # per pass), then compress to stars by pointer doubling.
-        # O(log component-size) passes regardless of id order; the
-        # naive endpoint-update variant needs O(path length) passes on
-        # chains with random ids (measured 40 sweeps on transcripts).
-        while True:
-            before = lab.copy()
-            rs = lab[s]
-            rd = lab[d]
-            m = np.minimum(rs, rd)
-            np.minimum.at(lab, rs, m)
-            np.minimum.at(lab, rd, m)
-            while True:  # full compression: O(log) passes, all C-speed
-                l2 = lab[lab]
-                if np.array_equal(l2, lab):
-                    break
-                lab = l2
-            if np.array_equal(lab, before):
-                break
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids), pa.array(ids[lab])], ["v", "lab"]
-        )
-
 
     mappings: list[DataFrame] = []
     own_edges: DataFrame | None = None  # round ≥2 edge tables we created
@@ -288,7 +224,12 @@ def cc_contract_local(
         # of the raw pairs stream, no object-hash aggregation
         # (collect_set measured 4× slower: ObjectHashAggregate falls
         # back to sort-based with per-group array building).
-        pairs = edges.mapInArrow(_local_cc_kernel, "v long, lab long")
+        # _cc_kernel: each partition's local subgraph contracted to
+        # min-id labels (Arrow → numpy Shiloach–Vishkin, O(partition
+        # edges) memory), one (v, lab) row per distinct vertex
+        pairs = edges.mapInArrow(_cc_kernel, "id long, comp long").select(
+            F.col("id").alias("v"), F.col("comp").alias("lab")
+        )
         w = Window.partitionBy("v").orderBy("lab")
         x = pairs.select(
             "v",

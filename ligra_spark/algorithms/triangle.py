@@ -27,8 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ligra_spark.algorithms.closed import local_index, orient, undirected, wedge_hits
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
+
+# Wedges one local-parallel probe task may hold (wedge_hits keeps ~40 B
+# of temporaries per wedge, so ~640 MB per task at this bound).
+_MAX_WEDGES_PER_TASK = 1 << 24
 
 
 def _oriented_edges(graph: Graph) -> DataFrame:
@@ -126,61 +131,37 @@ def _triangle_count_local_parallel(graph: Graph) -> int:
     """Exact Triangle.C count for local-dispatch-sized graphs with the
     wedge probe parallelized over the session's cores.
 
-    Same math as the closed kernel (closed.py:_tri_kernel): symmetrize
-    + dedupe, (degree, id) compact-forward orientation, out-lists
-    sorted by head rank, wedge (u→b, u→c) closed by an oriented (b, c)
-    probe into the sorted edge-key array. The orientation prep is O(m)
-    vectorized numpy on the DRIVER — legitimate here because the
-    whole-graph dispatch only fires at m ≤ LIGRA_LOCAL_GRAPH_EDGES
-    (≤32 MB of endpoints at the 2M default; big graphs take the
-    distributed wedge-join plan above). The oriented arrays ship once
-    as a broadcast; tasks take contiguous edge ranges cut at
-    equal-WEDGE boundaries (wedge counts are known exactly from the
-    group offsets, so skewed hubs cannot straggle a task) and return
-    partial hit counts. Parity with the distributed plan and the
+    Same math as the closed kernel (closed.py ``_tri_kernel``), from
+    the same helpers: ``undirected`` + ``orient`` run on the DRIVER —
+    O(m) vectorized numpy, legitimate here because the whole-graph
+    dispatch only fires at m ≤ LIGRA_LOCAL_GRAPH_EDGES (≤32 MB of
+    endpoints at the 2M default; big graphs take the distributed
+    wedge-join plan above). The oriented arrays ship once as a
+    broadcast; each task runs ``wedge_hits`` on a contiguous edge range
+    cut at equal-WEDGE boundaries (wedge counts are known exactly from
+    the group offsets, so skewed hubs cannot straggle a task) and
+    returns its hit count. Parity with the distributed plan and the
     closed kernel is pytest-pinned."""
     import numpy as np
 
     spark = graph.spark
     tab = graph.edges_by_src.select("src", "dst").toArrow()
-    src = tab.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    dst = tab.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-    if len(src) == 0:
+    idx = local_index(tab.to_batches())
+    if idx is None:
         return 0
-    ids = np.unique(np.concatenate([src, dst]))
+    ids, s, d = idx
     nl = len(ids)
-    s = np.searchsorted(ids, src)
-    d = np.searchsorted(ids, dst)
-    # simple undirected graph: dedupe CANONICAL (lo, hi) pairs (one
-    # entry per undirected edge — half the unique() input of the
-    # symmetrize-then-dedupe shape), drop self-loops
-    lo = np.minimum(s, d)
-    hi = np.maximum(s, d)
-    keep = lo != hi
-    und = np.unique(lo[keep] * np.int64(nl) + hi[keep])
-    a = (und // nl).astype(np.int64)
-    b = (und % nl).astype(np.int64)
-    if len(a) == 0:
-        return 0
-    # undirected degree: each canonical edge touches both endpoints
-    deg = np.bincount(a, minlength=nl) + np.bincount(b, minlength=nl)
-    order = np.lexsort((ids, deg))
-    rank = np.empty(nl, np.int64)
-    rank[order] = np.arange(nl)
-    # orient each canonical pair low-rank → high-rank directly
-    swap = rank[a] > rank[b]
-    u = np.where(swap, b, a)
-    v = np.where(swap, a, b)
-    o2 = np.lexsort((rank[v], u))
-    u, v = u[o2], v[o2]
+    u, v, grp_end, key = orient(*undirected(s, d, nl), ids)
     E = len(u)
-    grp_end = np.searchsorted(u, u, side="right")
     reps = grp_end - np.arange(E) - 1
     W = int(reps.sum())
     if W == 0:
         return 0
-    key = np.sort(u * np.int64(nl) + v)
-    T = min(spark.sparkContext.defaultParallelism, E)
+    # at least one range per core, and enough ranges that none holds
+    # much more than _MAX_WEDGES_PER_TASK wedges (~40 B of temporaries
+    # each in wedge_hits)
+    cores = spark.sparkContext.defaultParallelism
+    T = min(max(cores, -(-W // _MAX_WEDGES_PER_TASK)), E)
     cumw = np.cumsum(reps)
     targets = (np.arange(1, T) * W) // T
     cuts = np.searchsorted(cumw, targets, side="left") + 1
@@ -188,24 +169,10 @@ def _triangle_count_local_parallel(graph: Graph) -> int:
     ranges = [
         (int(bounds[i]), int(bounds[i + 1])) for i in range(len(bounds) - 1)
     ]
-    bc = spark.sparkContext.broadcast((v, grp_end, key, np.int64(nl)))
+    bc = spark.sparkContext.broadcast((v, grp_end, key, nl))
 
     def count_chunk(rng):
-        import numpy as np
-
-        e0, e1 = rng
-        v_, grp_end_, key_, nl_ = bc.value
-        idx = np.arange(e0, e1)
-        reps_ = grp_end_[e0:e1] - idx - 1
-        wb = np.repeat(idx, reps_)
-        cum = np.concatenate([[0], np.cumsum(reps_)])
-        wc = np.arange(cum[-1]) - np.repeat(cum[:-1], reps_) + wb + 1
-        probe = v_[wb] * nl_ + v_[wc]
-        pos = np.searchsorted(key_, probe)
-        hits = (pos < len(key_)) & (
-            key_[np.minimum(pos, len(key_) - 1)] == probe
-        )
-        return int(hits.sum())
+        return int(wedge_hits(*bc.value, *rng)[2].sum())
 
     total = (
         spark.sparkContext.parallelize(ranges, len(ranges))

@@ -17,17 +17,19 @@ pytest-pinned (tests/test_streaming.py). Output mode is "update": a
 micro-batch emits rows ONLY for vertices whose component id changed
 (or are new), so downstream sinks see the minimal delta.
 
-The in-kernel merge is the same vectorized Shiloach–Vishkin used by
-the batch closed kernels: prior state rows ``(id → comp)`` are treated
-as edges and contracted together with the batch's new edges, all numpy
-— no per-row Python anywhere (emission filtering uses searchsorted
-against the previous sorted id array).
+The in-kernel merge is the batch kernels' own local CSR and
+Shiloach–Vishkin pass (closed.py ``local_index`` + ``sv_labels``):
+prior state rows ``(id → comp)`` are treated as edges and contracted
+together with the batch's new edges, all numpy — no per-row Python
+anywhere (emission filtering uses searchsorted against the previous
+sorted id array).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ligra_spark.algorithms.closed import local_index, sv_labels
 
 OUTPUT_SCHEMA = "ckey long, id long, comp long"
 STATE_SCHEMA = "ids array<long>, comp array<long>"
@@ -36,13 +38,8 @@ STATE_SCHEMA = "ids array<long>, comp array<long>"
 def _update_fn(key, pdfs, state):
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
-    srcs, dsts = [], []
-    for pdf in pdfs:
-        srcs.append(pdf["src"].to_numpy(np.int64))
-        dsts.append(pdf["dst"].to_numpy(np.int64))
-    src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-    dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
     if state.exists:
         prev_ids_l, prev_comp_l = state.get
         prev_ids = np.asarray(prev_ids_l, np.int64)  # sorted (np.unique)
@@ -52,30 +49,21 @@ def _update_fn(key, pdfs, state):
         prev_comp = np.empty(0, np.int64)
     # prior (id → comp) mappings act as edges: old components merge
     # with the batch's new edges in one contraction
-    s_all = np.concatenate([src, prev_ids])
-    d_all = np.concatenate([dst, prev_comp])
-    if s_all.size == 0:
+    batches = [
+        pa.RecordBatch.from_pandas(pdf[["src", "dst"]], preserve_index=False)
+        for pdf in pdfs
+    ]
+    batches.append(
+        pa.RecordBatch.from_arrays(
+            [pa.array(prev_ids), pa.array(prev_comp)], ["src", "dst"]
+        )
+    )
+    idx = local_index(batches)
+    if idx is None:
         return
-    ids = np.unique(np.concatenate([s_all, d_all]))
+    ids, s, d = idx
     nl = len(ids)
-    idx_t = np.int32 if nl < 2**31 else np.int64
-    s = np.searchsorted(ids, s_all).astype(idx_t, copy=False)
-    d = np.searchsorted(ids, d_all).astype(idx_t, copy=False)
-    lab = np.arange(nl, dtype=idx_t)
-    while True:  # Shiloach–Vishkin, as in closed.py / components.py
-        before = lab.copy()
-        rs, rd = lab[s], lab[d]
-        m = np.minimum(rs, rd)
-        np.minimum.at(lab, rs, m)
-        np.minimum.at(lab, rd, m)
-        while True:
-            l2 = lab[lab]
-            if np.array_equal(l2, lab):
-                break
-            lab = l2
-        if np.array_equal(lab, before):
-            break
-    comp = ids[lab]
+    comp = ids[sv_labels(s, d, nl)]
     state.update((ids.tolist(), comp.tolist()))
     # emit only new-or-changed vertices (vectorized delta against the
     # previous sorted mapping)

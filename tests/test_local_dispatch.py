@@ -99,14 +99,16 @@ def test_dispatch_threshold_respects_env(mk_graph, monkeypatch):
     assert not g.fits_local_kernel()
 
 
-def test_triangle_parallel_local_random_graph(mk_graph, monkeypatch):
+@pytest.mark.parametrize("wedge_cap", [None, 64])
+def test_triangle_parallel_local_random_graph(mk_graph, monkeypatch, wedge_cap):
     """The parallel local triangle path (driver-side orientation +
     broadcast wedge probe, r06) must match the distributed wedge-join
     plan on a messy graph: duplicate edges, self-loops, skewed hub,
-    multiple wedge-balanced chunks."""
+    multiple wedge-balanced chunks. With a tiny per-task wedge cap the
+    probe splits into many more chunks than cores, same count."""
     import random
 
-    from ligra_spark.algorithms import triangle_count
+    from ligra_spark.algorithms import triangle, triangle_count
 
     rnd = random.Random(23)
     edges = [(rnd.randrange(60), rnd.randrange(60)) for _ in range(900)]
@@ -117,8 +119,23 @@ def test_triangle_parallel_local_random_graph(mk_graph, monkeypatch):
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
     want = triangle_count(g)
     monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "1000000")
+    sc = g.spark.sparkContext
+    chunks = []
+    parallelize = sc.parallelize
+
+    def spy(data, num_slices=None):
+        chunks.append(num_slices)
+        return parallelize(data, num_slices)
+
+    monkeypatch.setattr(sc, "parallelize", spy)
+    if wedge_cap is not None:
+        monkeypatch.setattr(triangle, "_MAX_WEDGES_PER_TASK", wedge_cap)
     got = triangle_count(g)
     assert got == want > 0
+    if wedge_cap is None:
+        assert chunks == [sc.defaultParallelism]
+    else:
+        assert chunks[0] > 4 * sc.defaultParallelism
 
 
 def _closed_graph(spark):

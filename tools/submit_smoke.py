@@ -41,8 +41,8 @@ def main() -> None:
     pr = pagerank(g, max_iters=1)
     comps = cc_contract_local(g)
     # the closure-key production path (closed.py kernels) must deploy
-    # from the zip too — its Arrow kernels ship by value (cloudpickle),
-    # which this exercises end-to-end
+    # from the zip too — its Arrow kernels call closed.py's module-level
+    # CSR helpers, which executors import from the shipped zip
     gc_ = Graph(
         derive_edges(transcripts, closure_key=True),
         closure_key="ckey",
