@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import IterMetrics, Timer, commit, materialize
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -62,10 +62,11 @@ def betweenness_from_source(
                 F.col("msg").alias("paths"),
             )
         )
-        levels_next = materialize(levels.unionAll(new), levels)
-        frontier = levels_next.where(F.col("level") == it + 1).select("id", "paths")
-        frontier_n = frontier.count()
-        levels = levels_next
+        levels, got = commit(
+            levels.unionAll(new), levels, n=F.count_if(F.col("level") == it + 1)
+        )
+        frontier = levels.where(F.col("level") == it + 1).select("id", "paths")
+        frontier_n = got["n"]
         if metrics is not None:
             metrics.record(it, phase="fwd", frontier=frontier_n, wall_s=timer.lap())
         if frontier_n == 0:

@@ -10,10 +10,10 @@ reference interleaves weights in the neighbor array, vertex.h:214-231).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import IterMetrics, Timer, commit, materialize
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -51,13 +51,10 @@ def bellman_ford(
         improved = joined.where(
             F.col("dist").isNull() | (F.col("msg") < F.col("dist"))
         ).select("id", F.col("msg").alias("dist"))
-        # improved-count rides the materialization action
-        obs = Observation(f"bf_improved_{it}")
-        improved = materialize(
-            improved.observe(obs, F.count(F.lit(1)).alias("n")),
-            frontier if it > 0 else None,
+        improved, got = commit(
+            improved, frontier if it > 0 else None, n=F.count(F.lit(1))
         )
-        frontier_n = int(obs.get["n"] or 0)
+        frontier_n = got["n"]
         if frontier_n == 0:
             break
         state = materialize(

@@ -14,10 +14,10 @@ gather uses the broadcast zero-shuffle plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import IterMetrics, Timer, commit
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -42,13 +42,14 @@ def bfs(
         seeds = spark.createDataFrame([(int(s),) for s in source], "id long")
     else:
         seeds = spark.createDataFrame([(int(source),)], "id long")
-    visited = materialize(
+    visited, got = commit(
         seeds.select(
             "id", F.lit(-1).cast("long").alias("parent"), F.lit(0).alias("dist")
-        )
+        ),
+        n=F.count(F.lit(1)),
     )
     frontier = visited.select("id")
-    frontier_n = frontier.count()
+    frontier_n = got["n"]
 
     timer = Timer()
     for it in range(max_iters):
@@ -60,19 +61,11 @@ def bfs(
             msgs.join(visited.select("id"), "id", "left_anti")
             .select("id", F.col("msg").alias("parent"), F.lit(it + 1).alias("dist"))
         )
-        # next-frontier size rides the materialization action (one
-        # driver job per round instead of two)
-        obs = Observation(f"bfs_frontier_{it}")
-        visited_next = materialize(
-            visited.unionAll(new).observe(
-                obs,
-                F.sum((F.col("dist") == it + 1).cast("long")).alias("n"),
-            ),
-            visited,
+        visited, got = commit(
+            visited.unionAll(new), visited, n=F.count_if(F.col("dist") == it + 1)
         )
-        frontier = visited_next.where(F.col("dist") == it + 1).select("id")
-        frontier_n = int(obs.get["n"] or 0)
-        visited = visited_next
+        frontier = visited.where(F.col("dist") == it + 1).select("id")
+        frontier_n = got["n"]
         if metrics is not None:
             metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
         if frontier_n == 0:

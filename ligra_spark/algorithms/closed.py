@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer
+from ligra_spark.algorithms._iter import IterMetrics, Timer, derive
 
 # Per-call salt for the PERSISTED kernel outputs below. Spark's
 # CacheManager replaces any subtree whose canonicalized plan matches a
@@ -341,11 +341,9 @@ def pagerank_closed(
                 if replay_wall is not None:
                     kv["replay_wall_s"] = replay_wall
             metrics.record(t, **kv)
-    state = out.where(F.col("it") < 0).select(
-        "id", F.col("val").alias("rank")
+    return derive(
+        out.where(F.col("it") < 0).select("id", F.col("val").alias("rank")), out
     )
-    state._ligra_ckpt = out  # release handle (unpersist() contract)
-    return state
 
 
 def _lp_kernel(iters: int, symmetrize: bool):
@@ -641,6 +639,4 @@ def label_propagation_closed(
                 t, changed=glob.get(t, 0), wall_s=wall / max(t_max, 1),
                 fused=True,
             )
-    state = out.where(F.col("it") < 0).select("id", "label")
-    state._ligra_ckpt = out
-    return state
+    return derive(out.where(F.col("it") < 0).select("id", "label"), out)

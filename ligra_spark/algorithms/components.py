@@ -31,10 +31,17 @@ labels; only round counts differ.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    derive,
+    materialize,
+    unpersist,
+)
 from ligra_spark.algorithms.closed import _cc_kernel, connected_components_closed
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
@@ -108,23 +115,11 @@ def connected_components(
             nxt = nxt.join(grp, "comp").select(
                 "id", "comp", F.least("comp_new", "gmin").alias("comp_new")
             )
-        # The frontier count rides the round's LAST materialization
-        # action as an observed metric (one driver job per round
-        # instead of two); attach it to whichever plan materializes
-        # last — nxt itself when jumps == 0, else the final jump.
-        obs = Observation(f"cc_frontier_{it}")
-
-        def _observe_frontier(df):
-            return df.observe(
-                obs,
-                F.sum(
-                    (F.col("comp_new") < F.col("comp")).cast("long")
-                ).alias("frontier_n"),
-            )
-
-        if jumps == 0:
-            nxt = _observe_frontier(nxt)
-        nxt = materialize(nxt, state)
+        # the frontier count rides the round's LAST commit: nxt itself
+        # when jumps == 0, else the final jump
+        moved = F.col("comp_new") < F.col("comp")
+        count = dict(frontier_n=F.count_if(moved))
+        nxt, got = commit(nxt, state, **({} if jumps else count))
         for j in range(jumps):
             hop = nxt.select(
                 F.col("id").alias("comp_new"), F.col("comp_new").alias("comp2")
@@ -134,15 +129,10 @@ def connected_components(
                 "comp",
                 F.coalesce("comp2", "comp_new").alias("comp_new"),
             )
-            if j == jumps - 1:
-                jumped = _observe_frontier(jumped)
-            nxt = materialize(jumped, nxt)
-        frontier = nxt.where(F.col("comp_new") < F.col("comp")).select(
-            "id", F.col("comp_new").alias("comp")
-        )
-        frontier_n = int(obs.get["frontier_n"] or 0)
-        state = nxt.select("id", F.col("comp_new").alias("comp"))
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+            nxt, got = commit(jumped, nxt, **(count if j == jumps - 1 else {}))
+        frontier = nxt.where(moved).select("id", F.col("comp_new").alias("comp"))
+        frontier_n = got["frontier_n"]
+        state = derive(nxt.select("id", F.col("comp_new").alias("comp")), nxt)
         if metrics is not None:
             metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
         if checkpointer is not None:
@@ -241,15 +231,11 @@ def cc_contract_local(
             x.where((F.col("rn") == 1) | (F.col("lab") != F.col("gl")))
         )
         glob = x.where(F.col("rn") == 1).select("v", "gl")
-        # residual count rides the materialization action
-        obs = Observation(f"cc_resid_{it}")
-        residual = materialize(
-            x.where(F.col("lab") != F.col("gl"))
-            .select("lab", "gl")
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+        residual, got = commit(
+            x.where(F.col("lab") != F.col("gl")).select("lab", "gl").distinct(),
+            n=F.count(F.lit(1)),
         )
-        n_residual = int(obs.get["n"] or 0)
+        n_residual = got["n"]
         mappings.append(glob)
         if metrics is not None:
             metrics.record(it, residual=n_residual, wall_s=timer.lap())
@@ -339,8 +325,6 @@ def bfs_components(
     - ``'fallback'``: label the remainder with one
       ``connected_components`` run (exact same fixpoint, O(log) rounds
       regardless of component count)."""
-    from ligra_spark.algorithms._iter import materialize_counted
-
     if on_overflow not in ("error", "fallback"):
         raise ValueError("on_overflow must be 'error' or 'fallback'")
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
@@ -351,12 +335,13 @@ def bfs_components(
     wave = 0
     while comps_done < max_comps:
         k = min(roots_per_wave, max_comps - comps_done)
-        roots, n_roots = materialize_counted(
+        roots, got = commit(
             remaining.orderBy("id").limit(k).select(
                 "id", F.col("id").alias("comp")
             ),
-            name=f"bfscc_roots_{wave}",
+            n=F.count(F.lit(1)),
         )
+        n_roots = got["n"]
         if n_roots == 0:
             unpersist(roots)
             return out
@@ -372,7 +357,6 @@ def bfs_components(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("comp").alias("_mc"))
             )
-            obs = Observation(f"bfscc_{wave}_chg")
             merged = (
                 vis.drop("_chg")
                 .join(msgs, "id", "full")
@@ -390,25 +374,18 @@ def bfs_components(
                         )
                     ).alias("_chg"),
                 )
-                .observe(obs, F.sum(F.col("_chg").cast("long")).alias("n"))
             )
-            vis = materialize(merged, vis)
-            if int(obs.get["n"] or 0) == 0:
+            vis, got = commit(merged, vis, n=F.count_if("_chg"))
+            if got["n"] == 0:
                 break
             frontier = vis.where("_chg")
         reached = vis.select("id", "comp")
         # cumulative components labeled = rows whose label is their own
-        # id (each wave's winning labels are exactly such roots); rides
-        # the union's materialization action
-        obs_c = Observation(f"bfscc_done_{wave}")
-        out = materialize(
-            out.unionAll(reached).observe(
-                obs_c,
-                F.sum((F.col("id") == F.col("comp")).cast("long")).alias("c"),
-            ),
-            out,
+        # id (each wave's winning labels are exactly such roots)
+        out, got = commit(
+            out.unionAll(reached), out, c=F.count_if(F.col("id") == F.col("comp"))
         )
-        comps_done = int(obs_c.get["c"] or 0)
+        comps_done = got["c"]
         remaining = materialize(
             remaining.join(vis.select("id"), "id", "left_anti"), remaining
         )

@@ -28,10 +28,17 @@ kBFS-Ecc's exact-bitmask core is ``algorithms.radii``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    derive,
+    materialize,
+    unpersist,
+)
 from ligra_spark.graph import Graph
 
 
@@ -80,13 +87,12 @@ def _sketch_ecc(
             ).alias("reg_new"),
         )
         nxt = materialize(nxt, sketch)
-        changed = nxt.where(F.col("reg_new") != F.col("reg")).select("id").distinct()
-        # frontier size rides the frontier's own materialization action
-        # (one driver job instead of two — VERDICT r03 item 3)
-        obs = Observation(f"sketch_f_{it}")
-        changed = changed.observe(obs, F.count(F.lit(1)).alias("f"))
-        changed = materialize(changed, frontier_ids if it > 0 else None)
-        frontier_n = int(obs.get["f"] or 0)
+        changed, got = commit(
+            nxt.where(F.col("reg_new") != F.col("reg")).select("id").distinct(),
+            frontier_ids if it > 0 else None,
+            f=F.count(F.lit(1)),
+        )
+        frontier_n = got["f"]
         ecc = ecc.join(changed.withColumn("_c", F.lit(1)), "id", "left").select(
             "id",
             F.when(F.col("_c").isNotNull(), F.lit(it + 1))
@@ -94,8 +100,7 @@ def _sketch_ecc(
             .alias("ecc"),
         )
         ecc = materialize(ecc)
-        sketch = nxt.select("id", "slot", F.col("reg_new").alias("reg"))
-        sketch._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+        sketch = derive(nxt.select("id", "slot", F.col("reg_new").alias("reg")), nxt)
         frontier_ids = changed
         if metrics is not None:
             metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
@@ -197,18 +202,18 @@ def tk_ecc(
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
     comps = connected_components(g, symmetrize=False)
     # determined vertices stay in state with `ecc` set (instead of a
-    # separate `done` accumulator) so the whole iteration commits in
-    # ONE materialization action, with the undetermined count riding
-    # it as an Observation — 2 driver jobs per iteration + BFS rounds
-    obs0 = Observation("tk_left_init")
-    state = materialize(
+    # separate `done` accumulator) so the whole iteration is ONE
+    # commit with the undetermined count riding it — 2 driver jobs per
+    # iteration + BFS rounds
+    state, got = commit(
         comps.select(
             "id", "comp", F.lit(0).alias("low"),
             F.lit(None).cast("int").alias("up"),
             F.lit(None).cast("int").alias("ecc"),
-        ).observe(obs0, F.count(F.lit(1)).alias("n"))
+        ),
+        n=F.count(F.lit(1)),
     )
-    n_left = int(obs0.get["n"] or 0)
+    n_left = got["n"]
 
     timer = Timer()
     for it in range(max_iters):
@@ -230,36 +235,8 @@ def tk_ecc(
         )
         # multi-root BFS keeping per-root distances (at most `batch`
         # roots per component, so the (root, id) state is
-        # comp-partitioned); round 0's visited set stays lazy — it
-        # derives from the already-materialized picks
-        vis = picks.select(
-            "root", F.col("root").alias("id"), F.lit(0).alias("dist")
-        )
-        frontier = vis
-        r = 0
-        while True:
-            msgs = (
-                frontier.select("root", F.col("id").alias("src"))
-                .join(g.edges_by_src, "src")
-                .select("root", F.col("dst").alias("id"))
-                .distinct()
-            )
-            new = msgs.join(vis.select("root", "id"), ["root", "id"], "left_anti")
-            new = new.select("root", "id", F.lit(r + 1).alias("dist"))
-            obs_f = Observation(f"tk_bfs_{it}_{r}")
-            vis_next = materialize(
-                vis.unionAll(new).observe(
-                    obs_f,
-                    F.sum((F.col("dist") == r + 1).cast("long")).alias("f"),
-                ),
-                vis if r > 0 else None,
-            )
-            n_f = int(obs_f.get["f"] or 0)
-            frontier = vis_next.where(F.col("dist") == r + 1)
-            vis = vis_next
-            r += 1
-            if n_f == 0:
-                break
+        # comp-partitioned)
+        vis = _multi_root_bfs(g, picks)
         eccw = vis.groupBy("root").agg(F.max("dist").alias("eccw"))
         # aggregate bound deltas over ALL roots that reached a vertex
         delta = (
@@ -274,7 +251,6 @@ def tk_ecc(
         )
         low2 = F.greatest("low", "lowd")
         up2 = F.least("up", "upd")
-        obs_l = Observation(f"tk_left_{it}")
         upd = (
             state.join(delta, "id", "left")
             .join(eccw.select(F.col("root").alias("id"), "eccw"), "id", "left")
@@ -290,12 +266,11 @@ def tk_ecc(
                 .when(low2 == up2, up2.cast("int"))
                 .alias("ecc"),
             )
-            .observe(obs_l, F.sum(F.col("ecc").isNull().cast("long")).alias("n"))
         )
-        state = materialize(upd, state)
+        state, got = commit(upd, state, n=F.count_if(F.col("ecc").isNull()))
         unpersist(picks)
         unpersist(vis)
-        n_left = int(obs_l.get["n"] or 0)
+        n_left = got["n"]
         if metrics is not None:
             metrics.record(it, remaining=n_left, wall_s=timer.lap())
     return state.where(F.col("ecc").isNotNull()).select(
@@ -309,13 +284,13 @@ def _multi_root_bfs(g: Graph, roots: DataFrame) -> DataFrame:
     fixpoint. The reference runs its sample/neighborhood BFSes serially
     (RV.C:176-188, 276-284); batching them keys the frontier by
     (root, id) instead, trading state size for fixpoint count — the
-    right trade on Spark, where each round is a scheduled job."""
-    vis = materialize(
-        roots.select("root", F.col("root").alias("id"), F.lit(0).alias("dist"))
-    )
+    right trade on Spark, where each round is a scheduled job. Round
+    0's visited set stays lazy: it derives from ``roots``, which every
+    caller has already materialized."""
+    vis = roots.select("root", F.col("root").alias("id"), F.lit(0).alias("dist"))
+    frontier = vis
     r = 0
     while True:
-        frontier = vis.where(F.col("dist") == r)
         msgs = (
             frontier.select("root", F.col("id").alias("src"))
             .join(g.edges_by_src, "src")
@@ -323,19 +298,14 @@ def _multi_root_bfs(g: Graph, roots: DataFrame) -> DataFrame:
             .distinct()
         )
         new = msgs.join(vis.select("root", "id"), ["root", "id"], "left_anti")
-        obs = Observation(f"mrb_{id(roots)}_{r}")
-        vis_next = materialize(
-            vis.unionAll(
-                new.select("root", "id", F.lit(r + 1).alias("dist"))
-            ).observe(
-                obs, F.sum((F.col("dist") == r + 1).cast("long")).alias("f")
-            ),
-            vis,
+        vis, got = commit(
+            vis.unionAll(new.select("root", "id", F.lit(r + 1).alias("dist"))),
+            vis if r > 0 else None,
+            f=F.count_if(F.col("dist") == r + 1),
         )
-        n_new = int(obs.get["f"] or 0)
-        vis = vis_next
+        frontier = vis.where(F.col("dist") == r + 1)
         r += 1
-        if n_new == 0:
+        if got["f"] == 0:
             return vis
 
 
@@ -493,10 +463,11 @@ def rv_ecc(
     )
     n_ids = N.select(F.col("root").alias("id"), F.lit(True).alias("in_n"))
     n_ids_g = n_ids.select(F.col("id").alias("g"), F.col("in_n").alias("gn"))
-    # unresolved-count rides each guide materialization (the init one,
-    # then one per doubling round) — one driver job per round
-    obs_g = Observation("rv_guide_init")
-    guide = materialize(
+    # unresolved-count rides each guide commit (the init one, then one
+    # per doubling round) — one driver job per round; `gn` (g is in
+    # Ngh_s) stays in the committed guide
+    open_c = F.count_if(F.col("gn").isNull())
+    guide, got = commit(
         dW.select("id")
         .join(n_ids, "id", "left")
         .join(par.withColumnRenamed("dst", "id"), "id", "left")
@@ -506,29 +477,22 @@ def rv_ecc(
             .otherwise(F.col("parent"))
             .alias("g"),
         )
-        .join(n_ids_g, "g", "left")
-        .observe(obs_g, F.sum(F.col("gn").isNull().cast("long")).alias("open"))
-        .select("id", "g")
+        .join(n_ids_g, "g", "left"),
+        open=open_c,
     )
-    n_open = int(obs_g.get["open"] or 0)
-    rnd = 0
+    n_open = got["open"]
     while n_open > 0:
         # pointer doubling toward the absorbing Ngh_s set (members of
         # Ngh_s self-loop, so hopping a resolved pointer is a no-op)
         hop = guide.select(F.col("id").alias("g"), F.col("g").alias("g2"))
-        obs_g = Observation(f"rv_guide_{rnd}")
-        guide = materialize(
+        guide, got = commit(
             guide.join(hop, "g", "left")
             .select("id", F.coalesce("g2", "g").alias("g"))
-            .join(n_ids_g, "g", "left")
-            .observe(
-                obs_g, F.sum(F.col("gn").isNull().cast("long")).alias("open")
-            )
-            .select("id", "g"),
+            .join(n_ids_g, "g", "left"),
             guide,
+            open=open_c,
         )
-        n_open = int(obs_g.get["open"] or 0)
-        rnd += 1
+        n_open = got["open"]
 
     # --- assemble: exact (S ∪ {w} ∪ Ngh_s), then estimates for the rest
     exact = materialize(

@@ -40,27 +40,17 @@ graph apps at 10^12 incidences.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
+    commit,
+    derive,
     materialize,
-    materialize_counted,
 )
 from ligra_spark.hypergraph import Hypergraph
-
-
-def _materialize_flagged(
-    df: DataFrame, prev: DataFrame | None, flag, name: str
-) -> tuple[DataFrame, int]:
-    """Materialize ``df`` with ``sum(flag)`` riding the SAME action —
-    the per-half-round frontier count of every alternating hypergraph
-    loop, folded into the state checkpoint job (VERDICT r03 item 3)."""
-    obs = Observation(name)
-    out = materialize(df.observe(obs, F.sum(flag.cast("long")).alias("f")), prev)
-    return out, int(obs.get["f"] or 0)
 
 
 def _seed_df(spark, source):
@@ -87,10 +77,10 @@ def hyper_bfs(
         new_h = msgs.join(vis_h, "id", "left_anti").select(
             "id", F.lit(2 * it + 1).alias("dist")
         )
-        vis_h, n_f = _materialize_flagged(
-            vis_h.unionAll(new_h), vis_h,
-            F.col("dist") == 2 * it + 1, f"hbfs_h_{it}",
+        vis_h, got = commit(
+            vis_h.unionAll(new_h), vis_h, f=F.count_if(F.col("dist") == 2 * it + 1)
         )
+        n_f = got["f"]
         frontier = vis_h.where(F.col("dist") == 2 * it + 1).select("id")
         if n_f == 0:
             break
@@ -98,10 +88,10 @@ def hyper_bfs(
         new_v = msgs.join(vis_v, "id", "left_anti").select(
             "id", F.lit(2 * it + 2).alias("dist")
         )
-        vis_v, n_f = _materialize_flagged(
-            vis_v.unionAll(new_v), vis_v,
-            F.col("dist") == 2 * it + 2, f"hbfs_v_{it}",
+        vis_v, got = commit(
+            vis_v.unionAll(new_v), vis_v, f=F.count_if(F.col("dist") == 2 * it + 2)
         )
+        n_f = got["f"]
         frontier = vis_v.where(F.col("dist") == 2 * it + 2).select("id")
         if metrics is not None:
             metrics.record(it, frontier=n_f, wall_s=timer.lap())
@@ -134,8 +124,8 @@ def hyper_cc(
             combiner="min",
             frontier_size=n_f,
         )
-        # state + changed flag in ONE checkpointed frame: the changed
-        # count rides the materialization, and the next half-round's
+        # state + changed flag in ONE committed frame: the changed
+        # count rides the commit, and the next half-round's
         # frontier filters the checkpoint instead of recomputing the
         # update join
         upd_h = lab_h.join(msgs, "id", "left").select(
@@ -148,9 +138,9 @@ def hyper_cc(
                 )
             ).alias("chg"),
         )
-        st_h, n_h = _materialize_flagged(upd_h, lab_h, F.col("chg"), f"hcc_h_{it}")
-        lab_h = st_h.select("id", "comp")
-        lab_h._ligra_ckpt = getattr(st_h, "_ligra_ckpt", st_h)
+        st_h, got = commit(upd_h, lab_h, f=F.count_if("chg"))
+        n_h = got["f"]
+        lab_h = derive(st_h.select("id", "comp"), st_h)
         if n_h == 0:
             break
         changed_h = st_h.where(F.col("chg")).select("id")
@@ -165,9 +155,9 @@ def hyper_cc(
             F.coalesce(F.least("comp", "msg"), "comp").alias("comp"),
             F.coalesce(F.col("msg") < F.col("comp"), F.lit(False)).alias("chg"),
         )
-        st_v, n_f = _materialize_flagged(upd_v, lab_v, F.col("chg"), f"hcc_v_{it}")
-        lab_v = st_v.select("id", "comp")
-        lab_v._ligra_ckpt = getattr(st_v, "_ligra_ckpt", st_v)
+        st_v, got = commit(upd_v, lab_v, f=F.count_if("chg"))
+        n_f = got["f"]
+        lab_v = derive(st_v.select("id", "comp"), st_v)
         frontier_v = st_v.where(F.col("chg")).select("id")
         if metrics is not None:
             metrics.record(it, frontier=n_f, wall_s=timer.lap())
@@ -252,7 +242,7 @@ def hyper_sssp(
             combiner="min",
             frontier_size=n_f,
         )
-        # state + changed flag in one checkpoint; count rides the job
+        # state + changed flag in one commit
         upd = dist_h.join(msgs, "id", "full_outer").select(
             "id",
             F.coalesce(F.least("dist", "msg"), "dist", "msg").alias("dist"),
@@ -261,9 +251,9 @@ def hyper_sssp(
                 | F.coalesce(F.col("msg") < F.col("dist"), F.lit(False))
             ).alias("chg"),
         )
-        st_h, n_f = _materialize_flagged(upd, dist_h, F.col("chg"), f"hsssp_h_{rnd}")
-        dist_h = st_h.select("id", "dist")
-        dist_h._ligra_ckpt = getattr(st_h, "_ligra_ckpt", st_h)
+        st_h, got = commit(upd, dist_h, f=F.count_if("chg"))
+        n_f = got["f"]
+        dist_h = derive(st_h.select("id", "dist"), st_h)
         if n_f == 0:
             break
         frontier = st_h.where(F.col("chg")).select("id", "dist")
@@ -281,9 +271,9 @@ def hyper_sssp(
                 | F.coalesce(F.col("msg") < F.col("dist"), F.lit(False))
             ).alias("chg"),
         )
-        st_v, n_f = _materialize_flagged(upd, dist_v, F.col("chg"), f"hsssp_v_{rnd}")
-        dist_v = st_v.select("id", "dist")
-        dist_v._ligra_ckpt = getattr(st_v, "_ligra_ckpt", st_v)
+        st_v, got = commit(upd, dist_v, f=F.count_if("chg"))
+        n_f = got["f"]
+        dist_v = derive(st_v.select("id", "dist"), st_v)
         frontier = st_v.where(F.col("chg")).select("id", "dist")
         if metrics is not None:
             metrics.record(rnd, frontier=n_f, wall_s=timer.lap())
@@ -302,9 +292,8 @@ def hyper_kcore(
     peeling rule: a hyperedge is alive iff ALL members are alive; the
     k-phase removes vertices with < k alive incident hyperedges."""
     inc = hg.fwd.edges_by_src  # (src=v, dst=h)
-    alive_v, n_alive = materialize_counted(
-        hg.vertices.select("id"), None, "hkc_init"
-    )
+    alive_v, got = commit(hg.vertices.select("id"), n=F.count(F.lit(1)))
+    n_alive = got["n"]
     spark = hg.spark
     cores = spark.createDataFrame([], "id long, core int")
 
@@ -324,28 +313,26 @@ def hyper_kcore(
             .groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        # one checkpoint of the alive-degree table per wave; min-degree
-        # rides the job, and empty phases are JUMPED (k -> min+1) —
+        # one commit of the alive-degree table per wave; min-degree
+        # rides it, and empty phases are JUMPED (k -> min+1) —
         # equivalent peeling (intermediate phases remove nothing, same
         # core = k-1 assignment), zero wasted rounds
-        obs = Observation(f"hkc_deg_{it}")
-        degs = materialize(
+        degs, got = commit(
             alive_v.join(alive_deg, "id", "left")
-            .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
-            .observe(obs, F.min("deg").alias("mind")),
+            .select("id", F.coalesce("deg", F.lit(0)).alias("deg")),
             prev_degs,
+            mind=F.min("deg"),
         )
         prev_degs = degs
-        mind = int(obs.get["mind"])
+        mind = int(got["mind"])
         if mind >= k:
             k = mind + 1
         removed = degs.where(F.col("deg") < k).select(
             "id", F.lit(k - 1).cast("int").alias("core")
         )
-        # removed-count rides the cores checkpoint (cumulative count)
-        cores, total = materialize_counted(
-            cores.unionAll(removed), cores, f"hkc_cores_{it}"
-        )
+        # removed-count rides the cores commit (cumulative count)
+        cores, got = commit(cores.unionAll(removed), cores, n=F.count(F.lit(1)))
+        total = got["n"]
         n_rm = total - n_cores
         n_cores = total
         alive_v = degs.where(F.col("deg") >= k).select("id")
@@ -392,10 +379,10 @@ def hyper_bpath(
             .join(vis_h, "id", "left_anti")
             .select("id", F.lit(it + 1).alias("dist"))
         )
-        vis_h, n_fired = _materialize_flagged(
-            vis_h.unionAll(fired), vis_h,
-            F.col("dist") == it + 1, f"hbp_h_{it}",
+        vis_h, got = commit(
+            vis_h.unionAll(fired), vis_h, f=F.count_if(F.col("dist") == it + 1)
         )
+        n_fired = got["f"]
         if n_fired == 0:
             break
         msgs = hg.hyperedge_prop(
@@ -406,10 +393,10 @@ def hyper_bpath(
         new_v = msgs.join(vis_v, "id", "left_anti").select(
             "id", F.lit(it + 1).alias("dist")
         )
-        vis_v, n_f = _materialize_flagged(
-            vis_v.unionAll(new_v), vis_v,
-            F.col("dist") == it + 1, f"hbp_v_{it}",
+        vis_v, got = commit(
+            vis_v.unionAll(new_v), vis_v, f=F.count_if(F.col("dist") == it + 1)
         )
+        n_f = got["f"]
         frontier = vis_v.where(F.col("dist") == it + 1).select("id")
         if metrics is not None:
             metrics.record(it, frontier=n_f, wall_s=timer.lap())
@@ -456,10 +443,10 @@ def hyper_bc(
         new_h = msgs.join(sig_h, "id", "left_anti").select(
             "id", F.col("msg").alias("sigma"), F.lit(2 * it + 1).alias("dist")
         )
-        sig_h, n_f = _materialize_flagged(
-            sig_h.unionAll(new_h), sig_h,
-            F.col("dist") == 2 * it + 1, f"hbc_h_{it}",
+        sig_h, got = commit(
+            sig_h.unionAll(new_h), sig_h, f=F.count_if(F.col("dist") == 2 * it + 1)
         )
+        n_f = got["f"]
         frontier = sig_h.where(F.col("dist") == 2 * it + 1)
         if n_f == 0:
             break
@@ -472,10 +459,10 @@ def hyper_bc(
         new_v = msgs.join(sig_v, "id", "left_anti").select(
             "id", F.col("msg").alias("sigma"), F.lit(2 * it + 2).alias("dist")
         )
-        sig_v, n_f = _materialize_flagged(
-            sig_v.unionAll(new_v), sig_v,
-            F.col("dist") == 2 * it + 2, f"hbc_v_{it}",
+        sig_v, got = commit(
+            sig_v.unionAll(new_v), sig_v, f=F.count_if(F.col("dist") == 2 * it + 2)
         )
+        n_f = got["f"]
         frontier = sig_v.where(F.col("dist") == 2 * it + 2)
         if metrics is not None:
             metrics.record(it, frontier=n_f, wall_s=timer.lap())
@@ -557,19 +544,16 @@ def hyper_mis(
     filtered DataFrame each round (same asymptotics as the
     reference's in-place pack, no mutation)."""
     spark = hg.spark
-    flags, n_f = _materialize_flagged(
-        hg.vertices.select("id", F.lit(0).alias("flag")),
-        None,
-        F.col("flag") == 0,
-        "hmis_init",
-    )
+    undecided = F.count_if(F.col("flag") == 0)
+    flags, got = commit(hg.vertices.select("id", F.lit(0).alias("flag")), f=undecided)
+    n_f = got["f"]
     live = materialize(hg.fwd.edges_by_src.select("src", "dst"))
     offset = 0
 
     timer = Timer()
     for it in range(max_rounds):
-        # n_f (undecided count) rode the flags materialization of the
-        # previous round (or the init one)
+        # n_f (undecided count) rode the flags commit of the previous
+        # round (or the init one)
         if n_f == 0:
             break
         frontier = flags.where(F.col("flag") == 0)
@@ -596,7 +580,7 @@ def hyper_mis(
             .agg(F.count(F.lit(1)).alias("c"), F.min("src").alias("u"))
             .where(F.col("c") == 1)
         )
-        flags, n_f = _materialize_flagged(
+        flags, got = commit(
             flags.join(won.select(F.col("src").alias("id")).withColumn("_w", F.lit(1)), "id", "left")
             .join(
                 singles.select(F.col("u").alias("id")).distinct()
@@ -612,9 +596,9 @@ def hyper_mis(
                 .alias("flag"),
             ),
             flags,
-            F.col("flag") == 0,
-            f"hmis_{it}",
+            f=undecided,
         )
+        n_f = got["f"]
         live = materialize(
             live_p.join(singles.select("dst"), "dst", "left_anti"), live
         )
@@ -637,15 +621,13 @@ def hyper_kcore_bucketed(
     of one per removal wave."""
     inc = hg.fwd.edges_by_src  # (src=v, dst=h)
     # next_bucket's min-key aggregation job is folded into the verts
-    # materialization: the minimum degree (= the next bucket to pop)
-    # rides the checkpoint action as an Observation, here and at every
-    # per-round re-materialization below (VERDICT r03 item 3)
-    obs0 = Observation("hkcb_init")
-    verts = materialize(
-        hg.vertex_degrees.select("id", F.col("deg").cast("long").alias("deg"))
-        .observe(obs0, F.min("deg").alias("mind"))
+    # commit: the minimum degree (= the next bucket to pop) rides it,
+    # here and at every per-round re-commit below
+    verts, got = commit(
+        hg.vertex_degrees.select("id", F.col("deg").cast("long").alias("deg")),
+        mind=F.min("deg"),
     )
-    mind = obs0.get["mind"]
+    mind = got["mind"]
     spark = hg.spark
     cores = spark.createDataFrame([], "id long, core int")
     dead_h = materialize(
@@ -659,11 +641,11 @@ def hyper_kcore_bucketed(
             break
         cur = int(mind)
         active = verts.where(F.col("deg") == cur).select("id")
-        peeled, n_cur = materialize_counted(
+        peeled, got = commit(
             active.select("id", F.lit(cur).cast("int").alias("core")),
-            None,
-            f"hkcb_peel_{it}",
+            n=F.count(F.lit(1)),
         )
+        n_cur = got["n"]
         cores = cores.unionAll(peeled)
         newly_dead = (
             inc.join(active.withColumnRenamed("id", "src"), "src")
@@ -679,8 +661,7 @@ def hyper_kcore_bucketed(
             .groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("dec"))
         )
-        obs_v = Observation(f"hkcb_min_{it}")
-        verts = materialize(
+        verts, got = commit(
             survivors.join(dec, "id", "left").select(
                 "id",
                 F.when(
@@ -691,10 +672,11 @@ def hyper_kcore_bucketed(
                 )
                 .otherwise(F.col("deg"))
                 .alias("deg"),
-            ).observe(obs_v, F.min("deg").alias("mind")),
+            ),
             verts,
+            mind=F.min("deg"),
         )
-        mind = obs_v.get["mind"]
+        mind = got["mind"]
         dead_h = materialize(dead_h.unionAll(newly_dead), dead_h)
         if metrics is not None:
             metrics.record(it, k=cur, peeled=n_cur, wall_s=timer.lap())

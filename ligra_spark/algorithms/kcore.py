@@ -11,10 +11,16 @@ one columnar update.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    materialize,
+    unpersist,
+)
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map_count
 from ligra_spark.operators.vertex_ops import vertex_filter
@@ -43,13 +49,11 @@ def kcore(
     while remaining > 0 and (max_k is None or k <= max_k):
         # peel everything with deg < k until none remain at this k
         while True:
-            peel = vertex_filter(
-                state, F.col("alive") & (F.col("deg") < k)
-            ).select("id")
-            # peel-count rides the materialization action
-            obs = Observation(f"kcore_peel_{k}_{id(peel)}")
-            peel = materialize(peel.observe(obs, F.count(F.lit(1)).alias("n")))
-            n_peel = int(obs.get["n"] or 0)
+            peel, got = commit(
+                vertex_filter(state, F.col("alive") & (F.col("deg") < k)).select("id"),
+                n=F.count(F.lit(1)),
+            )
+            n_peel = got["n"]
             if n_peel == 0:
                 unpersist(peel)
                 break

@@ -24,10 +24,16 @@ same way the count form was.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    derive,
+    materialize,
+)
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 
@@ -75,19 +81,11 @@ def label_propagation(
             "label",
             F.coalesce("new_label", "label").alias("label_next"),
         )
-        # changed-count rides the materialization action (one driver
-        # job per round instead of two)
-        obs = Observation(f"lp_changed_{it}")
-        nxt = nxt.observe(
-            obs,
-            F.sum(
-                (F.col("label") != F.col("label_next")).cast("long")
-            ).alias("changed"),
+        nxt, got = commit(
+            nxt, state, changed=F.count_if(F.col("label") != F.col("label_next"))
         )
-        nxt = materialize(nxt, state)
-        changed = int(obs.get["changed"] or 0)
-        state = nxt.select("id", F.col("label_next").alias("label"))
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+        changed = got["changed"]
+        state = derive(nxt.select("id", F.col("label_next").alias("label")), nxt)
         if metrics is not None:
             metrics.record(it, changed=changed, wall_s=timer.lap())
         if changed == 0:

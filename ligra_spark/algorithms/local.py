@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
+    commit,
     materialize,
-    materialize_counted as _materialize_counted,
 )
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
@@ -54,7 +54,8 @@ def ppr_acl(
         fr = state.join(graph.degrees.select("id", "out_deg"), "id").where(
             (F.col("r") > F.col("out_deg") * eps) & (F.col("out_deg") > 0)
         )
-        fr, n_fr = _materialize_counted(fr, None, f"acl_fr_{it}")
+        fr, got = commit(fr, n=F.count(F.lit(1)))
+        n_fr = got["n"]
         if n_fr == 0:
             break
         msgs = edge_map(
@@ -110,7 +111,8 @@ def nibble(
         fr = state.join(graph.degrees.select("id", "out_deg"), "id").where(
             (F.col("p") >= F.col("out_deg") * eps) & (F.col("out_deg") > 0)
         )
-        fr, n_fr = _materialize_counted(fr, None, f"nibble_fr_{it}")
+        fr, got = commit(fr, n=F.count(F.lit(1)))
+        n_fr = got["n"]
         if n_fr == 0:
             break
         msgs = edge_map(
@@ -172,9 +174,10 @@ def heat_kernel(
         spark.createDataFrame([(int(source), 0.0)], "id long, x double")
     )
     r = spark.createDataFrame([(int(source), 1.0)], "id long, r double")
-    frontier, n_f = _materialize_counted(
-        r.join(deg, "id").where(F.col("out_deg") > 0), None, "hk_fr_init"
+    frontier, got = commit(
+        r.join(deg, "id").where(F.col("out_deg") > 0), n=F.count(F.lit(1))
     )
+    n_f = got["n"]
 
     timer = Timer()
     for j in range(N):
@@ -209,14 +212,15 @@ def heat_kernel(
             break
         x = materialize(fold, x)
         r = msgs.select("id", F.col("msg").alias("r"))
-        frontier, n_f = _materialize_counted(
+        frontier, got = commit(
             r.join(deg, "id").where(
                 (F.col("r") >= F.col("out_deg") * (constant / psis[j + 1]))
                 & (F.col("out_deg") > 0)
             ),
             frontier,
-            f"hk_fr_{j}",
+            n=F.count(F.lit(1)),
         )
+        n_f = got["n"]
         if metrics is not None:
             metrics.record(j, frontier=n_f, wall_s=timer.lap())
     return x

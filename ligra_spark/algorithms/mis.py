@@ -19,10 +19,10 @@ any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import IterMetrics, Timer, commit, materialize
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 from ligra_spark.operators.vertex_ops import vertex_filter
@@ -55,12 +55,8 @@ def maximal_independent_set(
             .where(F.col("msg").isNull() | (F.col("id") < F.col("msg")))
             .select("id")
         )
-        # winner-count rides the materialization action
-        obs = Observation(f"mis_win_{it}")
-        winners = materialize(
-            winners.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n_win = int(obs.get["n"] or 0)
+        winners, got = commit(winners, n=F.count(F.lit(1)))
+        n_win = got["n"]
         excluded = edge_map(
             g, winners, message=F.lit(True), combiner="any",
             frontier_size=n_win,
@@ -77,14 +73,9 @@ def maximal_independent_set(
                 .alias("flag"),
             )
         )
-        # next round's undecided count rides this materialization
-        obs_u = Observation(f"mis_und_{it}")
-        nxt = nxt.observe(
-            obs_u, F.sum((F.col("flag") == 0).cast("long")).alias("n")
-        )
-        nxt = materialize(nxt, state)
-        state = nxt
-        prev_und, n_und = n_und, int(obs_u.get["n"] or 0)
+        # next round's undecided count rides this commit
+        state, got = commit(nxt, state, n=F.count_if(F.col("flag") == 0))
+        prev_und, n_und = n_und, got["n"]
         if metrics is not None:
             metrics.record(
                 it, undecided=prev_und, winners=n_win, wall_s=timer.lap()

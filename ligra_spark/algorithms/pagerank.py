@@ -24,14 +24,15 @@ direction-switching scheduler.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
+    commit,
+    derive,
     materialize,
-    unpersist,
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
@@ -100,22 +101,13 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
             },
         ).select("id", "out_deg", "rank", "rank_next")
-        # Fold the L1 convergence norm into the SAME action that
-        # materializes the round (Observation metrics are collected
-        # as a side effect of the checkpoint job) — no extra driver
-        # job per round. At bench scale the extra job was ~30% of the
-        # per-iteration fixed cost; on a cluster it's a full scan of
-        # the state table saved per round.
-        obs = Observation(f"pr_l1_{it}")
-        nxt = nxt.observe(
-            obs, F.sum(F.abs(F.col("rank_next") - F.col("rank"))).alias("l1")
+        nxt, got = commit(
+            nxt, state, l1=F.sum(F.abs(F.col("rank_next") - F.col("rank")))
         )
-        nxt = materialize(
-            nxt.select("id", "out_deg", F.col("rank_next").alias("rank"))
+        state = derive(
+            nxt.select("id", "out_deg", F.col("rank_next").alias("rank")), nxt
         )
-        unpersist(state)
-        state = nxt
-        l1 = float(obs.get["l1"] or 0.0)
+        l1 = float(got["l1"] or 0.0)
         if metrics is not None:
             metrics.record(it, l1=l1, wall_s=timer.lap(), edges=graph.m)
         if checkpointer is not None:
@@ -188,25 +180,14 @@ def pagerank_delta(
             F.col("p_new").alias("p"),
             (F.col("p_new") - F.col("p")).alias("delta"),
         )
-        # L1 norm AND frontier size ride the materialization action
-        # (one driver job per round instead of three)
-        obs = Observation(f"prd_{it}")
-        nxt = nxt.observe(
-            obs,
-            F.sum(F.abs("delta")).alias("l1"),
-            F.sum(
-                (F.abs(F.col("delta")) > F.col("p") * eps2).cast("long")
-            ).alias("frontier_n"),
+        live_c = F.abs(F.col("delta")) > F.col("p") * eps2
+        state, got = commit(
+            nxt, state, l1=F.sum(F.abs("delta")), frontier_n=F.count_if(live_c)
         )
-        nxt = materialize(nxt, state)
-        state = nxt
-        got = obs.get
         l1 = got["l1"] or 0.0
-        # (frontier below shares nxt's checkpoint blocks)
-        frontier = nxt.where(F.abs(F.col("delta")) > F.col("p") * eps2).select(
-            "id", "out_deg", "delta"
-        )
-        frontier_n = int(got["frontier_n"] or 0)
+        # (frontier below shares state's checkpoint blocks)
+        frontier = state.where(live_c).select("id", "out_deg", "delta")
+        frontier_n = got["frontier_n"]
         if metrics is not None:
             metrics.record(
                 it, l1=float(l1), frontier=frontier_n, wall_s=timer.lap()

@@ -14,13 +14,66 @@ combiner set covers the reference's writeOr algorithms.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    derive,
+    materialize,
+)
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
+
+
+def _or_propagate(
+    g: Graph, state: DataFrame, max_iters: int, metrics: IterMetrics | None
+) -> DataFrame:
+    """The 64-bit OR-propagation fixpoint shared by ``radii`` and
+    ``kbfs_sampled_ecc``: ``state`` is ``(id, mask, r)`` with every
+    source's bit set in ``mask`` and ``r`` each vertex's starting round
+    value; frontier vertices OR their mask into their out-neighbors'
+    (writeOr, Radii.C:27-32) until no mask changes. Returns
+    ``(id, mask, r)``, ``r`` = the last round v's mask changed (its
+    starting value if it never did)."""
+    state, got = commit(state, f=F.count_if(F.col("mask") != 0))
+    frontier = state.where(F.col("mask") != 0).select("id", "mask")
+    frontier_n = got["f"]
+    timer = Timer()
+    for it in range(max_iters):
+        if frontier_n == 0:
+            break
+        msgs = edge_map(
+            g,
+            frontier,
+            message=F.col("mask"),
+            combiner="bit_or",
+            frontier_size=frontier_n,
+        )
+        nxt = state.join(msgs, "id", "left").select(
+            "id",
+            "mask",
+            "r",
+            (F.col("mask").bitwiseOR(F.coalesce("msg", F.lit(0)))).alias("mask_new"),
+        )
+        changed = F.col("mask_new") != F.col("mask")
+        nxt, got = commit(nxt, state, f=F.count_if(changed))
+        frontier_n = got["f"]
+        frontier = nxt.where(changed).select("id", F.col("mask_new").alias("mask"))
+        state = derive(
+            nxt.select(
+                "id",
+                F.col("mask_new").alias("mask"),
+                F.when(changed, F.lit(it + 1)).otherwise(F.col("r")).alias("r"),
+            ),
+            nxt,
+        )
+        if metrics is not None:
+            metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
+    return state
 
 
 def radii(
@@ -54,58 +107,11 @@ def radii(
     state = g.vertices.join(sample.select("id", "bit"), "id", "left").select(
         "id",
         F.coalesce("bit", F.lit(0)).alias("mask"),
-        F.when(F.col("bit").isNotNull(), 0).otherwise(F.lit(-1)).alias("radius"),
+        F.when(F.col("bit").isNotNull(), 0).otherwise(F.lit(-1)).alias("r"),
     )
-    obs0 = Observation(f"radii_init_{id(state)}")
-    state = materialize(
-        state.observe(
-            obs0, F.sum((F.col("mask") != 0).cast("long")).alias("f")
-        )
+    return _or_propagate(g, state, max_iters, metrics).select(
+        "id", F.col("r").alias("radius")
     )
-    frontier = state.where(F.col("mask") != 0).select("id", "mask")
-    frontier_n = int(obs0.get["f"] or 0)
-
-    timer = Timer()
-    for it in range(max_iters):
-        if frontier_n == 0:
-            break
-        msgs = edge_map(
-            g,
-            frontier,
-            message=F.col("mask"),
-            combiner="bit_or",
-            frontier_size=frontier_n,
-        )
-        nxt = state.join(msgs, "id", "left").select(
-            "id",
-            "mask",
-            "radius",
-            (F.col("mask").bitwiseOR(F.coalesce("msg", F.lit(0)))).alias("mask_new"),
-        )
-        # next frontier size rides the materialization action (one
-        # driver job per round instead of two — same fold as the
-        # headline family, VERDICT r03 item 3)
-        obs = Observation(f"radii_f_{it}")
-        nxt = nxt.observe(
-            obs,
-            F.sum((F.col("mask_new") != F.col("mask")).cast("long")).alias("f"),
-        )
-        nxt = materialize(nxt, state)
-        frontier_n = int(obs.get["f"] or 0)
-        frontier = nxt.where(F.col("mask_new") != F.col("mask")).select(
-            "id", F.col("mask_new").alias("mask")
-        )
-        state = nxt.select(
-            "id",
-            F.col("mask_new").alias("mask"),
-            F.when(F.col("mask_new") != F.col("mask"), F.lit(it + 1))
-            .otherwise(F.col("radius"))
-            .alias("radius"),
-        )
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
-        if metrics is not None:
-            metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
-    return state.select("id", "radius")
 
 
 def kbfs_sampled_ecc(
@@ -159,58 +165,14 @@ def kbfs_sampled_ecc(
     labels = materialize(labels.select("id", "comp"))
 
     def _propagate(sources: DataFrame) -> DataFrame:
-        """OR-propagate per-component bit masks; (id, ecc) = last round
-        each vertex's mask changed (0 if never reached beyond init)."""
-        obs0 = Observation(f"kbfs_init_{id(sources)}")
-        state = materialize(
-            labels.join(sources.select("id", "bit"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("bit", F.lit(0)).alias("mask"),
-                F.lit(0).alias("ecc"),
-            )
-            .observe(obs0, F.sum((F.col("mask") != 0).cast("long")).alias("f"))
+        """(id, ecc) = the last round each vertex's per-component mask
+        changed (0 if never reached beyond init)."""
+        state = labels.join(sources.select("id", "bit"), "id", "left").select(
+            "id", F.coalesce("bit", F.lit(0)).alias("mask"), F.lit(0).alias("r")
         )
-        frontier = state.where(F.col("mask") != 0).select("id", "mask")
-        frontier_n = int(obs0.get["f"] or 0)
-        timer = Timer()
-        for it in range(1000):
-            if frontier_n == 0:
-                break
-            msgs = edge_map(
-                g, frontier, message=F.col("mask"), combiner="bit_or",
-                frontier_size=frontier_n,
-            )
-            nxt = state.join(msgs, "id", "left").select(
-                "id",
-                "mask",
-                "ecc",
-                F.col("mask").bitwiseOR(F.coalesce("msg", F.lit(0))).alias("mask_new"),
-            )
-            # frontier size rides the materialization (one job/round)
-            obs = Observation(f"kbfs_f_{id(nxt)}_{it}")
-            nxt = nxt.observe(
-                obs,
-                F.sum(
-                    (F.col("mask_new") != F.col("mask")).cast("long")
-                ).alias("f"),
-            )
-            nxt = materialize(nxt, state)
-            frontier_n = int(obs.get["f"] or 0)
-            frontier = nxt.where(F.col("mask_new") != F.col("mask")).select(
-                "id", F.col("mask_new").alias("mask")
-            )
-            state = nxt.select(
-                "id",
-                F.col("mask_new").alias("mask"),
-                F.when(F.col("mask_new") != F.col("mask"), F.lit(it + 1))
-                .otherwise(F.col("ecc"))
-                .alias("ecc"),
-            )
-            state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
-            if metrics is not None:
-                metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
-        return state.select("id", "ecc")
+        return _or_propagate(g, state, 1000, metrics).select(
+            "id", F.col("r").alias("ecc")
+        )
 
     def _bits(ranked: DataFrame) -> DataFrame:
         return ranked.where(F.col("rn") <= k).select(

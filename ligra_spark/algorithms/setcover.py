@@ -25,10 +25,17 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ligra_spark.algorithms._iter import IterMetrics, Timer, materialize, unpersist
+from ligra_spark.algorithms._iter import (
+    IterMetrics,
+    Timer,
+    commit,
+    derive,
+    materialize,
+    unpersist,
+)
 from ligra_spark.graph import Graph
 
 
@@ -57,8 +64,7 @@ def set_cover(
     Driver-job budget: 2 jobs/round (``won`` + the single tagged-state
     materialization). Set rows (kind 0, bucket) and element rows
     (kind 1, owner) live in ONE state table so both sides update under
-    one checkpoint action, and next_bucket's max-key scan rides that
-    action as an Observation (the VERDICT r03 item-3/5 fold)."""
+    one commit, and next_bucket's max-key scan rides it."""
     x = 1.0 / math.log(1.0 + epsilon)
     if assume_distinct:
         edges = graph.edges_by_src
@@ -75,8 +81,7 @@ def set_cover(
 
     # kind 0 rows = sets (bkt; NULL once covered-out or in the cover);
     # kind 1 rows = elements (owner NULL = unclaimed, -1 = COVERED)
-    obs0 = Observation(f"sc_init_{id(graph)}")
-    state = materialize(
+    state, got = commit(
         degrees.where(F.col("out_deg") > 0)
         .select(
             F.lit(0).alias("kind"),
@@ -92,10 +97,10 @@ def set_cover(
                 F.lit(None).cast("long").alias("bkt"),
                 F.lit(None).cast("long").alias("owner"),
             )
-        )
-        .observe(obs0, F.max("bkt").alias("mx"))
+        ),
+        mx=F.max("bkt"),
     )
-    cur0 = obs0.get["mx"]
+    cur0 = got["mx"]
     cover = graph.spark.createDataFrame([], "set_id long")
 
     timer = Timer()
@@ -156,7 +161,7 @@ def set_cover(
         )
         # 5. rebucket the processed bucket's sets by packed degree;
         # winners leave the structure. `_a` marks this round's active
-        # sets so their count rides the same observation as next
+        # sets so their count rides the same commit as next
         # round's max bucket.
         set_rows = (
             state.where(F.col("kind") == 0)
@@ -182,19 +187,13 @@ def set_cover(
                 F.col("_a"),
             )
         )
-        obs = Observation(f"sc_{id(graph)}_{it}")
-        nxt = materialize(
-            set_rows.unionAll(elm_rows).observe(
-                obs,
-                F.max("bkt").alias("mx"),
-                F.sum("_a").alias("n_active"),
-            ),
+        nxt, got = commit(
+            set_rows.unionAll(elm_rows),
             state,
+            mx=F.max("bkt"),
+            n_active=F.count_if(F.col("_a").isNotNull()),
         )
-        state = nxt.drop("_a")
-        # keep the checkpoint handle across the projection so next
-        # round's materialize(prev=state) really frees this round's RDD
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+        state = derive(nxt.drop("_a"), nxt)
         # cover is an append-only union of already-materialized `won`
         # nodes — the union plan stays shallow without its own
         # per-round materialization job
@@ -202,10 +201,10 @@ def set_cover(
             metrics.record(
                 it,
                 bucket=cur,
-                active=int(obs.get["n_active"] or 0),
+                active=got["n_active"],
                 wall_s=timer.lap(),
             )
-        nxt_cur = obs.get["mx"]
+        nxt_cur = got["mx"]
         cur = None if nxt_cur is None else int(nxt_cur)
     if not assume_distinct:
         unpersist(edges)

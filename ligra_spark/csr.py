@@ -195,7 +195,7 @@ def pagerank_csr(
     """PageRank over CSR blocks — identical semantics to
     algorithms.pagerank (damping 0.85, L1 < tol, dangling mass lost),
     with the join replaced by the Arrow gather-scatter kernel."""
-    from ligra_spark.algorithms._iter import Timer, materialize
+    from ligra_spark.algorithms._iter import Timer, commit, derive, materialize
 
     n = graph.n
     if n == 0:
@@ -222,12 +222,15 @@ def pagerank_csr(
                 "rank_next"
             ),
         )
-        nxt = materialize(nxt, state)
-        l1 = nxt.agg(F.sum(F.abs(F.col("rank_next") - F.col("rank")))).first()[0]
-        state = nxt.select("id", "out_deg", F.col("rank_next").alias("rank"))
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+        nxt, got = commit(
+            nxt, state, l1=F.sum(F.abs(F.col("rank_next") - F.col("rank")))
+        )
+        l1 = float(got["l1"] or 0.0)
+        state = derive(
+            nxt.select("id", "out_deg", F.col("rank_next").alias("rank")), nxt
+        )
         if metrics is not None:
-            metrics.record(it, l1=float(l1), wall_s=timer.lap())
+            metrics.record(it, l1=l1, wall_s=timer.lap())
         if l1 < tol:
             break
     blocks.unpersist()

@@ -150,24 +150,21 @@ def kcore_bucketed(
     between occupied degree levels instead of scanning k = 1, 2, 3, …
 
     Returns ``(id, core LONG)`` over the symmetrized simple graph."""
-    from pyspark.sql import Observation
-
-    from ligra_spark.algorithms._iter import Timer, materialize
+    from ligra_spark.algorithms._iter import Timer, commit, derive
 
     g = graph.symmetrized() if not graph.symmetric else graph
-    # next_bucket's min-key job rides the state materialization as an
-    # Observation — one driver job per round total (VERDICT r03 items
-    # 3/5); the popped-bucket size rides the same action via the _a
-    # marker column (dropped from the logical state after checkpoint).
-    obs0 = Observation(f"kcb_init_{id(graph)}")
-    state = materialize(
+    # next_bucket's min-key job rides the state commit — one driver job
+    # per round total; the popped-bucket size rides the same commit via
+    # the _a marker column (dropped from the logical state after it).
+    state, got = commit(
         g.degrees.select(
             "id",
             F.col("out_deg").alias("bkt"),  # pending bucket = induced degree
             F.lit(None).cast("long").alias("core"),
-        ).observe(obs0, F.min("bkt").alias("mink"))
+        ),
+        mink=F.min("bkt"),
     )
-    k = obs0.get["mink"]
+    k = got["mink"]
     timer = Timer()
     for it in range(max_rounds):
         if k is None:
@@ -195,19 +192,11 @@ def kcore_bucketed(
                 F.col("_a"),
             )
         )
-        obs = Observation(f"kcb_{id(graph)}_{it}")
-        nxt = materialize(
-            nxt.observe(
-                obs,
-                F.min("bkt").alias("mink"),
-                F.sum(F.col("_a").isNotNull().cast("long")).alias("n_k"),
-            ),
-            state,
+        nxt, got = commit(
+            nxt, state, mink=F.min("bkt"), n_k=F.count_if(F.col("_a").isNotNull())
         )
-        n_k = int(obs.get["n_k"] or 0)
-        state = nxt.select("id", "bkt", "core")
-        state._ligra_ckpt = getattr(nxt, "_ligra_ckpt", nxt)
+        state = derive(nxt.select("id", "bkt", "core"), nxt)
         if metrics is not None:
-            metrics.record(it, k=k, peeled=n_k, wall_s=timer.lap())
-        k = obs.get["mink"]
+            metrics.record(it, k=k, peeled=got["n_k"], wall_s=timer.lap())
+        k = got["mink"]
     return state.select("id", "core")

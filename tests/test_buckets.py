@@ -65,10 +65,11 @@ def test_kcore_bucketed_path_and_clique(spark):
 
 
 def test_delta_stepping_bucket_jump_past_observation_window(spark):
-    """The per-round Observation carries exact counts only for a small
-    window of buckets past the current one; a weight that jumps the min
-    bucket far beyond it (w=50, delta=1 → +50 buckets) must hit the
-    fallback count job and still produce exact distances."""
+    """``delta_stepping`` pops the minimum occupied bucket with one
+    ``next_bucket`` call per round, so a weight that jumps the min
+    bucket far past the current one (w=50, delta=1 → +50 buckets) goes
+    straight to it, without scanning the empty buckets between, and
+    still produces exact distances."""
     edges = [
         (0, 1, 50.0),   # jump: next occupied bucket is 50
         (1, 2, 0.5),    # re-entry into the same bucket (50)
