@@ -6,8 +6,8 @@ plans: the CSR graph becomes co-partitioned ``edges``/``vertices``
 DataFrames, ``edgeMap`` becomes a join + hash-aggregation with an
 algebraic combiner, ``vertexMap``/``vertexFilter`` become columnar
 ``select``/``filter``, and the direction-optimizing scheduler
-(ligra.h:233-283) becomes a driver-side planner choosing broadcast-push
-vs partitioned-pull physical plans per iteration.
+(ligra.h:233-283) becomes a driver-side planner choosing the broadcast
+or the shuffle physical plan per iteration.
 
 Nothing here is a port: no reference code is copied; semantics are
 reproduced from the published PPoPP'13 model and verified against

@@ -109,12 +109,14 @@ def hyper_cc(
 ) -> DataFrame:
     """``(kind, id, comp)`` — comp = min vertex id in the connected
     component (hyperedges inherit it from their members)."""
-    lab_v = materialize(hg.vertices.select("id", F.col("id").alias("comp")))
+    lab_v, got = commit(
+        hg.vertices.select("id", F.col("id").alias("comp")), n=F.count(F.lit(1))
+    )
     lab_h = materialize(
         hg.hyperedges.select("id", F.lit(None).cast("long").alias("comp"))
     )
     frontier_v = lab_v.select("id")
-    n_f = None
+    n_f = got["n"]
 
     timer = Timer()
     for it in range(max_iters):
@@ -195,12 +197,15 @@ def hyper_pagerank(
             combiner="sum",
             frontier_size=nv,
         ).select("id", F.col("msg").alias("p"))
-        p_h = materialize(p_h.join(deg_h, "id").select("id", "p", "deg"))
+        p_h, got = commit(
+            p_h.join(deg_h, "id").select("id", "p", "deg"), n=F.count(F.lit(1))
+        )
         # vertexMap(PR_Reset) + hyperedgeProp + PR_Vertex_F
         gathered = hg.hyperedge_prop(
             p_h.select("id", (F.col("p") / F.col("deg")).alias("share")),
             message=F.col("share"),
             combiner="sum",
+            frontier_size=got["n"],
         ).select("id", F.col("msg").alias("gather"))
         nxt = deg_v.join(gathered, "id", "left").select(
             "id",
@@ -431,6 +436,9 @@ def hyper_bc(
     sig_h = spark.createDataFrame([], "id long, sigma double, dist int")
     frontier = sig_v
     n_f = 1
+    # frontier size per level (dist), read by the forward commits and
+    # reused as the backward pushes' frontier sizes
+    level_size: dict[int, int] = {}
     timer = Timer()
     max_vl = 0
     for it in range(10_000):
@@ -446,7 +454,7 @@ def hyper_bc(
         sig_h, got = commit(
             sig_h.unionAll(new_h), sig_h, f=F.count_if(F.col("dist") == 2 * it + 1)
         )
-        n_f = got["f"]
+        n_f = level_size[2 * it + 1] = got["f"]
         frontier = sig_h.where(F.col("dist") == 2 * it + 1)
         if n_f == 0:
             break
@@ -462,7 +470,7 @@ def hyper_bc(
         sig_v, got = commit(
             sig_v.unionAll(new_v), sig_v, f=F.count_if(F.col("dist") == 2 * it + 2)
         )
-        n_f = got["f"]
+        n_f = level_size[2 * it + 2] = got["f"]
         frontier = sig_v.where(F.col("dist") == 2 * it + 2)
         if metrics is not None:
             metrics.record(it, frontier=n_f, wall_s=timer.lap())
@@ -490,6 +498,7 @@ def hyper_bc(
             fr_v.select("id", (F.col("dep") / F.col("sigma")).alias("share")),
             message=F.col("share"),
             combiner="sum",
+            frontier_size=level_size[lv],
         )
         tgt_h = sig_h.where(F.col("dist") == lv - 1).select("id")
         dep_h = materialize(
@@ -503,6 +512,7 @@ def hyper_bc(
             fr_h.select("id", F.col("dep").alias("share")),
             message=F.col("share"),
             combiner="sum",
+            frontier_size=level_size[lv - 1],
         )
         tgt_v = sig_v.where(F.col("dist") == lv - 2)
         gain = (

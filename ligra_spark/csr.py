@@ -112,22 +112,11 @@ def build_csr_blocks(edges: DataFrame, num_partitions: int) -> DataFrame:
     return blocks.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def csr_spmv(
-    blocks: DataFrame,
-    state: DataFrame,
-    num_partitions: int,
-    combiner: str = "sum",
-) -> DataFrame:
+def csr_spmv(blocks: DataFrame, state: DataFrame, num_partitions: int) -> DataFrame:
     """One gather-scatter round: state ``(id, share)`` → per-destination
-    combines ``(id, msg)``. The cogrouped Arrow kernel pre-aggregates by
-    destination inside each partition (np.bincount for sum,
-    ufunc.at for min/max); the only exchange is the final partial
-    combine. This is the dense-pull substrate behind
-    ``edge_map(direction='pull')``."""
-    if combiner not in ("sum", "min", "max"):
-        raise ValueError(
-            f"csr_spmv supports sum/min/max combiners, not {combiner!r}"
-        )
+    sums ``(id, msg)``. The cogrouped Arrow kernel pre-aggregates by
+    destination inside each partition (np.bincount); the only exchange
+    is the final partial combine."""
 
     def kernel(blocks_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
         if blocks_pdf.empty or state_pdf.empty:
@@ -151,26 +140,18 @@ def csr_spmv(
         deg = np.diff(indptr)
         # a destination is LIVE iff it received >= 1 message from a
         # frontier source — tracked by an explicit in-edge count, NOT
-        # by the combined value (a sum can be exactly 0.0 from zero or
-        # cancelling shares; min/max messages may themselves be ±inf),
-        # so pull emits exactly the rows the push plans emit
+        # by the summed value (a sum can be exactly 0.0 from zero or
+        # cancelling shares), so the kernel emits exactly the rows the
+        # edge_map plans emit
         edge_live = np.repeat(found, deg)
         live = (
             np.bincount(inverse[edge_live], minlength=len(uniq_dsts)) > 0
         )
-        if combiner == "sum":
-            src_share = np.where(found, share[pos], 0.0)
-            # scatter: fan each src's share across its out-edges, then
-            # pre-aggregate by destination (map-side combine)
-            vals = np.repeat(src_share, deg)
-            partial = np.bincount(inverse, weights=vals, minlength=len(uniq_dsts))
-        else:
-            # min/max: fan only live sources, ufunc.at pre-combine
-            vals = np.repeat(np.where(found, share[pos], 0.0), deg)
-            fill = np.inf if combiner == "min" else -np.inf
-            partial = np.full(len(uniq_dsts), fill)
-            ufunc = np.minimum if combiner == "min" else np.maximum
-            ufunc.at(partial, inverse[edge_live], vals[edge_live])
+        src_share = np.where(found, share[pos], 0.0)
+        # scatter: fan each src's share across its out-edges, then
+        # pre-aggregate by destination (map-side combine)
+        vals = np.repeat(src_share, deg)
+        partial = np.bincount(inverse, weights=vals, minlength=len(uniq_dsts))
         return pd.DataFrame({"id": uniq_dsts[live], "partial": partial[live]})
 
     tagged_state = state.withColumn(
@@ -181,8 +162,7 @@ def csr_spmv(
         .cogroup(tagged_state.groupby("part_id"))
         .applyInPandas(kernel, MSG_SCHEMA)
     )
-    agg = {"sum": F.sum, "min": F.min, "max": F.max}[combiner]
-    return partials.groupBy("id").agg(agg("partial").alias("msg"))
+    return partials.groupBy("id").agg(F.sum("partial").alias("msg"))
 
 
 def pagerank_csr(

@@ -19,6 +19,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Scan tile shape of the Arrow top-k kernels (_scan_partition): the sims
+# tile is (QCHUNK, BLOCK) float32 — small enough that the tile + its
+# argpartition index stay in shared L3 across 32 concurrent workers (a
+# full (Q, BLOCK) tile measured ~1.4x slower under contention), and
+# small enough that no temp crosses glibc's mmap threshold.
+BLOCK = 2048
+QCHUNK = 256
+# float32 candidate slots kept per query beyond k for the float64
+# rescore (see cosine_topk_kernel for the exactness argument).
+MARGIN = 11
+# Rows per scan SCOPE in cosine_topk_parquet: files chain into one
+# _scan_partition scope (one top-kk candidate state, one Q×k emission)
+# until the scope would exceed this many retained rows, then it flushes
+# and a new scope starts. The scope's batches stay resident for the
+# float64 rescore gather, so the cap bounds task memory (1M rows =
+# 512 MB at dim=128 float32) no matter how many files a task owns;
+# within the cap, chaining amortizes the bootstrap argpartition and
+# cuts the reduce input from n_files×Q×k to n_scopes×Q×k rows.
+SCOPE_ROWS = 1 << 20
+
 
 def _as_double(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -199,25 +219,59 @@ def lsh_bucket_topk(
     )
 
 
-def _scan_partition(batches, qarrs, k, margin, block, qchunk):
+def _query_arrays(ids, vecs) -> tuple:
+    """The ``(q_ids, q_mat, q32, q_order, q_sorted)`` tuple
+    ``_scan_partition`` reads: unit-normalized float64 queries (the
+    INPUTS are normalized once, so no outer-product normalization matrix
+    materializes on the workers), their float32 copy for the scan, and
+    the id sort for self-match masking."""
+    import numpy as np
+
+    q_ids = np.asarray(ids, dtype=np.int64)
+    q_mat = np.array(vecs, dtype=np.float64)
+    q_norm = np.linalg.norm(q_mat, axis=1)
+    q_norm[q_norm == 0] = 1.0
+    q_mat /= q_norm[:, None]
+    q_order = np.argsort(q_ids)
+    return q_ids, q_mat, q_mat.astype(np.float32), q_order, q_ids[q_order]
+
+
+def _broadcast_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """Collect the query set and ship its ``_query_arrays`` as a Spark
+    BROADCAST, not inside the task closure: a closure is re-unpickled on
+    EVERY task, so at fine partition granularity the O(Q·dim) query
+    matrices become a per-task tax (~13 ms/task measured at
+    Q=2000·dim=128 — the reason a 4× finer feed measured ~0.6s SLOWER
+    on a 64-partition scan); a broadcast value is fetched once per
+    worker PROCESS and cached across tasks (worker reuse is on), so task
+    granularity can be set for scheduler load-balancing alone. On a real
+    cluster this is also the executor-count-independent way to ship a
+    query set."""
+    rows = queries.select(id_col, vec_col).collect()
+    return queries.sparkSession.sparkContext.broadcast(
+        _query_arrays([r[id_col] for r in rows], [r[vec_col] for r in rows])
+    )
+
+
+def _scan_partition(batches, qarrs, k):
     """Scan one partition's Arrow batches against the query set and
     yield its exact float64 top-k candidates — the shared kernel body
     behind ``cosine_topk_kernel`` (JVM-fed batches) and
     ``cosine_topk_parquet`` (worker-local pyarrow parquet reads).
-    ``qarrs`` is the (q_ids, q_mat, q32, q_order, q_sorted) tuple a
-    caller ships via Spark broadcast."""
+    ``qarrs`` is the ``_query_arrays`` tuple a caller ships via Spark
+    broadcast."""
     import numpy as np
     import pyarrow as pa
 
     q_ids, q_mat, q32, q_order, q_sorted = qarrs
     Q = len(q_ids)
-    kk = k + margin  # float32 candidate slots per query
+    kk = k + MARGIN  # float32 candidate slots per query
     best_s = np.full((Q, kk), -np.inf, dtype=np.float32)
     # global row position within this partition (batches retained
     # below); -1 = empty slot
     best_p = np.full((Q, kk), -1, dtype=np.int64)
-    sims_buf = np.empty((qchunk, block), dtype=np.float32)
-    mask_buf = np.empty((qchunk, block), dtype=bool)
+    sims_buf = np.empty((QCHUNK, BLOCK), dtype=np.float32)
+    mask_buf = np.empty((QCHUNK, BLOCK), dtype=bool)
     kept_ids: list[np.ndarray] = []
     kept_mat: list[np.ndarray] = []
 
@@ -247,9 +301,9 @@ def _scan_partition(batches, qarrs, k, margin, block, qchunk):
         else:
             mask_q = mask_c = None
         pos = pos0 + np.arange(nb, dtype=np.int64)
-        for q0 in range(0, Q, qchunk):
-            q1 = min(q0 + qchunk, Q)
-            if q1 - q0 == qchunk and nb == block:
+        for q0 in range(0, Q, QCHUNK):
+            q1 = min(q0 + QCHUNK, Q)
+            if q1 - q0 == QCHUNK and nb == BLOCK:
                 sims = sims_buf  # steady-state: zero allocation
             else:
                 sims = np.empty((q1 - q0, nb), dtype=np.float32)
@@ -287,7 +341,7 @@ def _scan_partition(batches, qarrs, k, margin, block, qchunk):
                 bs[:] = np.take_along_axis(cand_s, keep, axis=1)
                 bp[:] = np.take_along_axis(cand_p, keep, axis=1)
                 continue
-            if q1 - q0 == qchunk and nb == block:
+            if q1 - q0 == QCHUNK and nb == BLOCK:
                 mask = mask_buf
             else:
                 mask = np.empty((q1 - q0, nb), dtype=bool)
@@ -336,10 +390,10 @@ def _scan_partition(batches, qarrs, k, margin, block, qchunk):
         # data the task streamed in; bounded by maxPartitionBytes)
         kept_ids.append(ids_all)
         kept_mat.append(mat_all)
-        for lo in range(0, n_rows, block):
+        for lo in range(0, n_rows, BLOCK):
             fold(
-                ids_all[lo : lo + block],
-                mat_all[lo : lo + block],
+                ids_all[lo : lo + BLOCK],
+                mat_all[lo : lo + BLOCK],
                 base + lo,
             )
         base += n_rows
@@ -398,7 +452,6 @@ def cosine_topk_kernel(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _reduce: str = "window",
 ) -> DataFrame:
     """Exact top-k via an Arrow-batched numpy matmul kernel
     (``mapInArrow``) — the high-throughput variant of ``cosine_topk``.
@@ -423,7 +476,7 @@ def cosine_topk_kernel(
     (r04: 8→32-core scaling efficiency 0.79; the raw kernel measured
     0.62 at equal splits with 1.6× straggler spread, vs 0.75 and 1.3×
     in float32). Exactness is preserved by a margin + rescore step:
-    each partition keeps its top ``k + margin`` candidate ROWS per
+    each partition keeps its top ``k + MARGIN`` candidate ROWS per
     query by float32 sim, then recomputes exact float64 cosines for
     just those ``O(Q·(k+margin))`` candidates and emits its true
     float64 top-k. A float32 scan mis-orders only candidates whose
@@ -436,64 +489,22 @@ def cosine_topk_kernel(
     Caveat (ADVICE r05): corpora with EXACT duplicate vectors make
     float32 ties bit-exact, not measure-zero — the threshold prune's
     strict ``>`` can then drop a duplicate that the (sim desc, id asc)
-    exact order would keep when more than ``margin`` duplicates tie the
-    kth sim. Dedupe exact-duplicate vectors first (or raise
-    ``LIGRA_ANN_MARGIN`` past the largest duplicate-cluster size) when
-    that tie-break matters.
+    exact order would keep when more than ``MARGIN`` duplicates tie the
+    kth sim. Dedupe exact-duplicate vectors first when that tie-break
+    matters.
 
     The query broadcast lives until the returned DataFrame (whose task
     closure references it) is garbage-collected; long-lived sessions
     issuing many calls should drop references so ContextCleaner can
     reclaim the blocks."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import Window
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm[q_norm == 0] = 1.0
-    q_mat /= q_norm[:, None]  # normalize the INPUTS once: no outer-
-    # product normalization matrix materializes on the workers
-    q32 = q_mat.astype(np.float32)
-    q_order = np.argsort(q_ids)
-    q_sorted = q_ids[q_order]
-
-    # Ship the query arrays as a Spark BROADCAST, not inside the task
-    # closure: a closure is re-unpickled on EVERY task, so at fine
-    # partition granularity the O(Q·dim) query matrices become a
-    # per-task tax (~13 ms/task measured at Q=2000·dim=128 — the
-    # reason a 4× finer feed measured ~0.6s SLOWER on a 64-partition
-    # scan); a broadcast value is fetched once per worker PROCESS and
-    # cached across tasks (worker reuse is on), so task granularity
-    # can be set for scheduler load-balancing alone. On a real
-    # cluster this is also the executor-count-independent way to ship
-    # a query set.
-    bq = queries.sparkSession.sparkContext.broadcast(
-        (q_ids, q_mat, q32, q_order, q_sorted)
-    )
-
-    # Per-block working set: the sims tile is (QCHUNK, BLOCK) float32 —
-    # small enough that the tile + its argpartition index stay in
-    # shared L3 across 32 concurrent workers (a full (Q, BLOCK)
-    # tile measured ~1.4x slower under contention), and small enough
-    # that no temp crosses glibc's mmap threshold. Env-overridable for
-    # tile-size scaling experiments (bench_scaling / profiling).
-    import os as _os
-
-    BLOCK = int(_os.environ.get("LIGRA_ANN_BLOCK", "2048"))
-    QCHUNK = int(_os.environ.get("LIGRA_ANN_QCHUNK", "256"))
-    MARGIN = int(_os.environ.get("LIGRA_ANN_MARGIN", "11"))
+    bq = _broadcast_queries(queries, id_col, vec_col)
 
     def kernel(batches):
-        yield from _scan_partition(batches, bq.value, k, MARGIN, BLOCK, QCHUNK)
+        yield from _scan_partition(batches, bq.value, k)
 
     candidates = corpus.select(id_col, vec_col).mapInArrow(
         kernel, "query_id long, neighbor_id long, sim double"
     )
-    if _reduce == "none":  # candidate stream, for profiling/custom merge
-        return candidates
     return _topk_reduce(candidates, k)
 
 
@@ -518,7 +529,6 @@ def cosine_topk_parquet(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _reduce: str = "window",
 ) -> DataFrame:
     """``cosine_topk_kernel`` with a storage-direct feed: Spark
     distributes the corpus's parquet FILES as tasks and each Python
@@ -538,10 +548,7 @@ def cosine_topk_parquet(
     self-match masking and the float32-scan + float64-rescore contract
     are identical to ``cosine_topk_kernel`` — both feed the same
     ``_scan_partition`` kernel (pytest pins path parity)."""
-    import os as _os
     from pathlib import Path
-
-    import numpy as np
 
     spark = queries.sparkSession
     files = sorted(
@@ -549,32 +556,7 @@ def cosine_topk_parquet(
     ) or sorted(str(p) for p in Path(corpus_path).glob("**/*.parquet"))
     if not files:
         raise ValueError(f"no parquet files under {corpus_path}")
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm[q_norm == 0] = 1.0
-    q_mat /= q_norm[:, None]
-    q32 = q_mat.astype(np.float32)
-    q_order = np.argsort(q_ids)
-    bq = spark.sparkContext.broadcast(
-        (q_ids, q_mat, q32, q_order, q_ids[q_order])
-    )
-
-    BLOCK = int(_os.environ.get("LIGRA_ANN_BLOCK", "2048"))
-    QCHUNK = int(_os.environ.get("LIGRA_ANN_QCHUNK", "256"))
-    MARGIN = int(_os.environ.get("LIGRA_ANN_MARGIN", "11"))
-
-    # Rows per scan SCOPE: files chain into one _scan_partition scope
-    # (one top-kk candidate state, one Q×k emission) until the scope
-    # would exceed this many retained rows, then it flushes and a new
-    # scope starts. The scope's batches stay resident for the float64
-    # rescore gather, so the cap bounds task memory (default 1M rows =
-    # 512 MB at dim=128 float32) no matter how many files a task owns;
-    # within the cap, chaining amortizes the bootstrap argpartition and
-    # cuts the reduce input from n_files×Q×k to n_scopes×Q×k rows.
-    SCOPE_ROWS = int(_os.environ.get("LIGRA_ANN_SCOPE_ROWS", str(1 << 20)))
+    bq = _broadcast_queries(queries, id_col, vec_col)
 
     def kernel(batches):
         import pyarrow.parquet as papq
@@ -611,9 +593,7 @@ def cosine_topk_parquet(
                     yield rb.select([id_col, vec_col])
 
         for pfs in scopes():
-            yield from _scan_partition(
-                scope_batches(pfs), bq.value, k, MARGIN, BLOCK, QCHUNK
-            )
+            yield from _scan_partition(scope_batches(pfs), bq.value, k)
 
     # Scan-task count: every local Python stage pays a serialized
     # ~10 ms/task launch cost (measured: a no-op mapInArrow over
@@ -645,8 +625,6 @@ def cosine_topk_parquet(
     candidates = fdf.mapInArrow(
         kernel, "query_id long, neighbor_id long, sim double"
     )
-    if _reduce == "none":
-        return candidates
     return _topk_reduce(candidates, k)
 
 

@@ -147,8 +147,6 @@ class Graph:
         symmetric: bool = False,
         dedupe: bool = False,
         num_partitions: int | str | None = None,
-        persist: bool = True,
-        truncate: bool | str = "auto",
         closure_key: str | None = None,
         validated_closure: bool = False,
     ) -> None:
@@ -188,10 +186,8 @@ class Graph:
         # truncation happens BEFORE the repartition so the persisted
         # orientations keep their hash-partitioning metadata.
         self._edges_ckpt: DataFrame | None = None
-        if truncate == "auto":
-            plan_lines = edges._jdf.queryExecution().analyzed().toString().count("\n")
-            truncate = persist and plan_lines > 24
-        if truncate:
+        plan_lines = edges._jdf.queryExecution().analyzed().toString().count("\n")
+        if plan_lines > 24:
             from ligra_spark.algorithms._iter import materialize
 
             edges = materialize(edges)
@@ -219,9 +215,7 @@ class Graph:
             # validate_closure() group-level check
             self._closed_keyed = edges
             ce = edges.repartition(num_partitions, closure_key).select(cols)
-            if persist:
-                ce.persist(StorageLevel.MEMORY_AND_DISK)
-            self.closed_edges = ce
+            self.closed_edges = ce.persist(StorageLevel.MEMORY_AND_DISK)
             # orientations below derive from the persisted closed table
             # so the upstream derivation runs exactly once
             edges = ce
@@ -239,16 +233,18 @@ class Graph:
         self.edges_derived = edges.select(cols)
 
         # Out-CSR analog: partitioned by src so state⋈edges is local.
-        self.edges_by_src = edges.repartition(num_partitions, "src").select(cols)
-        if persist:
-            self.edges_by_src.persist(StorageLevel.MEMORY_AND_DISK)
+        self.edges_by_src = (
+            edges.repartition(num_partitions, "src")
+            .select(cols)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         # In-CSR analog (IO.h:235-309): built once, partitioned by dst so
         # the message groupBy(dst) after a broadcast join is exchange-free.
         # Derived from the cached out-orientation so the upstream edge
         # derivation (windows/joins over transcripts) runs exactly once.
-        self.edges_by_dst = self.edges_by_src.repartition(num_partitions, "dst")
-        if persist:
-            self.edges_by_dst.persist(StorageLevel.MEMORY_AND_DISK)
+        self.edges_by_dst = self.edges_by_src.repartition(
+            num_partitions, "dst"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
         self._degrees: DataFrame | None = None
         self._vertices: DataFrame | None = None
@@ -363,19 +359,6 @@ class Graph:
         """Single-partition closed view for the local-kernel dispatch."""
         return _LocalClosedView(self)
 
-    def csr_blocks(self) -> DataFrame:
-        """Partition-local CSR blocks in Arrow batches (built lazily,
-        persisted) — the dense-pull substrate for
-        ``edge_map(direction='pull')``; see csr.py."""
-        if getattr(self, "_csr_blocks", None) is None:
-            from ligra_spark.csr import build_csr_blocks
-
-            self._csr_blocks = build_csr_blocks(
-                self.edges_by_src, self.num_partitions
-            )
-            self._csr_blocks.count()
-        return self._csr_blocks
-
     # -- derived graphs ---------------------------------------------------
     def symmetrized(self) -> "Graph":
         """Undirected view: union of edges and reversed edges, deduped —
@@ -455,7 +438,5 @@ class Graph:
         ):
             if df is not None:
                 df.unpersist()
-        if getattr(self, "_csr_blocks", None) is not None:
-            self._csr_blocks.unpersist()
         if self._edges_ckpt is not None:
             _unp(self._edges_ckpt)

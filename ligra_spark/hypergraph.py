@@ -57,7 +57,6 @@ class Hypergraph:
         *,
         directed: bool = False,
         num_partitions: int | None = None,
-        persist: bool = True,
     ) -> None:
         wcols = [F.col("w")] if "w" in incidence.columns else []
         fwd_rows = incidence.where(F.col("d") == 0) if directed else incidence
@@ -68,7 +67,6 @@ class Hypergraph:
                 F.col("v").alias("src"), F.col("h").alias("dst"), *wcols
             ),
             num_partitions=num_partitions,
-            persist=persist,
             dedupe=False,
         )
         if directed:
@@ -77,7 +75,6 @@ class Hypergraph:
                     F.col("h").alias("src"), F.col("v").alias("dst"), *wcols
                 ),
                 num_partitions=num_partitions,
-                persist=persist,
                 dedupe=False,
             )
         else:

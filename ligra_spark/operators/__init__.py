@@ -7,7 +7,6 @@ from ligra_spark.operators.edge_map import (
     COMBINERS,
     edge_map,
     edge_map_count,
-    frontier_stats,
 )
 from ligra_spark.operators.vertex_ops import vertex_filter, vertex_map
 
@@ -16,7 +15,6 @@ __all__ = [
     "delta_stepping",
     "edge_map",
     "edge_map_count",
-    "frontier_stats",
     "kcore_bucketed",
     "next_bucket",
     "vertex_filter",

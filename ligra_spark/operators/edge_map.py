@@ -14,24 +14,23 @@ aggregation — ``groupBy(dst).agg(combiner(message))`` — so the operator
 is a join + aggregation whose *physical strategy* is the direction
 choice:
 
-- **push / broadcast plan** (small frontier): broadcast the frontier and
+- **broadcast plan** (small frontier): broadcast the frontier and
   probe the ``dst``-partitioned edge table. The join preserves the edge
   table's hash partitioning on ``dst``, so the message aggregation needs
   **no exchange at all** — a zero-shuffle iteration. (Cost: a full scan
   of the cached columnar edge table, which whole-stage codegen makes
-  cheap; a CSR-indexed sparse gather is the planned Arrow-kernel
-  refinement.)
-- **pull / co-partitioned plan** (large or whole-vertex frontier): join
-  frontier state (hash-partitioned on ``id`` — which iteration output
-  already is, since it came out of a ``groupBy(dst)``) against the
-  ``src``-partitioned edge table exchange-free, then shuffle only the
-  partially-aggregated messages into ``groupBy(dst)``. One bounded
+  cheap.)
+- **shuffle / co-partitioned plan** (large or whole-vertex frontier):
+  join frontier state (hash-partitioned on ``id`` — which iteration
+  output already is, since it came out of a ``groupBy(dst)``) against
+  the ``src``-partitioned edge table exchange-free, then shuffle only
+  the partially-aggregated messages into ``groupBy(dst)``. One bounded
   exchange per iteration; the edge table never moves.
 
 Skew: hub destinations are handled by Spark's partial (map-side)
 aggregation — each task pre-combines its messages per ``dst`` before the
-exchange — plus AQE skew handling; ``salt_partitions`` forces an
-explicit two-level salted aggregate for pathological hubs.
+exchange, so a hub costs one partial row per map task, not one row per
+in-edge — plus AQE skew handling.
 """
 
 from __future__ import annotations
@@ -59,19 +58,7 @@ COMBINERS = {
 # of shuffling messages (the m/20 analog, retuned for shuffle cost).
 DEFAULT_BROADCAST_ROWS = 2_000_000
 
-
-def frontier_stats(graph: Graph, frontier: DataFrame) -> tuple[int, int]:
-    """(size, Σ out_degree) of the frontier — the quantities Ligra's
-    scheduler compares against m/20 (ligra.h:248-261)."""
-    row = (
-        frontier.join(graph.degrees, "id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("size"),
-            F.coalesce(F.sum("out_deg"), F.lit(0)).alias("outdeg"),
-        )
-        .first()
-    )
-    return int(row["size"]), int(row["outdeg"])
+DIRECTIONS = ("auto", "broadcast", "shuffle")
 
 
 def edge_map(
@@ -82,8 +69,6 @@ def edge_map(
     *,
     direction: str = "auto",
     frontier_size: int | None = None,
-    broadcast_rows: int = DEFAULT_BROADCAST_ROWS,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """Gather ``message`` along every out-edge of ``frontier`` and
     combine per destination.
@@ -96,15 +81,8 @@ def edge_map(
         ``w``.
     message : Column expression evaluated per live edge.
     combiner : one of COMBINERS — the ``updateAtomic`` analog.
-    direction : 'auto' | 'broadcast' | 'shuffle' | 'pull'.
-        'pull' routes through the per-partition Arrow CSR SpMV kernel
-        (the edgeMapDense analog) and is RESTRICTED: ``message`` must
-        be a pure per-source expression (no ``dst``/``w`` references)
-        and ``combiner`` one of sum/min/max. 'auto' never selects it
-        in local mode — the per-round Arrow state transfer measured ~2x
-        slower than the JVM push plans there; it exists for API parity
-        and for cluster profiles where the JVM join is shuffle-bound.
-    frontier_size : pass a known size to skip the stats job in 'auto'.
+    direction : one of DIRECTIONS; 'auto' picks by the m/20 rule.
+    frontier_size : pass a known size to skip the count job in 'auto'.
 
     Returns ``(id, msg)`` — one row per destination that received at
     least one message (the new-frontier candidate set; ``cond``/apply
@@ -112,31 +90,10 @@ def edge_map(
     """
     if combiner not in COMBINERS:
         raise ValueError(f"unknown combiner {combiner!r}; use {sorted(COMBINERS)}")
+    if direction not in DIRECTIONS:
+        raise ValueError(f"unknown direction {direction!r}; use {DIRECTIONS}")
     agg = COMBINERS[combiner]
     msg_col = F.col(message) if isinstance(message, str) else message
-
-    if direction == "pull":
-        # Dense-pull plan (ligra.h:58-82 / decodeInNghBreakEarly): the
-        # per-partition Arrow CSR kernel gathers frontier values and
-        # pre-combines per destination; only partials shuffle. The
-        # message must be a pure function of the frontier row (per-source
-        # value) — edge-weight messages stay on the push plans.
-        # Measured note (sf0.1, local[32]): the JVM push plans beat this
-        # by ~2x because every round pays a full state Arrow transfer
-        # into Python workers; 'auto' therefore never picks pull in
-        # local mode — it exists for API parity and for cluster profiles
-        # where the JVM join is shuffle-bound rather than CPU-bound.
-        from ligra_spark.csr import csr_spmv
-
-        fr = graph.vertices if frontier is None else frontier
-        # expose the frontier id under both names so message exprs
-        # written against "src" (push convention) also resolve
-        vals = fr.withColumn("src", F.col("id")).select(
-            "id", msg_col.alias("share")
-        )
-        return csr_spmv(
-            graph.csr_blocks(), vals, graph.num_partitions, combiner=combiner
-        )
 
     if frontier is None:
         # Whole-vertex-set frontier: always the co-partitioned plan.
@@ -153,7 +110,7 @@ def edge_map(
             # huge frontier costs more than one bounded message shuffle
             chosen = (
                 "broadcast"
-                if frontier_size <= broadcast_rows
+                if frontier_size <= DEFAULT_BROADCAST_ROWS
                 and frontier_size * 20 <= graph.m
                 else "shuffle"
             )
@@ -165,16 +122,6 @@ def edge_map(
             live = graph.edges_by_src.join(fr, "src", "inner")
 
     msgs = live.select(F.col("dst").alias("id"), msg_col.alias("_m"))
-    if salt_partitions > 1 and combiner in ("sum", "count", "min", "max", "bit_or"):
-        # Explicit two-level aggregate for hub skew: partial combine per
-        # (id, salt), then final combine per id. `count` partials become
-        # sums at the second level.
-        salted = msgs.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt_partitions))
-        )
-        partial = salted.groupBy("id", "_salt").agg(agg(F.col("_m")).alias("_p"))
-        second = F.sum if combiner in ("sum", "count") else COMBINERS[combiner]
-        return partial.groupBy("id").agg(second(F.col("_p")).alias("msg"))
     return msgs.groupBy("id").agg(agg(F.col("_m")).alias("msg"))
 
 

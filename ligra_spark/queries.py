@@ -1629,7 +1629,7 @@ def q_pagerank_delta_iter1_events(spark, sf_dir):
 
 def q_pagerank_csr_iter1_events(spark, sf_dir):
     """One round through the Arrow CSR SpMV kernel (partition-local
-    gather-scatter) — verifies the dense-pull substrate value-for-value
+    gather-scatter) — verifies the CSR kernel value-for-value
     against the same DuckDB closed form as the join plan."""
     g = _events_graph(spark, sf_dir)
     return pagerank_csr(g, max_iters=1).select(

@@ -7,7 +7,6 @@ import numpy as np
 
 from conftest import CHAIN_64, STAR_HUB, TWO_COMPONENTS
 from ligra_spark.csr import build_csr_blocks, csr_spmv, pagerank_csr
-from ligra_spark.graph import Graph
 from oracles import pagerank_oracle
 from pyspark.sql import functions as F
 
@@ -62,82 +61,4 @@ def test_pagerank_csr_parity(spark, mk_graph):
     assert np.allclose(
         [got[k] for k in keys], [want[k] for k in keys], atol=1e-6
     )
-    g.unpersist()
-
-
-def test_edge_map_pull_matches_push(spark):
-    """direction='pull' (Arrow CSR gather) produces identical messages
-    to the push plans, for sum and min combiners."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from ligra_spark.graph import Graph
-    from ligra_spark.operators import edge_map
-
-    rng = np.random.default_rng(3)
-    edges = [
-        (int(a), int(b))
-        for a, b in rng.integers(0, 60, size=(400, 2))
-        if a != b
-    ]
-    g = Graph(spark.createDataFrame(edges, "src long, dst long"),
-              dedupe=True, num_partitions=4)
-    frontier = g.degrees.select("id", (F.col("id") % 7 + 1).cast("double").alias("x"))
-    for comb in ("sum", "min"):
-        push = {
-            (r["id"]): r["msg"]
-            for r in edge_map(g, frontier, message=F.col("x"), combiner=comb,
-                              direction="shuffle").collect()
-        }
-        pull = {
-            (r["id"]): r["msg"]
-            for r in edge_map(g, frontier, message=F.col("x"), combiner=comb,
-                              direction="pull").collect()
-        }
-        assert push.keys() == pull.keys()
-        for k in push:
-            assert abs(push[k] - pull[k]) < 1e-9, (comb, k)
-    g.unpersist()
-
-
-def test_edge_map_pull_src_message(spark):
-    """message='src' (hash-min CC shape) resolves on the pull plan."""
-    from ligra_spark.graph import Graph
-    from ligra_spark.operators import edge_map
-
-    g = Graph(spark.createDataFrame([(5, 1), (7, 1), (5, 2)], "src long, dst long"),
-              num_partitions=2)
-    got = {r["id"]: r["msg"] for r in
-           edge_map(g, None, message="src", combiner="min", direction="pull").collect()}
-    assert got == {1: 5, 2: 5}
-    g.unpersist()
-
-
-def test_edge_map_pull_zero_share_destinations(spark):
-    """A destination whose messages sum to exactly 0.0 (zero shares, or
-    cancelling +x/-x) must still be emitted — 'one row per destination
-    that received at least one message' is membership, not value."""
-    from pyspark.sql import functions as F
-    from ligra_spark.graph import Graph
-    from ligra_spark.operators import edge_map
-
-    # dst 1 gets 0.0 from src 5; dst 2 gets +3 and -3 (cancel); dst 3
-    # gets 1.0 (control)
-    g = Graph(
-        spark.createDataFrame(
-            [(5, 1), (6, 2), (7, 2), (8, 3)], "src long, dst long"
-        ),
-        num_partitions=2,
-    )
-    frontier = spark.createDataFrame(
-        [(5, 0.0), (6, 3.0), (7, -3.0), (8, 1.0)], "id long, x double"
-    )
-    for direction in ("pull", "shuffle"):
-        got = {
-            r["id"]: r["msg"]
-            for r in edge_map(
-                g, frontier, message=F.col("x"), combiner="sum",
-                direction=direction,
-            ).collect()
-        }
-        assert got == {1: 0.0, 2: 0.0, 3: 1.0}, direction
     g.unpersist()

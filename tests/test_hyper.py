@@ -244,3 +244,32 @@ def test_hyper_kcore_bucketed_matches_plain(hg):
     plain = {r.id: r.core for r in hyper_kcore(hg).collect()}
     bucketed = {r.id: r.core for r in hyper_kcore_bucketed(hg).collect()}
     assert bucketed == plain
+
+
+def test_hyper_loops_pass_frontier_sizes(hg, monkeypatch):
+    """hyper_cc, hyper_pagerank and hyper_bc take every edge_map
+    frontier size from a commit the loop already runs, so edge_map never
+    pays its own frontier.count() job."""
+    import importlib
+
+    from ligra_spark.algorithms import hyper_bc
+
+    em = importlib.import_module("ligra_spark.operators.edge_map")
+    real = em.edge_map
+    calls, unsized = [], []
+
+    def spy(graph, frontier, *args, **kw):
+        calls.append(current)
+        if frontier is not None and kw.get("frontier_size") is None:
+            unsized.append(current)
+        return real(graph, frontier, *args, **kw)
+
+    monkeypatch.setattr(em, "edge_map", spy)
+    for current, run in (
+        ("hyper_cc", lambda: hyper_cc(hg)),
+        ("hyper_pagerank", lambda: hyper_pagerank(hg, max_iters=2)),
+        ("hyper_bc", lambda: hyper_bc(hg, 0)),
+    ):
+        run().collect()
+        assert current in calls
+    assert unsized == []

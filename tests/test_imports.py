@@ -9,8 +9,10 @@ algorithms/__init__ -> setcover -> back into the half-initialized
 buckets). Subprocesses are the only honest check.
 """
 
+import re
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -54,3 +56,24 @@ def test_auto_partitions_sizing():
     assert _auto_partitions(486_000, 32) == 32  # capped at the session
     assert _auto_partitions(10**9, 32) == 32
     assert _auto_partitions(10**9, 256) == 256
+
+
+def test_library_env_reads():
+    """The library reads only deployment settings plus the one backend
+    cap the benchmark sets: a measured tuning value is a module
+    constant with its measurement in a comment, never an env knob."""
+    root = Path(__file__).resolve().parent.parent / "ligra_spark"
+    names = set()
+    for path in root.rglob("*.py"):
+        for arg in re.findall(
+            r"(?:environ(?:\.get\(|\[)|getenv\()\s*([^,)\]]+)", path.read_text()
+        ):
+            m = re.fullmatch(r"[\"']([A-Z0-9_]+)[\"']\s*", arg)
+            assert m, f"{path.name}: env read with a non-literal name {arg!r}"
+            names.add(m.group(1))
+    assert names == {
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_PRETOUCH",
+        "LIGRA_LOCAL_GRAPH_EDGES",
+    }

@@ -1,12 +1,14 @@
-"""Operator-level contracts: edge_map_count semantics (both grouping
-sides), pack_edges, vertex_map/vertex_filter."""
+"""Operator-level contracts: edge_map's destination membership and
+direction check, edge_map_count semantics (both grouping sides),
+pack_edges, vertex_map/vertex_filter."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ligra_spark.graph import Graph
-from ligra_spark.operators import edge_map_count, vertex_filter, vertex_map
+from ligra_spark.operators import edge_map, edge_map_count, vertex_filter, vertex_map
 
 # star: 0 -> 1,2,3 ; chain: 1 -> 2 -> 3 ; weights = dst
 EDGES = [(0, 1, 1.0), (0, 2, 2.0), (0, 3, 3.0), (1, 2, 2.0), (2, 3, 3.0)]
@@ -46,6 +48,44 @@ def test_edge_map_count_none_frontier_is_degree(spark):
     g = _g(spark)
     got = {r["id"]: r["cnt"] for r in edge_map_count(g, None, by="src").collect()}
     assert got == {0: 3, 1: 1, 2: 1}
+    g.unpersist()
+
+
+def test_edge_map_zero_share_destinations(spark):
+    """A destination whose messages sum to exactly 0.0 (zero shares, or
+    cancelling +x/-x) must still be emitted — 'one row per destination
+    that received at least one message' is membership, not value."""
+    # dst 1 gets 0.0 from src 5; dst 2 gets +3 and -3 (cancel); dst 3
+    # gets 1.0 (control)
+    g = Graph(
+        spark.createDataFrame(
+            [(5, 1), (6, 2), (7, 2), (8, 3)], "src long, dst long"
+        ),
+        num_partitions=2,
+    )
+    frontier = spark.createDataFrame(
+        [(5, 0.0), (6, 3.0), (7, -3.0), (8, 1.0)], "id long, x double"
+    )
+    for direction in ("shuffle", "broadcast"):
+        got = {
+            r["id"]: r["msg"]
+            for r in edge_map(
+                g, frontier, message=F.col("x"), combiner="sum",
+                direction=direction,
+            ).collect()
+        }
+        assert got == {1: 0.0, 2: 0.0, 3: 1.0}, direction
+    g.unpersist()
+
+
+def test_edge_map_rejects_unknown_direction(spark):
+    """An unknown direction raises, as an unknown combiner does, instead
+    of silently running the shuffle plan."""
+    g = _g(spark)
+    frontier = spark.createDataFrame([(0,)], "id long")
+    for direction in ("sideways", "pull"):
+        with pytest.raises(ValueError, match="unknown direction"):
+            edge_map(g, frontier, direction=direction, frontier_size=1)
     g.unpersist()
 
 

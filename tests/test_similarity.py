@@ -93,10 +93,10 @@ def test_parquet_scan_matches_kernel_and_exact(spark, tmp_path):
     assert par == ker == ref
 
 
-def test_kernel_duplicate_heavy_corpus(spark, tmp_path, monkeypatch):
+def test_kernel_duplicate_heavy_corpus(spark, tmp_path):
     """ADVICE r05 caveat, pinned: corpora with EXACT duplicate vectors
-    make float32 ties bit-exact; with margin >= the largest duplicate
-    cluster the kernel's threshold prune still emits the exact
+    make float32 ties bit-exact; with MARGIN (11) above the largest
+    duplicate cluster (6) the kernel's threshold prune still emits the exact
     (sim desc, id asc) top-k. Also exercises the r06 scope chaining
     (multiple small files per task) on a tie-heavy input."""
     import numpy as np
@@ -120,7 +120,6 @@ def test_kernel_duplicate_heavy_corpus(spark, tmp_path, monkeypatch):
     pq_emb = spark.read.parquet(path)
     queries = pq_emb.orderBy("vec_id").limit(7)
 
-    monkeypatch.setenv("LIGRA_ANN_MARGIN", "8")  # > duplicate cluster (6)
     ref = sorted(tuple(r) for r in cosine_topk(pq_emb, queries, k=5).collect())
     par = sorted(
         tuple(r) for r in cosine_topk_parquet(path, queries, k=5).collect()

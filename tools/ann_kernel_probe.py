@@ -35,6 +35,8 @@ def _load_queries(f0: str, n_q: int = 2000):
     import numpy as np
     import pyarrow.parquet as papq
 
+    from ligra_spark.functions.similarity import _query_arrays
+
     b = next(
         papq.ParquetFile(f0).iter_batches(
             batch_size=1 << 16, columns=["vec_id", "embedding"],
@@ -46,13 +48,7 @@ def _load_queries(f0: str, n_q: int = 2000):
         b.column(1).flatten().to_numpy(zero_copy_only=False)
         .reshape(b.num_rows, -1)
     )
-    q_ids = ids[:n_q]
-    q_mat = mat[:n_q].astype(np.float64)
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn[qn == 0] = 1.0
-    q_mat /= qn[:, None]
-    order = np.argsort(q_ids)
-    return (q_ids, q_mat, q_mat.astype(np.float32), order, q_ids[order])
+    return _query_arrays(ids[:n_q], mat[:n_q])
 
 
 def _worker(files: list[str], qarrs, offset: int, q: "mp.Queue") -> None:
@@ -74,7 +70,7 @@ def _worker(files: list[str], qarrs, offset: int, q: "mp.Queue") -> None:
                 use_threads=False,
             )
         )
-        list(_scan_partition(it, qarrs, 5, 11, 2048, 256))
+        list(_scan_partition(it, qarrs, 5))
         done += 1
     q.put((done, time.perf_counter() - t0))
 

@@ -4,7 +4,8 @@
 Same question as host_capacity_probe.py (per-vCPU speed at partial vs
 full occupancy) but for the instruction mix that actually bounds the
 ann_kernel scan: single-threaded OpenBLAS float32 GEMM at the kernel's
-own tile shapes ((QCHUNK,dim) @ (dim,BLOCK) = (256,128)@(128,2048)).
+own tile shapes ((QCHUNK,dim) @ (dim,BLOCK), read from
+ligra_spark.functions.similarity; dim = 128 as in the bench corpus).
 If aggregate GFLOP/s at 32 procs is ~2x the 8-proc level instead of
 4x, the box's 32 vCPUs share ~16 cores' worth of FPU (host-side SMT /
 oversubscription, invisible to the guest's lscpu) and no engine change
@@ -22,11 +23,16 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 
-QCHUNK, DIM, BLOCK = 256, 128, 2048
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from ligra_spark.functions.similarity import BLOCK, QCHUNK  # noqa: E402
+
+DIM = 128
 FLOP_PER_REP = 2 * QCHUNK * DIM * BLOCK
 
 
