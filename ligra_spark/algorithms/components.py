@@ -1,4 +1,4 @@
-"""Connected components — hash-min label propagation.
+"""Connected components — the min-id fixpoint of Components.C.
 
 Reference: apps/Components.C — every vertex's label starts as its own
 id (Components.C:56); each round frontier vertices push their label and
@@ -6,32 +6,30 @@ each destination keeps the minimum (writeMin, Components.C:38); a vertex
 re-enters the frontier iff its label changed this round
 (Components.C:34-38); fixpoint when the frontier empties
 (Components.C:62-67). At fixpoint every vertex holds the **minimum
-vertex id of its component** — an exact, deterministic output.
+vertex id of its component** — an exact, deterministic output. Every
+backend below computes that output; only the schedule differs.
 
-Acceleration (identical fixpoint, far fewer rounds):
-
-- ``contract=True`` adds per-round **group-min contraction**: every
-  vertex whose *old* label was L adopts the best label discovered by
-  anyone in L's group this round (``groupBy(comp).min`` + join back) —
-  the star-contraction idea from the MapReduce-WCC literature. Plain
-  hash-min needs O(diameter) rounds (ruinous on 10^12-turn
-  conversation chains, where per-round Spark job overhead dominates);
-  contraction empirically converges in O(log) rounds on the transcript
-  graphs (6 rounds vs 40 at sf0.01) and each extra step is
-  label-table-sized, never edge-sized.
-- ``jumps`` chained pointer-jump hops per round
-  (``IDs[i] = IDs[IDs[i]]``, Components-Shortcut.C:30-42); hops are
-  materialized individually — a lazily chained k-hop plan would embed
-  2^k copies of the relax subplan (each self-join doubles the tree).
-
-``shortcut=True`` is the single-hop Components-Shortcut.C behavior
-(kept for parity testing). All variants produce byte-identical final
-labels; only round counts differ.
+- Under the local cap or with a closure key: one Shiloach–Vishkin
+  Arrow pass (closed.py, chosen in dispatch.py).
+- Undirected, above the cap: partition-local contraction
+  (``_contract``, the loop behind ``cc_contract_local``), one Arrow
+  kernel pass and one window shuffle per round.
+- Directed labels (``symmetrize=False`` on an asymmetric graph), a
+  checkpointer, partial labels (``max_iters`` below the default) and
+  the contraction's stall fallback: the hash-min rounds
+  (``_hash_min``). ``contract`` adds per-round **group-min
+  contraction** (a vertex whose old label was L adopts the best label
+  anyone in L's group found: 6 rounds against plain hash-min's 40 on
+  the sf0.01 transcript chains); ``jumps`` chains pointer-jump hops
+  (``IDs[i] = IDs[IDs[i]]``, Components-Shortcut.C:30-42), each
+  materialized on its own, as a lazily chained k-hop plan would embed
+  2^k copies of the relax subplan. ``contract=False, jumps=0`` is
+  Components.C's plain scheme, ``jumps=1`` Components-Shortcut.C's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import (
@@ -43,7 +41,7 @@ from ligra_spark.algorithms._iter import (
     unpersist,
 )
 from ligra_spark.algorithms.closed import _cc_kernel, connected_components_closed
-from ligra_spark.algorithms.dispatch import choose_backend
+from ligra_spark.algorithms.dispatch import OVER_CAP, choose_backend
 from ligra_spark.graph import Graph
 from ligra_spark.operators.edge_map import edge_map
 
@@ -51,31 +49,14 @@ from ligra_spark.operators.edge_map import edge_map
 def connected_components(
     graph: Graph,
     symmetrize: bool = True,
-    shortcut: bool = False,
-    jumps: int | None = None,
-    contract: bool = True,
     max_iters: int = 1000,
     metrics: IterMetrics | None = None,
     checkpointer=None,
 ) -> DataFrame:
-    """Returns ``(id LONG, comp LONG)`` — comp = min id in component."""
-    if jumps is None:
-        # contract default 2 (was 1), measured on the sf0.1 events
-        # chains at local[32]: rounds 7→5 and wall 7.3→6.8s (jumps=3:
-        # 4 rounds / 6.1s but each hop is an extra vertex-sized
-        # materialization per round — on short-diameter graphs (rMat:
-        # 4 rounds at any jump count) extra hops are pure cost, so 2
-        # is the balance). shortcut stays 1 = Components-Shortcut.C
-        # parity.
-        jumps = (1 if shortcut else 2) if (shortcut or contract) else 0
-    # The fused kernel (dispatch.py) runs one Shiloach–Vishkin Arrow
-    # pass to the fixpoint, replacing the multi-round hash-min loop
-    # (each round ~0.5s of driver orchestration at small scale). It is
-    # direction-agnostic, i.e. symmetrized, and cannot stop early: a
-    # max_iters below the default asks for PARTIAL labels. Output is
-    # the identical min-id fixpoint; shortcut/jumps/contract only
-    # change round schedules, never the labels (module docstring).
-    _, _, view = choose_backend(
+    """Returns ``(id LONG, comp LONG)`` — comp = min id in component.
+    Checkpointed and partial (``max_iters`` below the default) calls run
+    the hash-min rounds: the kernels can neither resume nor stop early."""
+    _, reason, view = choose_backend(
         graph,
         eligible=checkpointer is None
         and max_iters >= 1000
@@ -84,6 +65,26 @@ def connected_components(
     )
     if view is not None:
         return connected_components_closed(view, metrics=metrics)
+    if reason == OVER_CAP:
+        # rmat-dist (29,932 edges, 4 cores): 1 round and 5 jobs here
+        # against 4 rounds and 73 jobs of hash-min, 0.73 s vs 4.0 s
+        return _contract(graph.edges_derived, metrics=metrics)
+    return _hash_min(
+        graph, symmetrize, max_iters=max_iters, metrics=metrics,
+        checkpointer=checkpointer,
+    )
+
+
+def _hash_min(
+    graph: Graph, symmetrize: bool = True, *, contract: bool = True,
+    jumps: int = 2, max_iters: int = 1000,
+    metrics: IterMetrics | None = None, checkpointer=None,
+) -> DataFrame:
+    """The Components.C label rounds (module docstring). Two jumps on
+    the sf0.1 events chains at local[32]: 5 rounds / 6.8 s against one
+    jump's 7 / 7.3 s; three gave 4 / 6.1 s, but each hop is a
+    vertex-sized materialization, pure cost on short-diameter graphs
+    (rMat: 4 rounds at any jump count)."""
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
     state = g.vertices.select("id", F.col("id").alias("comp"))
@@ -161,27 +162,25 @@ def cc_contract_local(
     mappings smallest-first, so all but one join are residual-sized
     (broadcast-able), then one vertex-sized join.
 
-    Why this wins at scale: the hash-min loop shuffles edge-sized
-    message + state tables ~5× per round for O(log) rounds; here the
-    edge table is never shuffled at all (the kernel runs in place) and
-    everything after round 1 is sized by the *unresolved couplings*,
-    which for locality-preserving partitionings is near zero. In
-    particular, edges derived per-conversation (derive_edges keeps the
-    transcript window's conv_id partitioning) contract completely in
-    1-2 rounds, because no edge crosses a conversation. Pass ``edges``
-    to choose the partitioning the kernel exploits (default: the
-    graph's as-derived edge table; direction is irrelevant to
-    union-find, so the symmetrized orientation is never built).
+    Why this wins at scale: hash-min shuffles edge-sized message and
+    state tables ~5× per round; here the edge table is never shuffled
+    (the kernel runs in place) and every later round is sized by the
+    *unresolved couplings*, near zero for locality-preserving layouts:
+    per-conversation edges (derive_edges) contract in 1-2 rounds, as
+    no edge crosses a conversation. ``edges`` picks the partitioning
+    the kernel exploits (default: the graph's as-derived table;
+    union-find ignores direction, so no symmetrized copy is built).
 
-    Degenerate case: a long path whose edges are scattered with no
-    locality contracts by only a constant per round (the residual of a
-    path is again a path, and random partitions co-locate few adjacent
-    edges). When the residual shrinks by less than ``stall_ratio`` per
-    round, the loop hands the *contracted* residual graph — usually
-    orders of magnitude smaller than the input — to the hash-min
-    ``connected_components`` fixpoint, whose groupBy-contraction +
-    pointer jumps converge in O(log) rounds regardless of layout; its
-    labels append to the mapping chain like any other round.
+    Degenerate case, measured on 4 cores: a 20k-vertex path with
+    shuffled ids and edge order (39,998 edges). With AQE coalescing on
+    (get_spark's default) the residual lands in one partition, so at 4,
+    16 and 64 shuffle partitions alike it takes 2 rounds (residual
+    11,858, then 0; 1 round after ``dedupe``) against hash-min's 11.
+    With coalescing off the residual shrinks by a constant per round:
+    17-18 rounds at 4 partitions; at 16 and 64 it stalls (shrinks by
+    less than ``stall_ratio``) within 4-7 rounds, and the loop hands the
+    contracted residual to hash-min, whose labels append to the
+    mapping chain like any other round.
 
     Reference parity: Components.C computes the same min-id fixpoint;
     the contraction schedule is the standard MapReduce-CC local-
@@ -196,15 +195,20 @@ def cc_contract_local(
     )
     if view is not None:
         return connected_components_closed(view, metrics=metrics)
-    if edges is None:
-        edges = graph.edges_derived
-    edges = edges.select("src", "dst")
+    edges = graph.edges_derived if edges is None else edges
+    return _contract(edges, stall_ratio, max_rounds, metrics)
 
+
+def _contract(
+    edges: DataFrame, stall_ratio: float = 0.7, max_rounds: int = 64,
+    metrics: IterMetrics | None = None,
+) -> DataFrame:
+    """The contraction rounds of ``cc_contract_local`` over ``edges``."""
+    edges = edges.select("src", "dst")
     mappings: list[DataFrame] = []
     own_edges: DataFrame | None = None  # round ≥2 edge tables we created
     prev_residual: int | None = None
     timer = Timer()
-    from pyspark.sql import Window
 
     for it in range(max_rounds):
         # One edge-sized sort-shuffle per round: the window over v
@@ -241,20 +245,13 @@ def cc_contract_local(
             metrics.record(it, residual=n_residual, wall_s=timer.lap())
         if n_residual == 0:
             break
+        edges = residual.select(F.col("lab").alias("src"), F.col("gl").alias("dst"))
         if prev_residual is not None and n_residual > stall_ratio * prev_residual:
             # layout gives no leverage (scattered long paths) — finish
             # the contracted residual with the O(log)-round hash-min
             # fixpoint; it runs on a graph already shrunk by the local
             # rounds, and its labels compose like any other mapping
-            rest = connected_components(
-                Graph(
-                    residual.select(
-                        F.col("lab").alias("src"), F.col("gl").alias("dst")
-                    ),
-                    num_partitions=graph.num_partitions,
-                ),
-                symmetrize=True,
-            )
+            rest = _hash_min(Graph(edges))
             mappings.append(rest.select(
                 F.col("id").alias("v"), F.col("comp").alias("gl")
             ))
@@ -266,9 +263,6 @@ def cc_contract_local(
         if own_edges is not None:
             unpersist(own_edges)
         own_edges = residual  # already materialized; next round reads it
-        edges = residual.select(
-            F.col("lab").alias("src"), F.col("gl").alias("dst")
-        )
     else:
         raise RuntimeError(
             f"cc_contract_local did not converge in {max_rounds} rounds"

@@ -133,10 +133,9 @@ FROM v LEFT JOIN o ON v.id = o.id LEFT JOIN i ON v.id = i.id
 
 
 def q_cc_events(spark, sf_dir):
-    """Full iterative hash-min CC (with pointer-jump shortcutting) on
-    the event-chain graph; the oracle's closed form holds because each
-    user's events form one path component."""
-    return connected_components(_events_graph(spark, sf_dir), shortcut=True)
+    """Exact min-id CC on the event-chain graph; the oracle's closed
+    form holds because each user's events form one path component."""
+    return connected_components(_events_graph(spark, sf_dir))
 
 
 CC_EVENTS_SQL = """
@@ -580,9 +579,9 @@ root AS (SELECT MIN(id) AS id FROM v)
 
 
 def q_cc_mid(spark, sf_dir):
-    """Hash-min components (Components.C) at mid scale — exercises the
-    contraction + pointer-jump schedule over hundreds of components
-    including one giant one, vs a pruned label-reachability oracle."""
+    """Min-id components (Components.C) at mid scale over hundreds of
+    components including one giant one, vs a pruned label-reachability
+    oracle."""
     return connected_components(_mid_graph(spark, sf_dir), symmetrize=False)
 
 

@@ -24,6 +24,18 @@ def spark():
 
 
 @pytest.fixture()
+def no_coalesce(spark):
+    """AQE partition coalescing off for one test. A contraction residual
+    this small otherwise lands in one partition and contracts at once;
+    a large input's residual keeps its hash partitions."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.fixture()
 def mk_graph(spark):
     def _mk(edges, weighted=False, **kw):
         if weighted:

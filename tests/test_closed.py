@@ -17,9 +17,11 @@ from pyspark.sql import functions as F
 
 from ligra_spark.algorithms._iter import IterMetrics
 from ligra_spark.algorithms.components import (
+    _hash_min,
     cc_contract_local,
     connected_components,
 )
+from ligra_spark.algorithms.dispatch import OVER_CAP
 from ligra_spark.algorithms.label_propagation import label_propagation
 from ligra_spark.algorithms.pagerank import pagerank
 from ligra_spark.graph import Graph
@@ -127,21 +129,26 @@ def test_cc_single_round_on_closed(pair):
 
 def test_cc_closed_parity(pair):
     """connected_components on a closure-keyed graph takes the closed
-    kernel and matches the distributed hash-min fixpoint exactly."""
+    kernel; on the plain graph above the cap it takes the contraction.
+    Both match the hash-min fixpoint exactly."""
     g_closed, g_plain = pair
     mc, mp = IterMetrics(), IterMetrics()
     a = connected_components(g_closed, metrics=mc)
     b = connected_components(g_plain, metrics=mp)
     assert (mc.backend, mp.backend) == ("closed", "distributed")
-    diff = (
-        a.withColumnRenamed("comp", "ca")
-        .join(b.withColumnRenamed("comp", "cb"), "id", "full_outer")
-        .where(
-            F.col("ca").isNull() | F.col("cb").isNull() | (F.col("ca") != F.col("cb"))
+    assert mp.reason == OVER_CAP and "residual" in mp.rounds[0]
+    want = _hash_min(g_plain).withColumnRenamed("comp", "cw")
+    for got in (a, b):
+        diff = (
+            got.join(want, "id", "full_outer")
+            .where(
+                F.col("comp").isNull()
+                | F.col("cw").isNull()
+                | (F.col("comp") != F.col("cw"))
+            )
+            .count()
         )
-        .count()
-    )
-    assert diff == 0
+        assert diff == 0
 
 
 def test_triangle_closed_parity(pair):

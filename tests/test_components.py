@@ -11,6 +11,8 @@ from ligra_spark.algorithms import (
     triangle_count,
     triangles_per_vertex,
 )
+from ligra_spark.algorithms._iter import IterMetrics
+from ligra_spark.algorithms.components import _hash_min
 from oracles import (
     components_oracle,
     kcore_oracle,
@@ -19,16 +21,23 @@ from oracles import (
 )
 
 
-def _cc_check(mk_graph, edges, **kw):
+def _cc_check(mk_graph, edges, cc=connected_components, **kw):
     g = mk_graph(edges)
-    got = {r["id"]: r["comp"] for r in connected_components(g, **kw).collect()}
+    got = {r["id"]: r["comp"] for r in cc(g, **kw).collect()}
     assert got == components_oracle(edges)
     g.unpersist()
 
 
 def test_cc_plain_hash_min_ligra_semantics(mk_graph):
-    # contract=False, jumps=0: the exact Components.C iteration scheme
-    _cc_check(mk_graph, TWO_COMPONENTS + [(0, 10)], contract=False, jumps=0)
+    # contract=False, jumps=0: the exact Components.C iteration scheme,
+    # run on the hash-min loop itself (connected_components would take
+    # the local kernel at this size). Its frontier per round: every
+    # vertex but 0 takes a smaller label (11-16 take 10), then 11-16
+    # take 0 through 10, then nothing moves.
+    m = IterMetrics()
+    _cc_check(mk_graph, TWO_COMPONENTS + [(0, 10)], _hash_min,
+              contract=False, jumps=0, metrics=m)
+    assert [r["frontier"] for r in m.rounds] == [11, 6, 0]
 
 
 def test_cc_two_components(mk_graph):
@@ -40,7 +49,8 @@ def test_cc_chain(mk_graph):
 
 
 def test_cc_chain_shortcut(mk_graph):
-    _cc_check(mk_graph, CHAIN_64, shortcut=True)
+    # one pointer jump per round: Components-Shortcut.C
+    _cc_check(mk_graph, CHAIN_64, _hash_min, jumps=1)
 
 
 def test_cc_star(mk_graph):
@@ -151,7 +161,7 @@ def test_ccl_self_loops_dups(mk_graph):
     _ccl_check(mk_graph, SELF_LOOPS_DUPS)
 
 
-def test_ccl_scattered_path_stall_fallback(mk_graph):
+def test_ccl_scattered_path_stall_fallback(mk_graph, no_coalesce):
     """A long path with shuffled ids scattered over partitions is the
     worst case for local contraction (residual shrinks by a constant
     per round); the stall detector must hand the contracted residual to
@@ -162,9 +172,13 @@ def test_ccl_scattered_path_stall_fallback(mk_graph):
     ids = list(range(0, 4000, 2))
     rng.shuffle(ids)
     edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    # path order would put a contiguous stretch in each partition
+    rng.shuffle(edges)
     # stall_ratio=0 forces the fallback on the very first non-improving
     # round, exercising the hash-min handoff + mapping composition
-    _ccl_check(mk_graph, edges, stall_ratio=0.0)
+    m = IterMetrics()
+    _ccl_check(mk_graph, edges, stall_ratio=0.0, metrics=m)
+    assert m.rounds[-1].get("fallback") == "hashmin", m.rounds
 
 
 def test_ccl_empty(spark):

@@ -148,23 +148,30 @@ def _closed_graph(spark):
 
 
 @pytest.mark.parametrize(
-    "kind, algo, kw, cap, backend, reason",
+    "kind, algo, kw, cap, backend, reason, row",
     [
-        ("closed", "pagerank", {}, "0", "closed", dispatch.CLOSURE_KEY),
-        ("generic", "pagerank", {}, None, "local", dispatch.UNDER_CAP),
-        ("generic", "pagerank", {}, "0", "distributed", dispatch.OVER_CAP),
+        ("closed", "pagerank", {}, "0", "closed", dispatch.CLOSURE_KEY, None),
+        ("generic", "pagerank", {}, None, "local", dispatch.UNDER_CAP, None),
+        ("generic", "pagerank", {}, "0", "distributed", dispatch.OVER_CAP,
+         None),
         ("generic", "pagerank", {"checkpointer": 1}, None, "distributed",
-         dispatch.INELIGIBLE),
+         dispatch.INELIGIBLE, None),
         ("generic", "connected_components", {"max_iters": 3}, None,
-         "distributed", dispatch.INELIGIBLE),
+         "distributed", dispatch.INELIGIBLE, "frontier"),
         ("directed", "connected_components", {"symmetrize": False}, None,
-         "distributed", dispatch.INELIGIBLE),
+         "distributed", dispatch.INELIGIBLE, "frontier"),
+        ("generic", "connected_components", {}, "0", "distributed",
+         dispatch.OVER_CAP, "residual"),
+        ("generic", "connected_components", {"checkpointer": 1}, None,
+         "distributed", dispatch.INELIGIBLE, "frontier"),
     ],
     ids=["closure-key", "small-generic", "cap-0", "checkpointer",
-         "cc-max-iters", "cc-asymmetric"],
+         "cc-max-iters", "cc-asymmetric", "cc-cap-0", "cc-checkpointer"],
 )
 def test_dispatch_decision(spark, mk_graph, monkeypatch, tmp_path,
-                           kind, algo, kw, cap, backend, reason):
+                           kind, algo, kw, cap, backend, reason, row):
+    """The recorded backend and reason; for CC also the loop that ran:
+    the contraction records ``residual`` rows, hash-min ``frontier``."""
     from ligra_spark import algorithms
     from ligra_spark.checkpoint import Checkpointer
 
@@ -180,6 +187,39 @@ def test_dispatch_decision(spark, mk_graph, monkeypatch, tmp_path,
     m = IterMetrics()
     getattr(algorithms, algo)(g, metrics=m, **kw).collect()
     assert (m.backend, m.reason) == (backend, reason)
+    if row is not None:
+        assert m.rounds and all(row in r for r in m.rounds), m.rounds
+    g.unpersist()
+
+
+def test_cc_stall_fallback_through_dispatch(mk_graph, monkeypatch,
+                                            no_coalesce):
+    """Above the cap, a long path scattered over partitions stalls the
+    contraction, which hands its residual to the hash-min loop. The
+    labels stay exact, and the fallback never re-enters the public
+    connected_components (that would re-dispatch to the contraction)."""
+    import random
+
+    from ligra_spark.algorithms import components
+    from oracles import components_oracle
+
+    rng = random.Random(5)
+    ids = list(range(600))
+    rng.shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    rng.shuffle(edges)
+    g = mk_graph(edges)
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
+    cc = components.connected_components
+    reentered = []
+    monkeypatch.setattr(components, "connected_components",
+                        lambda *a, **k: reentered.append(a) or cc(*a, **k))
+    m = IterMetrics()
+    got = {r["id"]: r["comp"] for r in cc(g, metrics=m).collect()}
+    assert (m.backend, m.reason) == ("distributed", dispatch.OVER_CAP)
+    assert m.rounds[-1].get("fallback") == "hashmin", m.rounds
+    assert not reentered
+    assert got == components_oracle(edges)
     g.unpersist()
 
 
