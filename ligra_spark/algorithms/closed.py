@@ -21,16 +21,18 @@ Exactness (not approximation):
 
 - **PageRank** decomposes exactly over conversation-closed partitions:
   ``p_next[d] = (1-λ)/n + λ·Σ_{s→d} p[s]/outdeg(s)`` only references
-  in-partition sources, and the global constants (n, the damping base)
-  are computed once up front. The L1 convergence test is global, so the
+  in-partition sources. The kernel iterates ``q = n·p`` (start 1, base
+  ``1-λ``), so it needs no global constant; ``n`` is the sum of the
+  partitions' vertex counts, read off the same pass, and ranks come out
+  as ``q / n``. The L1 convergence test is global, so the
   kernel first runs to ``max_iters`` recording per-iteration *local* L1
   (partitions that reach an exact local fixpoint stop early — their
   state is thereafter constant, so absent L1 rows read as 0.0); the
   driver sums local L1s per iteration into the global norm and, iff the
   tolerance was crossed before the last executed round, replays with
   exactly the converged round count. Output is pytest-pinned equal to
-  the generic path at rtol 1e-12 (float summation order is the only
-  difference), same round count.
+  the generic path at rtol 1e-12 (float summation order and the
+  ``q / n`` scaling are the only differences), same round count.
 - **Label propagation** needs no replay at all: a partition whose
   synchronous update changes nothing is at a fixpoint of a closed
   subgraph and stays there, so "iterate until local fixpoint or
@@ -223,9 +225,11 @@ def closed_counts(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"] or 0), int(row["m"] or 0)
 
 
-def _pr_kernel(n_glob: int, damping: float, iters: int):
-    """Build the per-partition PageRank kernel (the closure captures
-    the global constants; the CSR helpers are module-level)."""
+def _pr_kernel(damping: float, iters: int):
+    """Build the per-partition PageRank kernel. It needs no vertex
+    count: the update is linear in ``1/n``, so it iterates ``q = n·p``
+    from ``q = 1`` with base ``1 − d``, and the driver divides by the
+    ``n`` it sums from the kernel's own count row."""
     _salt = next(_call_salt)
 
     def kernel(batches):
@@ -239,28 +243,29 @@ def _pr_kernel(n_glob: int, damping: float, iters: int):
         nl = len(ids)
         out_deg = np.bincount(s, minlength=nl).astype(np.float64)
         nz = out_deg > 0
-        base = (1.0 - damping) / n_glob
-        p = np.full(nl, 1.0 / n_glob)
+        q = np.ones(nl)
         l1s = []
         for _ in range(iters):
             share = np.zeros(nl)
-            np.divide(p, out_deg, out=share, where=nz)
+            np.divide(q, out_deg, out=share, where=nz)
             contrib = np.bincount(d, weights=share[s], minlength=nl)
-            p_next = base + damping * contrib
-            l1 = float(np.abs(p_next - p).sum())
+            q_next = (1.0 - damping) + damping * contrib
+            l1 = float(np.abs(q_next - q).sum())
             l1s.append(l1)
-            p = p_next
+            q = q_next
             if l1 == 0.0:  # exact local fixpoint: state is constant now
                 break
         t = len(l1s)
+        # rows: it = -1 per-vertex q; it = -2 the partition's counts
+        # (id = vertices, val = edges); it >= 0 the round's local L1
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(np.concatenate([ids, np.full(t, -1, np.int64)])),
-                pa.array(np.concatenate([p, np.array(l1s)])),
+                pa.array(np.concatenate([ids, [nl], np.zeros(t, np.int64)])),
+                pa.array(np.concatenate([q, [len(s)], l1s])),
                 pa.array(
                     np.concatenate(
-                        [np.full(nl, -1, np.int32), np.arange(t, dtype=np.int32)]
-                    ),
+                        [np.full(nl, -1), [-2], np.arange(t)]
+                    ).astype(np.int32),
                     type=pa.int32(),
                 ),
             ],
@@ -279,25 +284,28 @@ def pagerank_closed(
 ) -> DataFrame:
     """``(id, rank)`` — exact PageRank.C semantics (damping 0.85, L1
     stop, dangling mass leaks) over a closure-partitioned edge table.
-    One up-front count pass + one iterate pass (+ one replay pass iff
-    the L1 tolerance was crossed before the last executed round);
-    every iteration inside the pass is numpy, zero shuffle."""
+    One iterate pass (+ one replay pass iff the L1 tolerance was
+    crossed before the last executed round); every iteration inside
+    the pass is numpy, zero shuffle. The pass also counts the graph:
+    each vertex lives in one partition, so ``n`` is the sum of the
+    partitions' vertex counts, and no count job runs ahead of it."""
     edges = graph.closed_edges.select("src", "dst")
     timer = Timer()
-    n = graph.n  # closed count kernel (Graph.n routes here when closed)
-    if n == 0:
-        return graph.spark.createDataFrame([], "id long, rank double")
-
     out = edges.mapInArrow(
-        _pr_kernel(n, damping, max_iters), "id long, val double, it int"
+        _pr_kernel(damping, max_iters), "id long, val double, it int"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    l1_rows = (
-        out.where(F.col("it") >= 0)
+    rows = (
+        out.where(F.col("it") != -1)
         .groupBy("it")
-        .agg(F.sum("val").alias("l1"))
+        .agg(F.sum("val").alias("val"), F.sum("id").alias("id"))
         .collect()
     )
-    glob_l1 = {int(r["it"]): float(r["l1"]) for r in l1_rows}
+    counts = next((r for r in rows if r["it"] == -2), None)
+    if counts is None:  # no edges, no vertices
+        out.unpersist()
+        return graph.spark.createDataFrame([], "id long, rank double")
+    n, m = int(counts["id"]), int(counts["val"])
+    glob_l1 = {int(r["it"]): float(r["val"]) / n for r in rows if r["it"] >= 0}
     t_max = max(glob_l1) + 1 if glob_l1 else 0
     rounds = next(
         (t + 1 for t in range(t_max) if glob_l1.get(t, 0.0) < tol), max_iters
@@ -311,7 +319,7 @@ def pagerank_closed(
         # is identical either way)
         out.unpersist()
         out = edges.mapInArrow(
-            _pr_kernel(n, damping, rounds), "id long, val double, it int"
+            _pr_kernel(damping, rounds), "id long, val double, it int"
         ).persist(StorageLevel.MEMORY_AND_DISK)
         out.count()  # replay wall measured here, lazy otherwise
         replay_wall = timer.lap()
@@ -325,7 +333,7 @@ def pagerank_closed(
         per = wall / max(t_max, 1)
         for t in range(rounds):
             kv = dict(
-                l1=glob_l1.get(t, 0.0), wall_s=per, edges=graph.m, fused=True
+                l1=glob_l1.get(t, 0.0), wall_s=per, edges=m, fused=True
             )
             if t == rounds - 1:
                 # exploratory rounds past convergence + the replay pass
@@ -341,9 +349,8 @@ def pagerank_closed(
                 if replay_wall is not None:
                     kv["replay_wall_s"] = replay_wall
             metrics.record(t, **kv)
-    return derive(
-        out.where(F.col("it") < 0).select("id", F.col("val").alias("rank")), out
-    )
+    rank = (F.col("val") / n).alias("rank")
+    return derive(out.where(F.col("it") == -1).select("id", rank), out)
 
 
 def _lp_kernel(iters: int, symmetrize: bool):

@@ -16,7 +16,8 @@ backend below computes that output; only the schedule differs.
   kernel pass and one window shuffle per round.
 - Directed labels (``symmetrize=False`` on an asymmetric graph), a
   checkpointer, partial labels (``max_iters`` below the default) and
-  the contraction's stall fallback: the hash-min rounds
+  the contraction's stall fallback above the local cap: the hash-min
+  rounds
   (``_hash_min``). ``contract`` adds per-round **group-min
   contraction** (a vertex whose old label was L adopts the best label
   anyone in L's group found: 6 rounds against plain hash-min's 40 on
@@ -42,7 +43,7 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.closed import _cc_kernel, connected_components_closed
 from ligra_spark.algorithms.dispatch import OVER_CAP, choose_backend
-from ligra_spark.graph import Graph
+from ligra_spark.graph import Graph, local_kernel_edge_cap
 from ligra_spark.operators.edge_map import edge_map
 
 
@@ -178,9 +179,11 @@ def cc_contract_local(
     11,858, then 0; 1 round after ``dedupe``) against hash-min's 11.
     With coalescing off the residual shrinks by a constant per round:
     17-18 rounds at 4 partitions; at 16 and 64 it stalls (shrinks by
-    less than ``stall_ratio``) within 4-7 rounds, and the loop hands the
-    contracted residual to hash-min, whose labels append to the
-    mapping chain like any other round.
+    less than ``stall_ratio``) within 4-7 rounds. A stalled residual
+    within the local edge cap is coalesced into one partition, where
+    the kernel is exact, so one more round ends the loop; a larger one
+    goes to hash-min, whose labels append to the mapping chain like
+    any other round.
 
     Reference parity: Components.C computes the same min-id fixpoint;
     the contraction schedule is the standard MapReduce-CC local-
@@ -208,6 +211,7 @@ def _contract(
     mappings: list[DataFrame] = []
     own_edges: DataFrame | None = None  # round ≥2 edge tables we created
     prev_residual: int | None = None
+    fallback: dict = {}  # {"fallback": "local"} on the coalesced round
     timer = Timer()
 
     for it in range(max_rounds):
@@ -242,15 +246,27 @@ def _contract(
         n_residual = got["n"]
         mappings.append(glob)
         if metrics is not None:
-            metrics.record(it, residual=n_residual, wall_s=timer.lap())
+            metrics.record(it, residual=n_residual, wall_s=timer.lap(),
+                           **fallback)
         if n_residual == 0:
             break
         edges = residual.select(F.col("lab").alias("src"), F.col("gl").alias("dst"))
-        if prev_residual is not None and n_residual > stall_ratio * prev_residual:
-            # layout gives no leverage (scattered long paths) — finish
-            # the contracted residual with the O(log)-round hash-min
-            # fixpoint; it runs on a graph already shrunk by the local
-            # rounds, and its labels compose like any other mapping
+        stalled = (
+            prev_residual is not None and n_residual > stall_ratio * prev_residual
+        )
+        if stalled and n_residual <= local_kernel_edge_cap():
+            # layout gives no leverage (scattered long paths), but the
+            # residual fits one worker: in one partition _cc_kernel is
+            # exact, so the next round's residual is 0. On a scattered
+            # 600-vertex path (4 cores, 8 partitions, no coalescing) the
+            # 8-edge residual took 0.41-0.45 s here, 4.0-4.6 s on hash-min
+            edges = edges.coalesce(1)
+            fallback = {"fallback": "local"}
+        elif stalled:
+            # above the cap, finish the contracted residual with the
+            # O(log)-round hash-min fixpoint; it runs on a graph
+            # already shrunk by the local rounds, and its labels
+            # compose like any other mapping
             rest = _hash_min(Graph(edges))
             mappings.append(rest.select(
                 F.col("id").alias("v"), F.col("comp").alias("gl")

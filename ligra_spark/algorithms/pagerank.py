@@ -12,9 +12,14 @@ Two deliberate semantic reproductions for 1e-6 parity:
   rank mass — PageRank.C:33-40 never redistributes sink mass, so total
   rank sum decays below 1. We match that exactly.
 - **All-vertices frontier every round** (PageRank.C:80-87): the
-  iteration is always dense, so every round is the co-partitioned
-  SpMV plan — state(id) ⋈ edges_by_src exchange-free, one shuffle of
-  partially-aggregated contributions into groupBy(dst).
+  iteration is always dense, so every round is one SpMV: the state's
+  shares join ``edges_by_src`` and sum by ``dst``, one shuffle of
+  partially-aggregated contributions. It is not exchange-free. Under
+  the broadcast threshold (64 MB from ``get_spark``) Spark broadcasts
+  the cached edge table every round (``BroadcastHashJoin … BuildRight``
+  on the 29,932-edge R-MAT graph), and the checkpointed state carries
+  no partitioning (``_iter._reset_stats``), so the state ⋈
+  contributions join exchanges it on ``id``.
 
 ``pagerank_delta`` is the frontier-sparsifying variant
 (apps/PageRankDelta.C): only vertices whose rank moved by more than
@@ -70,7 +75,8 @@ def pagerank(
         return graph.spark.createDataFrame([], "id long, rank double")
     base = (1.0 - damping) / n
 
-    # state: (id, out_deg, rank) — hash-partitioned on id.
+    # state: (id, out_deg, rank). Its checkpoint has no partitioning
+    # Spark can see, so every round exchanges it on id again.
     state = graph.degrees.select(
         "id", "out_deg", F.lit(1.0 / n).alias("rank")
     )

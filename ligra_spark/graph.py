@@ -8,9 +8,12 @@ asymmetric graphs additionally keep an in-edge CSR built at load time
 Here the graph is a pair of hash-partitioned, persisted DataFrames:
 
 - ``edges_by_src`` — ``(src LONG, dst LONG [, w])`` repartitioned on
-  ``src``: the out-CSR analog. Joining per-vertex state (partitioned on
-  the same key) is then exchange-free on the edge side — the per-
-  iteration shuffle moves only gathered messages, never the edge table.
+  ``src``: the out-CSR analog. A join with per-vertex state that Spark
+  knows is hash-partitioned on the same key leaves the edge side in
+  place. Loop state is checkpointed, which hides its partitioning, so
+  such a join exchanges the state; under the broadcast threshold Spark
+  broadcasts the edge table instead, every round (distributed
+  PageRank, pagerank.py).
 - ``edges_by_dst`` — same rows repartitioned on ``dst``: the in-CSR /
   ``transpose()`` analog, built once up front.
 - ``degrees`` — ``(id, out_deg, in_deg)`` for direction decisions
@@ -76,19 +79,9 @@ class _LocalClosedView:
 
     def __init__(self, graph: "Graph") -> None:
         self.spark = graph.spark
-        self._graph = graph
         cols = ["src", "dst"] + (["w"] if graph.weighted else [])
         self.closed_edges = graph.edges_by_src.select(cols).coalesce(1)
         self.closure_key = "__whole_graph__"
-
-    # counted on first use by a kernel, not when the view is built
-    @property
-    def n(self) -> int:
-        return self._graph.n
-
-    @property
-    def m(self) -> int:
-        return self._graph.m
 
 
 def _auto_partitions(m: int, cap: int) -> int:

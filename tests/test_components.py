@@ -161,11 +161,7 @@ def test_ccl_self_loops_dups(mk_graph):
     _ccl_check(mk_graph, SELF_LOOPS_DUPS)
 
 
-def test_ccl_scattered_path_stall_fallback(mk_graph, no_coalesce):
-    """A long path with shuffled ids scattered over partitions is the
-    worst case for local contraction (residual shrinks by a constant
-    per round); the stall detector must hand the contracted residual to
-    hash-min and still produce the exact min-id labeling."""
+def _scattered_path():
     import random
 
     rng = random.Random(11)
@@ -174,11 +170,31 @@ def test_ccl_scattered_path_stall_fallback(mk_graph, no_coalesce):
     edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
     # path order would put a contiguous stretch in each partition
     rng.shuffle(edges)
+    return edges
+
+
+def test_ccl_scattered_path_stall_fallback(mk_graph, monkeypatch, no_coalesce):
+    """A long path with shuffled ids scattered over partitions is the
+    worst case for local contraction (residual shrinks by a constant
+    per round); at cap 0 the stall detector must hand the contracted
+    residual to hash-min and still produce the exact min-id labeling."""
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
     # stall_ratio=0 forces the fallback on the very first non-improving
     # round, exercising the hash-min handoff + mapping composition
     m = IterMetrics()
-    _ccl_check(mk_graph, edges, stall_ratio=0.0, metrics=m)
+    _ccl_check(mk_graph, _scattered_path(), stall_ratio=0.0, metrics=m)
     assert m.rounds[-1].get("fallback") == "hashmin", m.rounds
+
+
+def test_ccl_stall_fallback_local_under_cap(mk_graph, no_coalesce):
+    """At the default cap a stalled residual fits one worker: it is
+    coalesced into one partition and one more contraction round ends
+    the loop with residual 0, exact labels and no hash-min round."""
+    m = IterMetrics()
+    _ccl_check(mk_graph, _scattered_path(), stall_ratio=0.0, metrics=m)
+    last = m.rounds[-1]
+    assert (last["residual"], last.get("fallback")) == (0, "local"), m.rounds
+    assert not any(r.get("fallback") == "hashmin" for r in m.rounds), m.rounds
 
 
 def test_ccl_empty(spark):

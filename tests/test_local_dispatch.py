@@ -238,3 +238,33 @@ def test_closed_dispatch_runs_no_job(spark, mk_graph):
     sc.setLocalProperty("spark.jobGroup.id", None)
     closed.unpersist()
     cold.unpersist()
+
+
+def test_pagerank_dispatch_counts_in_kernel(spark, mk_graph, monkeypatch):
+    """The fused PageRank reads n off its own pass: on a cold generic
+    graph whose m is known it runs the kernel pass and the L1 collect
+    only, and never builds the degree table behind Graph.n; on a
+    closure-keyed graph it never runs the closed count kernel."""
+    from ligra_spark.algorithms import closed, pagerank
+
+    sc = spark.sparkContext
+    g = mk_graph(CHAIN_64)
+    assert g.m == 63
+    sc.setJobGroup("pagerank-local", "pagerank")
+    pagerank(g, max_iters=5).collect()
+    jobs = sc.statusTracker().getJobIdsForGroup("pagerank-local")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 3, jobs
+    assert g._degrees is None
+    g.unpersist()
+
+    counted = []
+    monkeypatch.setattr(closed, "closed_counts",
+                        lambda *a: counted.append(a) or (0, 0))
+    for metrics in (None, IterMetrics()):
+        g = _closed_graph(spark)
+        pagerank(g, max_iters=5, metrics=metrics).collect()
+        assert not counted
+        if metrics is not None:
+            assert metrics.rounds[0]["edges"] == len(K4)
+        g.unpersist()
