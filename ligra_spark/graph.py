@@ -47,8 +47,8 @@ from pyspark.storagelevel import StorageLevel
 # second, beating the per-round floor by an order of magnitude. The
 # threshold is deliberately conservative (kernel wall ≲1s, worker
 # memory ≲100 MB) and env-tunable: a real cluster tunes it by its own
-# scheduler floor; 0 disables the dispatch (bench_scaling sets 0 so the
-# distributed engine's scaling is what gets measured).
+# scheduler floor. perfbench's `rmat-dist` workload lowers it to 1024 so
+# its graph runs the distributed loops; 0 disables the dispatch.
 DEFAULT_LOCAL_KERNEL_EDGES = 2_000_000
 
 
@@ -240,7 +240,6 @@ class Graph:
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
         self._degrees: DataFrame | None = None
-        self._vertices: DataFrame | None = None
 
         if closure_key is not None and not validated_closure:
             self.validate_closure()
@@ -397,7 +396,6 @@ class Graph:
         g.edges_by_src = self.edges_by_dst.select(cols)
         g.edges_by_dst = self.edges_by_src.select(cols)
         g.edges_derived = self.edges_derived.select(cols)
-        g._vertices = self._vertices
         g._n = self._n
         g._m = self._m
         g._degrees = None
@@ -426,7 +424,6 @@ class Graph:
             self.edges_by_src,
             self.edges_by_dst,
             self._degrees,
-            self._vertices,
             self.closed_edges,
         ):
             if df is not None:

@@ -73,11 +73,10 @@ _DEFAULTS = {
 # exactly where spark-submit clusters pay it too.
 #
 # Pre-faulting is an explicit opt-in (SPARK_GRAFT_PRETOUCH=1, set by
-# bench.py / bench_scaling.py): on a host with less free RAM than the
-# configured heap an eager -Xms either fails JVM startup or thrashes
-# pre-touching pages, so plain library callers keep the lazy
-# -Xmx-only heap. Even when opted in, -Xms is clamped to the host's
-# MemAvailable.
+# bench.py): on a host with less free RAM than the configured heap an
+# eager -Xms either fails JVM startup or thrashes pre-touching pages, so
+# plain library callers keep the lazy -Xmx-only heap. Even when opted
+# in, -Xms is clamped to the host's MemAvailable.
 _PRETOUCH = "-XX:+AlwaysPreTouch"
 
 
