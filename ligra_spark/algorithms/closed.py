@@ -204,15 +204,12 @@ def closed_counts(edges: DataFrame) -> tuple[int, int]:
     def _count_kernel(batches):
         import pyarrow as pa
 
-        parts, m = [], 0
-        for batch in batches:
-            s = batch.column(0).to_numpy(zero_copy_only=False)
-            d = batch.column(1).to_numpy(zero_copy_only=False)
-            m += len(s)
-            parts.append(np.unique(np.concatenate([s, d])))
-        nv = len(np.unique(np.concatenate(parts))) if parts else 0
+        idx = local_index(batches)
+        if idx is None:
+            return
+        ids, s, _ = idx
         yield pa.RecordBatch.from_arrays(
-            [pa.array([nv], type=pa.int64()), pa.array([m], type=pa.int64())],
+            [pa.array([len(ids)], pa.int64()), pa.array([len(s)], pa.int64())],
             ["nv", "ne"],
         )
 

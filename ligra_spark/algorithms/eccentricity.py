@@ -16,14 +16,18 @@ here:
   HyperLogLog-style registers (position of the lowest set bit) merged
   by MAX instead of OR.
 
-Spark realization mirrors the engine's other sketch columns (MinHash
-slots, Radii bitmasks): state is ``(id, slot, reg)`` rows; one round =
-frontier ⋈ edges → ``groupBy(dst, slot).agg(bit_or|max)`` — the
-composite-key form of edgeMapReduce, partial-aggregated map-side. The
-frontier (vertices whose sketch changed) shrinks like the reference's,
-so late rounds are cheap.
+Spark realization: both sketches run on ``radii._propagate``, the one
+register-propagation loop of the family (Radii and kBFS run on it with
+a single 64-bit slot). State is ``(id, slot, reg, r)`` rows, one per
+counter; one round = frontier ⋈ edges → ``groupBy(dst, slot).agg(
+bit_or|max)`` — the composite-key form of edgeMapReduce,
+partial-aggregated map-side — and ONE commit that also counts the
+changed rows. ``r`` is the last round a row changed, and ``ecc`` is
+its ``groupBy(id).max``. The frontier is the rows that changed, so it
+shrinks like the reference's and late rounds are cheap.
 
-kBFS-Ecc's exact-bitmask core is ``algorithms.radii``.
+RV and CLRSTV share ``_sample_w_ngh`` (components, sample, w, Ngh_s
+and the exact set) and differ only in their estimate formula.
 """
 
 from __future__ import annotations
@@ -35,76 +39,36 @@ from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
     commit,
-    derive,
     materialize,
     unpersist,
 )
+from ligra_spark.algorithms.radii import _propagate
 from ligra_spark.graph import Graph
 
 
 def _sketch_ecc(
     graph: Graph,
     counters: int,
-    seed: int,
     init_reg,
     merge: str,
     symmetrize: bool,
     max_iters: int,
     metrics: IterMetrics | None,
 ) -> DataFrame:
+    """``(id, ecc INT)``: ``counters`` registers per vertex from
+    ``init_reg`` (a Column over ``id`` and ``slot``), propagated by
+    ``radii._propagate``; ``ecc`` = the last round any of v's registers
+    changed."""
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
-    agg = F.bit_or if merge == "bit_or" else F.max
-
     slot = F.explode(F.sequence(F.lit(0), F.lit(counters - 1))).alias("slot")
-    sketch = materialize(
-        g.vertices.select("id", slot).select("id", "slot", init_reg.alias("reg"))
+    state = g.vertices.select("id", slot).select(
+        "id", "slot", init_reg.alias("reg"), F.lit(0).alias("r")
     )
-    ecc = g.vertices.select("id", F.lit(0).alias("ecc"))
-    frontier_ids = g.vertices
-    frontier_n = g.n
-
-    timer = Timer()
-    for it in range(max_iters):
-        if frontier_n == 0:
-            break
-        fr = (
-            sketch.join(frontier_ids, "id", "left_semi")
-            .withColumnRenamed("id", "src")
-        )
-        msgs = (
-            g.edges_by_src.join(fr, "src")
-            .groupBy(F.col("dst").alias("id"), "slot")
-            .agg(agg("reg").alias("msg"))
-        )
-        nxt = sketch.join(msgs, ["id", "slot"], "left").select(
-            "id",
-            "slot",
-            "reg",
-            (
-                F.col("reg").bitwiseOR(F.coalesce("msg", F.lit(0)))
-                if merge == "bit_or"
-                else F.greatest("reg", F.coalesce("msg", F.lit(0)))
-            ).alias("reg_new"),
-        )
-        nxt = materialize(nxt, sketch)
-        changed, got = commit(
-            nxt.where(F.col("reg_new") != F.col("reg")).select("id").distinct(),
-            frontier_ids if it > 0 else None,
-            f=F.count(F.lit(1)),
-        )
-        frontier_n = got["f"]
-        ecc = ecc.join(changed.withColumn("_c", F.lit(1)), "id", "left").select(
-            "id",
-            F.when(F.col("_c").isNotNull(), F.lit(it + 1))
-            .otherwise(F.col("ecc"))
-            .alias("ecc"),
-        )
-        ecc = materialize(ecc)
-        sketch = derive(nxt.select("id", "slot", F.col("reg_new").alias("reg")), nxt)
-        frontier_ids = changed
-        if metrics is not None:
-            metrics.record(it, frontier=frontier_n, wall_s=timer.lap())
-    return ecc.select("id", F.col("ecc").cast("int").alias("ecc"))
+    return (
+        _propagate(g, state, merge, max_iters, metrics)
+        .groupBy("id")
+        .agg(F.max("r").cast("int").alias("ecc"))
+    )
 
 
 def fm_ecc(
@@ -123,7 +87,7 @@ def fm_ecc(
         h.bitwiseAND(-h)
     )
     return _sketch_ecc(
-        graph, counters, seed, init, "bit_or", symmetrize, max_iters, metrics
+        graph, counters, init, "bit_or", symmetrize, max_iters, metrics
     )
 
 
@@ -142,7 +106,7 @@ def loglog_ecc(
     # log2 of a power of two = bit position = HLL rank
     init = F.log2(lowest.cast("double")).cast("long")
     return _sketch_ecc(
-        graph, counters, seed, init, "max", symmetrize, max_iters, metrics
+        graph, counters, init, "max", symmetrize, max_iters, metrics
     )
 
 
@@ -310,13 +274,18 @@ def _multi_root_bfs(g: Graph, roots: DataFrame) -> DataFrame:
 
 
 def _sample_w_ngh(
-    g: Graph, big: DataFrame, sizes: DataFrame, max_sample: int = 1000
-) -> dict:
-    """The phase machinery RV and CLRSTV share (RV.C:160-284 ==
-    CLRSTV.C:150-277): pinned sample S + exact per-sample BFS, the
-    furthest-from-S vertex w + its BFS, and the (level, id)-ordered
-    Ngh_s neighborhood + its BFS. Returns every frame the estimate
-    formulas need.
+    graph: Graph, symmetrize: bool, max_sample: int, estimate
+) -> DataFrame:
+    """``(id, radius INT)`` — the pipeline RV and CLRSTV share
+    (RV.C:150-306 == CLRSTV.C:140-300) around each app's estimate
+    formula: connected components, with sizes 1 / 2 short-circuiting to
+    0 / 1 (RV.C:153-156); on the rest, the pinned sample S + exact
+    per-sample BFS, the furthest-from-S vertex w + its BFS, and the
+    (level, id)-ordered Ngh_s neighborhood + its BFS; then the exact
+    eccentricities of S ∪ {w} ∪ Ngh_s. Every other vertex of a
+    component of size >= 3 — the frame ``rest`` ``(id, comp, csz)`` —
+    takes ``estimate(g, ph, rest)`` -> ``(id, radius)``, where ``ph``
+    holds every phase frame the formulas read.
 
     Sample size follows the reference (RV.C:157-168):
     ``sampleSize ≈ √(CCsize·log2 CCsize)`` capped at ``max_sample``, so
@@ -327,6 +296,19 @@ def _sample_w_ngh(
     quadratic in component size — ADVICE r03). The component's min-id
     member is always forced in (RV.C:172 non-empty forcing)."""
     from pyspark.sql import Window
+
+    from ligra_spark.algorithms.components import connected_components
+
+    g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
+    comps = connected_components(g, symmetrize=False)
+    sizes = comps.groupBy("comp").agg(F.count(F.lit(1)).alias("csz"))
+    comps = materialize(comps.join(sizes, "comp"))
+    out = comps.where(F.col("csz") <= 2).select(
+        "id", F.when(F.col("csz") == 1, 0).otherwise(1).alias("radius")
+    )
+    big = comps.where(F.col("csz") >= 3)
+    if big.isEmpty():
+        return out.select("id", F.col("radius").cast("int").alias("radius"))
 
     # sample S: pinned stream vs per-component threshold + forced
     # min-id member (comp == min id)
@@ -387,70 +369,31 @@ def _sample_w_ngh(
     )
     distN = _multi_root_bfs(g, N)
     eccN = distN.groupBy("root").agg(F.max("dist").alias("ecc"))
-    return dict(
+
+    # exact (S ∪ {w} ∪ Ngh_s), then each app's estimate for the rest
+    exact = materialize(
+        S.join(eccS, "root").select(F.col("root").alias("id"), "ecc")
+        .unionAll(W.join(eccW, "root").select(F.col("root").alias("id"), "ecc"))
+        .unionAll(N.join(eccN, "root").select(F.col("root").alias("id"), "ecc"))
+        .groupBy("id")
+        .agg(F.min("ecc").alias("radius"))
+    )
+    ph = dict(
         S=S, distS=distS, eccS=eccS, per_v=per_v,
         W=W, distW=distW, eccW=eccW, dW=dW,
         N=N, distN=distN, eccN=eccN,
     )
-
-
-def rv_ecc(
-    graph: Graph,
-    max_sample: int = 1000,
-    symmetrize: bool = True,
-) -> DataFrame:
-    """``(id, radius INT)`` — eccentricity estimates by the
-    Roditty-Vassilevska-Williams sampling scheme (apps/eccentricity/
-    RV.C:83-326), with every source of run-to-run nondeterminism
-    PINNED so the output is a deterministic function of the graph
-    (the FM-Ecc/LogLog-Ecc treatment, VERDICT r02 item 9):
-
-    - RV.C:89 seeds from ``time(NULL)``; the sample membership test
-      ``hashInt(i+seed) % CCsize < sampleSize`` (RV.C:164-169) becomes
-      the pinned arithmetic stream ``(id*31 + 7) % 101`` compared to a
-      per-component threshold ``round(101·sampleSize/csz)`` with
-      ``sampleSize = min(csz, max_sample, max(10, √(csz·log2 csz)))``
-      — the reference's falling per-vertex rate, so the batched
-      multi-BFS holds ~√(n log n) roots per component, not O(n) — and
-      the sample always contains the component's min id (the
-      reference's non-empty forcing, RV.C:172).
-    - ``Ngh_s`` (the √(n log n) neighborhood of w) is the first
-      nghSize vertices in BFS order from w; the reference takes them
-      in frontier order, nondeterministic within a level
-      (RV.C:249-256, and the comment at RV.C:248-249 documents it);
-      here the order is (level, id) — deterministic.
-    - each vertex's guide into Ngh_s is inherited from its MIN-ID BFS
-      parent rather than the CAS-winning parent (RV.C:56-64).
-
-    Exact-BFS phases (samples, w, Ngh_s — RV.C:176-188, 243-284) and
-    the estimate formula rv = max(maxDist_S(v), d(w,v)); use ecc(vt)
-    when d(vt,v) ≤ d(vt,w), else the sample's min radius
-    (RV.C:291-306) follow the reference unchanged. Components of size
-    1 / 2 short-circuit to 0 / 1 (RV.C:153-156); components whose size
-    ≤ nghSize get fully exact eccentricities (everything lands in
-    Ngh_s)."""
-    from pyspark.sql import Window
-
-    from ligra_spark.algorithms.components import cc_contract_local
-
-    g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
-    comps = cc_contract_local(g)
-    sizes = comps.groupBy("comp").agg(F.count(F.lit(1)).alias("csz"))
-    comps = materialize(comps.join(sizes, "comp"))
-
-    small = comps.where(F.col("csz") <= 2).select(
-        "id", F.when(F.col("csz") == 1, 0).otherwise(1).alias("radius")
+    rest = big.join(exact.select("id"), "id", "left_anti")
+    return (
+        out.unionAll(exact).unionAll(estimate(g, ph, rest))
+        .select("id", F.col("radius").cast("int").alias("radius"))
     )
-    big = comps.where(F.col("csz") >= 3)
 
-    if big.isEmpty():
-        return small.select("id", F.col("radius").cast("int").alias("radius"))
 
-    ph = _sample_w_ngh(g, big, sizes, max_sample)
-    S, distS, eccS, per_v = ph["S"], ph["distS"], ph["eccS"], ph["per_v"]
-    W, distW, eccW, dW = ph["W"], ph["distW"], ph["eccW"], ph["dW"]
-    N, distN, eccN = ph["N"], ph["distN"], ph["eccN"]
-
+def _rv_estimate(g: Graph, ph: dict, rest: DataFrame) -> DataFrame:
+    """RV.C:291-306 for the vertices outside S ∪ {w} ∪ Ngh_s (see
+    ``rv_ecc``)."""
+    dW, N, distN = ph["dW"], ph["N"], ph["distN"]
     # --- guide: nearest Ngh_s ancestor along the min-parent BFS tree
     par = (
         g.edges_by_src.join(
@@ -494,29 +437,17 @@ def rv_ecc(
         )
         n_open = got["open"]
 
-    # --- assemble: exact (S ∪ {w} ∪ Ngh_s), then estimates for the rest
-    exact = materialize(
-        S.select("root", F.lit(None).alias("_"))
-        .join(eccS, "root")
-        .select(F.col("root").alias("id"), "ecc")
-        .unionAll(W.join(eccW, "root").select(F.col("root").alias("id"), "ecc"))
-        .unionAll(N.join(eccN, "root").select(F.col("root").alias("id"), "ecc"))
-        .groupBy("id")
-        .agg(F.min("ecc").alias("radius"))
-    )
-
     min_r = (
-        S.join(eccS, "root").groupBy("comp").agg(F.min("ecc").alias("minr"))
+        ph["S"].join(ph["eccS"], "root").groupBy("comp").agg(F.min("ecc").alias("minr"))
     )
-    w_of_comp = W.select("comp", F.col("root").alias("wid"))
+    w_of_comp = ph["W"].select("comp", F.col("root").alias("wid"))
     d_vt_w = (
         distN.join(w_of_comp, distN["id"] == w_of_comp["wid"])
         .select(F.col("root").alias("vt"), F.col("dist").alias("dvtw"))
     )
-    est = (
-        big.join(exact.select("id"), "id", "left_anti")
-        .join(per_v.select("id", "maxd"), "id")
-        .join(distW.select("id", F.col("dist").alias("dw")), "id")
+    return (
+        rest.join(ph["per_v"].select("id", "maxd"), "id")
+        .join(ph["distW"].select("id", F.col("dist").alias("dw")), "id")
         .join(guide.select("id", F.col("g").alias("vt")), "id")
         .join(min_r, "comp")
         .join(w_of_comp, "comp")
@@ -529,7 +460,10 @@ def rv_ecc(
             ["vt", "id"],
         )
         .join(d_vt_w, "vt")
-        .join(eccN.select(F.col("root").alias("vt"), F.col("ecc").alias("evt")), "vt")
+        .join(
+            ph["eccN"].select(F.col("root").alias("vt"), F.col("ecc").alias("evt")),
+            "vt",
+        )
         .select(
             "id",
             F.greatest(
@@ -540,10 +474,44 @@ def rv_ecc(
             ).alias("radius"),
         )
     )
-    return (
-        small.unionAll(exact.select("id", "radius")).unionAll(est)
-        .select("id", F.col("radius").cast("int").alias("radius"))
-    )
+
+
+def rv_ecc(
+    graph: Graph,
+    max_sample: int = 1000,
+    symmetrize: bool = True,
+) -> DataFrame:
+    """``(id, radius INT)`` — eccentricity estimates by the
+    Roditty-Vassilevska-Williams sampling scheme (apps/eccentricity/
+    RV.C:83-326), with every source of run-to-run nondeterminism
+    PINNED so the output is a deterministic function of the graph
+    (the FM-Ecc/LogLog-Ecc treatment, VERDICT r02 item 9):
+
+    - RV.C:89 seeds from ``time(NULL)``; the sample membership test
+      ``hashInt(i+seed) % CCsize < sampleSize`` (RV.C:164-169) becomes
+      the pinned arithmetic stream ``(id*31 + 7) % 101`` compared to a
+      per-component threshold ``round(101·sampleSize/csz)`` with
+      ``sampleSize = min(csz, max_sample, max(10, √(csz·log2 csz)))``
+      — the reference's falling per-vertex rate, so the batched
+      multi-BFS holds ~√(n log n) roots per component, not O(n) — and
+      the sample always contains the component's min id (the
+      reference's non-empty forcing, RV.C:172).
+    - ``Ngh_s`` (the √(n log n) neighborhood of w) is the first
+      nghSize vertices in BFS order from w; the reference takes them
+      in frontier order, nondeterministic within a level
+      (RV.C:249-256, and the comment at RV.C:248-249 documents it);
+      here the order is (level, id) — deterministic.
+    - each vertex's guide into Ngh_s is inherited from its MIN-ID BFS
+      parent rather than the CAS-winning parent (RV.C:56-64).
+
+    Exact-BFS phases (samples, w, Ngh_s — RV.C:176-188, 243-284) and
+    the estimate formula rv = max(maxDist_S(v), d(w,v)); use ecc(vt)
+    when d(vt,v) ≤ d(vt,w), else the sample's min radius
+    (RV.C:291-306) follow the reference unchanged. Components of size
+    1 / 2 short-circuit to 0 / 1 (RV.C:153-156); components whose size
+    ≤ nghSize get fully exact eccentricities (everything lands in
+    Ngh_s)."""
+    return _sample_w_ngh(graph, symmetrize, max_sample, _rv_estimate)
 
 
 def clrstv_ecc(
@@ -562,54 +530,18 @@ def clrstv_ecc(
     takes the max over all of S ∪ {w} ∪ Ngh_s. No guide inheritance,
     so the only pinned choices are the sample stream and Ngh_s
     order."""
-    from ligra_spark.algorithms.components import cc_contract_local
+    return _sample_w_ngh(graph, symmetrize, max_sample, _clrstv_estimate)
 
-    g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
-    comps = cc_contract_local(g)
-    sizes = comps.groupBy("comp").agg(F.count(F.lit(1)).alias("csz"))
-    comps = materialize(comps.join(sizes, "comp"))
 
-    small = comps.where(F.col("csz") <= 2).select(
-        "id", F.when(F.col("csz") == 1, 0).otherwise(1).alias("radius")
-    )
-    big = comps.where(F.col("csz") >= 3)
-    if big.isEmpty():
-        return small.select("id", F.col("radius").cast("int").alias("radius"))
-
-    ph = _sample_w_ngh(g, big, sizes, max_sample)
-
+def _clrstv_estimate(g: Graph, ph: dict, rest: DataFrame) -> DataFrame:
+    """CLRSTV.C:190-199, 281-292 for the vertices outside S ∪ {w} ∪
+    Ngh_s: the max over every BFS source u of ``max(d(u,v), ecc(u) −
+    d(u,v))``."""
     bound = F.greatest(F.col("dist"), F.col("ecc") - F.col("dist"))
-    maxest = (
-        ph["distS"].join(ph["eccS"], "root")
-        .groupBy("id").agg(F.max(bound).alias("s_est"))
-    )
-    west = (
-        ph["distW"].join(ph["eccW"], "root")
-        .select("id", bound.alias("w_est"))
-    )
-    nest = (
-        ph["distN"].join(ph["eccN"], "root")
-        .groupBy("id").agg(F.max(bound).alias("n_est"))
-    )
-    exact = materialize(
-        ph["S"].join(ph["eccS"], "root").select(F.col("root").alias("id"), "ecc")
-        .unionAll(
-            ph["W"].join(ph["eccW"], "root").select(F.col("root").alias("id"), "ecc")
+    for phase in "SWN":
+        rest = rest.join(
+            ph[f"dist{phase}"].join(ph[f"ecc{phase}"], "root")
+            .groupBy("id").agg(F.max(bound).alias(phase)),
+            "id",
         )
-        .unionAll(
-            ph["N"].join(ph["eccN"], "root").select(F.col("root").alias("id"), "ecc")
-        )
-        .groupBy("id")
-        .agg(F.min("ecc").alias("radius"))
-    )
-    est = (
-        big.join(exact.select("id"), "id", "left_anti")
-        .join(maxest, "id")
-        .join(west, "id")
-        .join(nest, "id")
-        .select("id", F.greatest("s_est", "w_est", "n_est").alias("radius"))
-    )
-    return (
-        small.unionAll(exact.select("id", "radius")).unionAll(est)
-        .select("id", F.col("radius").cast("int").alias("radius"))
-    )
+    return rest.select("id", F.greatest("S", "W", "N").alias("radius"))

@@ -4,12 +4,15 @@ Reference: apps/Radii.C — samples 64 start vertices (hashInt,
 Radii.C:84-89), gives each a bit in a per-vertex 64-bit ``Visited``
 mask, and OR-propagates masks along edges (writeOr, Radii.C:27-32);
 a vertex's radius estimate is the last round in which its mask changed
-(Radii.C:34-59). The same multi-source bitmask machinery underlies the
-eccentricity app family (kBFS-Ecc, FM-Ecc, LogLog-Ecc).
+(Radii.C:34-59). The same multi-source register machinery underlies
+the eccentricity app family (kBFS-Ecc, FM-Ecc, LogLog-Ecc).
 
-Spark realization: the mask is a LONG column, the OR-merge is the
-``bit_or`` combiner — the cleanest demonstration that ``edge_map``'s
-combiner set covers the reference's writeOr algorithms.
+Spark realization: the mask is a LONG register in ``_propagate``, the
+one register-propagation loop of the family (eccentricity.py's
+sketches run on it too). A round joins the frontier rows to
+``edges_by_src`` and merges per ``(dst, slot)`` with ``bit_or`` — the
+composite-key form of edgeMapReduce, which ``edge_map`` (keyed by
+``dst`` alone) does not cover. Radii and kBFS use the single slot 0.
 """
 
 from __future__ import annotations
@@ -26,47 +29,62 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
-from ligra_spark.operators.edge_map import edge_map
 
 
-def _or_propagate(
-    g: Graph, state: DataFrame, max_iters: int, metrics: IterMetrics | None
+def _propagate(
+    g: Graph,
+    state: DataFrame,
+    merge: str,
+    max_iters: int,
+    metrics: IterMetrics | None,
 ) -> DataFrame:
-    """The 64-bit OR-propagation fixpoint shared by ``radii`` and
-    ``kbfs_sampled_ecc``: ``state`` is ``(id, mask, r)`` with every
-    source's bit set in ``mask`` and ``r`` each vertex's starting round
-    value; frontier vertices OR their mask into their out-neighbors'
-    (writeOr, Radii.C:27-32) until no mask changes. Returns
-    ``(id, mask, r)``, ``r`` = the last round v's mask changed (its
-    starting value if it never did)."""
-    state, got = commit(state, f=F.count_if(F.col("mask") != 0))
-    frontier = state.where(F.col("mask") != 0).select("id", "mask")
+    """The register-propagation fixpoint of the whole eccentricity
+    family (Radii, kBFS, kBFS-Exact, FM-Ecc, LogLog-Ecc). ``state`` is
+    ``(id, slot, reg, r)``: one row per vertex register (``slot`` 0 for
+    the 64-bit BFS masks, ``0..counters-1`` for the sketches) and ``r``
+    each row's starting round value. Each round the frontier rows send
+    their register along out-edges and ``groupBy(dst, slot)`` merges
+    them with ``merge`` (``bit_or`` — writeOr, Radii.C:27-32 and Ecc_F,
+    FM-Ecc.C:48-56 — or ``max``, LogLog-Ecc.C) until no register
+    changes. Returns ``(id, slot, reg, r)``, ``r`` = the last round the
+    row changed (its starting value if it never did).
+
+    The first frontier is every row with ``reg != 0`` and later ones are
+    the rows that just changed. That is exact because 0 is the identity
+    of both merges (of ``max`` since its registers are >= 0), and both
+    merges are idempotent, so re-sending an unchanged register changes
+    nothing."""
+    agg = F.bit_or if merge == "bit_or" else F.max
+    msg = F.coalesce("msg", F.lit(0))
+    merged = (
+        F.col("reg").bitwiseOR(msg) if merge == "bit_or" else F.greatest("reg", msg)
+    )
+    state, got = commit(state, f=F.count_if(F.col("reg") != 0))
+    frontier = state.where(F.col("reg") != 0).select("id", "slot", "reg")
     frontier_n = got["f"]
     timer = Timer()
     for it in range(max_iters):
         if frontier_n == 0:
             break
-        msgs = edge_map(
-            g,
-            frontier,
-            message=F.col("mask"),
-            combiner="bit_or",
-            frontier_size=frontier_n,
+        msgs = (
+            g.edges_by_src.join(frontier.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"), "slot")
+            .agg(agg("reg").alias("msg"))
         )
-        nxt = state.join(msgs, "id", "left").select(
-            "id",
-            "mask",
-            "r",
-            (F.col("mask").bitwiseOR(F.coalesce("msg", F.lit(0)))).alias("mask_new"),
+        nxt = state.join(msgs, ["id", "slot"], "left").select(
+            "id", "slot", "reg", "r", merged.alias("reg_new")
         )
-        changed = F.col("mask_new") != F.col("mask")
+        changed = F.col("reg_new") != F.col("reg")
         nxt, got = commit(nxt, state, f=F.count_if(changed))
         frontier_n = got["f"]
-        frontier = nxt.where(changed).select("id", F.col("mask_new").alias("mask"))
+        frontier = nxt.where(changed).select(
+            "id", "slot", F.col("reg_new").alias("reg")
+        )
         state = derive(
             nxt.select(
                 "id",
-                F.col("mask_new").alias("mask"),
+                "slot",
+                F.col("reg_new").alias("reg"),
                 F.when(changed, F.lit(it + 1)).otherwise(F.col("r")).alias("r"),
             ),
             nxt,
@@ -106,10 +124,11 @@ def radii(
     )
     state = g.vertices.join(sample.select("id", "bit"), "id", "left").select(
         "id",
-        F.coalesce("bit", F.lit(0)).alias("mask"),
+        F.lit(0).alias("slot"),
+        F.coalesce("bit", F.lit(0)).alias("reg"),
         F.when(F.col("bit").isNotNull(), 0).otherwise(F.lit(-1)).alias("r"),
     )
-    return _or_propagate(g, state, max_iters, metrics).select(
+    return _propagate(g, state, "bit_or", max_iters, metrics).select(
         "id", F.col("r").alias("radius")
     )
 
@@ -164,13 +183,16 @@ def kbfs_sampled_ecc(
         labels = connected_components(g, symmetrize=False)
     labels = materialize(labels.select("id", "comp"))
 
-    def _propagate(sources: DataFrame) -> DataFrame:
+    def _ecc(sources: DataFrame) -> DataFrame:
         """(id, ecc) = the last round each vertex's per-component mask
         changed (0 if never reached beyond init)."""
         state = labels.join(sources.select("id", "bit"), "id", "left").select(
-            "id", F.coalesce("bit", F.lit(0)).alias("mask"), F.lit(0).alias("r")
+            "id",
+            F.lit(0).alias("slot"),
+            F.coalesce("bit", F.lit(0)).alias("reg"),
+            F.lit(0).alias("r"),
         )
-        return _or_propagate(g, state, 1000, metrics).select(
+        return _propagate(g, state, "bit_or", 1000, metrics).select(
             "id", F.col("r").alias("ecc")
         )
 
@@ -184,7 +206,7 @@ def kbfs_sampled_ecc(
 
     w1 = Window.partitionBy("comp").orderBy(sample_rank.asc(), F.col("id").asc())
     srcs1 = _bits(labels.select("id", "comp", F.row_number().over(w1).alias("rn")))
-    ecc = _propagate(srcs1)
+    ecc = _ecc(srcs1)
     if phases >= 2:
         sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("csz"))
         big = labels.join(sizes, "comp").where(F.col("csz") >= F.lit(fringe_min_size))
@@ -196,7 +218,7 @@ def kbfs_sampled_ecc(
             .select("id", "comp", "e1")
             .select("id", "comp", F.row_number().over(w2).alias("rn"))
         )
-        ecc2 = _propagate(fringe)
+        ecc2 = _ecc(fringe)
         ecc = ecc.join(ecc2.withColumnRenamed("ecc", "e2"), "id").select(
             "id", F.greatest("ecc", "e2").alias("ecc")
         )

@@ -69,10 +69,9 @@ def build_csr_blocks(edges: DataFrame, num_partitions: int) -> DataFrame:
     def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         srcs_parts, dsts_parts, pid_parts = [], [], []
         for b in batches:
-            d = b.to_pydict()
-            srcs_parts.append(np.asarray(d["src"], dtype=np.int64))
-            dsts_parts.append(np.asarray(d["dst"], dtype=np.int64))
-            pid_parts.append(np.asarray(d["part_id"], dtype=np.int32))
+            srcs_parts.append(b.column("src").to_numpy(zero_copy_only=False))
+            dsts_parts.append(b.column("dst").to_numpy(zero_copy_only=False))
+            pid_parts.append(b.column("part_id").to_numpy(zero_copy_only=False))
         if not srcs_parts:
             return
         src = np.concatenate(srcs_parts)
@@ -92,12 +91,10 @@ def build_csr_blocks(edges: DataFrame, num_partitions: int) -> DataFrame:
             yield pa.RecordBatch.from_pydict(
                 {
                     "part_id": pa.array([int(p)], pa.int32()),
-                    "srcs": pa.array([uniq_src.tolist()], pa.list_(pa.int64())),
-                    "indptr": pa.array([indptr.tolist()], pa.list_(pa.int64())),
-                    "uniq_dsts": pa.array([uniq_dst.tolist()], pa.list_(pa.int64())),
-                    "dst_inverse": pa.array(
-                        [inverse.tolist()], pa.list_(pa.int64())
-                    ),
+                    "srcs": pa.array([uniq_src], pa.list_(pa.int64())),
+                    "indptr": pa.array([indptr], pa.list_(pa.int64())),
+                    "uniq_dsts": pa.array([uniq_dst], pa.list_(pa.int64())),
+                    "dst_inverse": pa.array([inverse], pa.list_(pa.int64())),
                 }
             )
 

@@ -72,8 +72,6 @@ def cosine_topk(
     (cosine desc, neighbor_id asc) — id tie-break keeps output
     deterministic and engine-portable (similarity values themselves are
     not emitted, so last-bit float divergence can't flip comparisons)."""
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
     )
@@ -88,14 +86,7 @@ def cosine_topk(
             cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _topk_reduce(scored, k)
 
 
 def _hyperplane(dim: int, plane: int) -> list[float]:
@@ -140,8 +131,6 @@ def lsh_bucket_topk(
 
     Pass ``dim`` when known (Spark's array<float> schema does not carry
     a length, so omitting it costs one ``first()`` driver job)."""
-    from pyspark.sql import Window
-
     if not 1 <= nprobe <= planes + 1:
         raise ValueError("nprobe must be in [1, planes + 1]")
     if dim is None:
@@ -209,14 +198,7 @@ def lsh_bucket_topk(
             cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _topk_reduce(scored, k)
 
 
 def _query_arrays(ids, vecs) -> tuple:
@@ -778,8 +760,6 @@ def ivf_topk(
     ``nprobe/n_cells`` of the corpus and the shuffle is bounded by the
     candidate lists. Rank ties break by neighbor id, same contract as
     :func:`cosine_topk`."""
-    from pyspark.sql import Window
-
     cents = ivf_fit_cells(corpus, n_cells, iters, id_col, vec_col)
 
     def amin_cells(vcol, n):
@@ -808,11 +788,4 @@ def ivf_topk(
             cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _topk_reduce(scored, k)

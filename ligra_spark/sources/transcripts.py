@@ -141,23 +141,26 @@ def generate_transcripts(
     return spark.range(0, n_conv, 1, parts).mapInPandas(gen, TRANSCRIPT_SCHEMA)
 
 
-def vertex_ids(transcripts: DataFrame, mode: str = "hash") -> DataFrame:
-    """``(conv_id, turn_idx, id LONG)`` vertex-id mapping.
+def _vertex_id(mode: str):
+    """The vertex-id Column over ``(conv_id, turn_idx)``.
 
     hash: xxhash64 — no global coordination, scale path.
     dense: conv sequence number × 2^20 + turn_idx — readable test ids
     (requires conv_id of the generator's ``conv_{k:08d}`` shape).
     """
     if mode == "hash":
-        vid = F.xxhash64("conv_id", "turn_idx")
-    elif mode == "dense":
-        vid = (
+        return F.xxhash64("conv_id", "turn_idx")
+    if mode == "dense":
+        return (
             F.substring("conv_id", 6, 8).cast("long") * F.lit(1 << 20)
             + F.col("turn_idx").cast("long")
         )
-    else:
-        raise ValueError(f"unknown id mode {mode!r}")
-    return transcripts.select("conv_id", "turn_idx", vid.alias("id"))
+    raise ValueError(f"unknown id mode {mode!r}")
+
+
+def vertex_ids(transcripts: DataFrame, mode: str = "hash") -> DataFrame:
+    """``(conv_id, turn_idx, id LONG)`` vertex-id mapping (``_vertex_id``)."""
+    return transcripts.select("conv_id", "turn_idx", _vertex_id(mode).alias("id"))
 
 
 def derive_edges(
@@ -173,8 +176,10 @@ def derive_edges(
     is a valid partition-closure key for ``Graph(closure_key="ckey")``
     — the iterative algorithms then run as partition-local Arrow
     kernels with zero per-iteration shuffle (closed.py)."""
-    ids = vertex_ids(transcripts, id_mode)
-    t = transcripts.join(ids, ["conv_id", "turn_idx"])
+    # a turn needs both key columns to be a vertex
+    t = transcripts.where(
+        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+    ).withColumn("id", _vertex_id(id_mode))
 
     key_cols = [F.xxhash64("conv_id").alias("ckey")] if closure_key else []
     w = Window.partitionBy("conv_id").orderBy("turn_idx")

@@ -141,3 +141,39 @@ def test_clrstv_exact_on_small_components(mk_graph):
         10: 6, 11: 5, 12: 4, 13: 3, 14: 4, 15: 5, 16: 6,
     }
     g.unpersist()
+
+
+def test_sketch_ecc_one_commit_per_round(spark, monkeypatch):
+    """FM-Ecc commits once per round: the changed-register count rides
+    the round's checkpoint job, with no separate eccentricity table or
+    changed-id set to materialize."""
+    import sys
+
+    from ligra_spark.algorithms import _iter
+
+    edges = [(i, i + 1) for i in range(5)]
+    both = edges + [(d, s) for s, d in edges]
+    g = Graph(
+        spark.createDataFrame(both, "src long, dst long"),
+        symmetric=True,
+        num_partitions=2,
+    )
+    real, calls = _iter.materialize, []
+
+    def spy(df, prev=None):
+        calls.append(df)
+        return real(df, prev)
+
+    # _iter itself (commit calls it) and every module that imported it
+    for mod in list(sys.modules.values()):
+        if (
+            getattr(mod, "__name__", "").startswith("ligra_spark")
+            and getattr(mod, "materialize", None) is real
+        ):
+            monkeypatch.setattr(mod, "materialize", spy)
+    m = _iter.IterMetrics()
+    got = {r["id"]: r["ecc"] for r in fm_ecc(g, counters=32, metrics=m).collect()}
+    assert got == _exact_ecc(edges, range(6))
+    assert m.iterations > 0
+    assert len(calls) <= m.iterations + 2, (len(calls), m.iterations)
+    g.unpersist()
