@@ -146,9 +146,7 @@ def _hash_min(
 
 def cc_contract_local(
     graph: Graph,
-    edges: DataFrame | None = None,
     stall_ratio: float = 0.7,
-    max_rounds: int = 64,
     metrics: IterMetrics | None = None,
 ) -> DataFrame:
     """``(id, comp)`` — comp = min id in component; identical output to
@@ -168,9 +166,9 @@ def cc_contract_local(
     (the kernel runs in place) and every later round is sized by the
     *unresolved couplings*, near zero for locality-preserving layouts:
     per-conversation edges (derive_edges) contract in 1-2 rounds, as
-    no edge crosses a conversation. ``edges`` picks the partitioning
-    the kernel exploits (default: the graph's as-derived table;
-    union-find ignores direction, so no symmetrized copy is built).
+    no edge crosses a conversation. The kernel exploits the graph's
+    as-derived partitioning (``edges_derived``; union-find ignores
+    direction, so no symmetrized copy is built).
 
     Degenerate case, measured on 4 cores: a 20k-vertex path with
     shuffled ids and edge order (39,998 edges). With AQE coalescing on
@@ -193,17 +191,19 @@ def cc_contract_local(
     # declared closure: every component is inside one closure group,
     # so the single-pass closed kernel is exact — no coupling rounds,
     # no pair-stream sort-shuffle (closed.py)
-    _, _, view = choose_backend(
-        graph, eligible=edges is None, whole_graph=False, metrics=metrics
-    )
+    _, _, view = choose_backend(graph, whole_graph=False, metrics=metrics)
     if view is not None:
         return connected_components_closed(view, metrics=metrics)
-    edges = graph.edges_derived if edges is None else edges
-    return _contract(edges, stall_ratio, max_rounds, metrics)
+    return _contract(graph.edges_derived, stall_ratio, metrics)
+
+
+# every round either shrinks the residual below stall_ratio × the last
+# one or ends the loop, so at the default 0.7 this covers ~8e9 edges
+_MAX_ROUNDS = 64
 
 
 def _contract(
-    edges: DataFrame, stall_ratio: float = 0.7, max_rounds: int = 64,
+    edges: DataFrame, stall_ratio: float = 0.7,
     metrics: IterMetrics | None = None,
 ) -> DataFrame:
     """The contraction rounds of ``cc_contract_local`` over ``edges``."""
@@ -214,7 +214,7 @@ def _contract(
     fallback: dict = {}  # {"fallback": "local"} on the coalesced round
     timer = Timer()
 
-    for it in range(max_rounds):
+    for it in range(_MAX_ROUNDS):
         # One edge-sized sort-shuffle per round: the window over v
         # yields both the mapping (first row per v carries the min
         # label) and the residual couplings (rows whose label isn't the
@@ -281,7 +281,7 @@ def _contract(
         own_edges = residual  # already materialized; next round reads it
     else:
         raise RuntimeError(
-            f"cc_contract_local did not converge in {max_rounds} rounds"
+            f"cc_contract_local did not converge in {_MAX_ROUNDS} rounds"
         )
 
     # resolve: compose mappings from the last (smallest) backward, then
@@ -361,12 +361,10 @@ def bfs_components(
         unpersist(roots)
         frontier = vis
         while True:
-            msgs = (
-                frontier.select(F.col("id").alias("src"), "comp")
-                .join(g.edges_by_src, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("comp").alias("_mc"))
-            )
+            msgs = edge_map(
+                g, frontier, message=F.col("comp"), combiner="min",
+                direction="shuffle",
+            ).withColumnRenamed("msg", "_mc")
             merged = (
                 vis.drop("_chg")
                 .join(msgs, "id", "full")

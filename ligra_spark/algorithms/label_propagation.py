@@ -9,8 +9,9 @@ adopts the most frequent label among its neighbors, breaking ties by
 **minimum label** so rounds are deterministic and reproducible across
 partitionings (SURVEY.md §2.6).
 
-Mode runs as ONE hash aggregation: ``mode(label, deterministic=true)``
-is a TypedImperativeAggregate whose partial state is a per-destination
+Each round is ``edge_map``'s shuffle plan with the ``mode`` combiner,
+ONE hash aggregation: ``mode(label, deterministic=true)`` is a
+TypedImperativeAggregate whose partial state is a per-destination
 label→count map built MAP-SIDE, so only the partial maps shuffle — one
 exchange per round, keyed by dst. (Rounds 1-3 ran it as two chained
 aggregations, ``groupBy(dst,label).count()`` then an argmax; the second
@@ -36,6 +37,7 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
+from ligra_spark.operators.edge_map import edge_map
 
 
 def label_propagation(
@@ -70,16 +72,14 @@ def label_propagation(
     for it in range(max_iters):
         # single-exchange mode: partial label->count maps combine
         # map-side, ties break to the minimum label (deterministic)
-        best = (
-            state.withColumnRenamed("id", "src")
-            .join(g.edges_by_src, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.expr("mode(label, true)").alias("new_label"))
+        best = edge_map(
+            g, state, message=F.col("label"), combiner="mode",
+            direction="shuffle",
         )
         nxt = state.join(best, "id", "left").select(
             "id",
             "label",
-            F.coalesce("new_label", "label").alias("label_next"),
+            F.coalesce("msg", "label").alias("label_next"),
         )
         nxt, got = commit(
             nxt, state, changed=F.count_if(F.col("label") != F.col("label_next"))

@@ -12,14 +12,16 @@ Two deliberate semantic reproductions for 1e-6 parity:
   rank mass — PageRank.C:33-40 never redistributes sink mass, so total
   rank sum decays below 1. We match that exactly.
 - **All-vertices frontier every round** (PageRank.C:80-87): the
-  iteration is always dense, so every round is one SpMV: the state's
-  shares join ``edges_by_src`` and sum by ``dst``, one shuffle of
+  iteration is always dense, so every round is one SpMV, ``edge_map``'s
+  shuffle plan with the ``sum`` combiner: the state's shares join
+  ``edges_by_src`` and sum by ``dst``, one shuffle of
   partially-aggregated contributions. It is not exchange-free. Under
   the broadcast threshold (64 MB from ``get_spark``) Spark broadcasts
-  the cached edge table every round (``BroadcastHashJoin … BuildRight``
-  on the 29,932-edge R-MAT graph), and the checkpointed state carries
-  no partitioning (``_iter._reset_stats``), so the state ⋈
-  contributions join exchanges it on ``id``.
+  the cached edge table every round (a ``BroadcastHashJoin`` on the
+  29,932-edge R-MAT graph), and the checkpointed state carries no
+  partitioning (``_iter._reset_stats``), so the state ⋈ contributions
+  join exchanges it on ``id``. ``csr.pagerank_csr`` runs the same
+  round loop with the Arrow CSR kernel as its gather.
 
 ``pagerank_delta`` is the frontier-sparsifying variant
 (apps/PageRankDelta.C): only vertices whose rank moved by more than
@@ -41,6 +43,7 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
+from ligra_spark.operators.edge_map import edge_map
 from ligra_spark.operators.vertex_ops import vertex_map
 
 
@@ -70,6 +73,22 @@ def pagerank(
         return pagerank_closed(
             view, damping=damping, tol=tol, max_iters=max_iters, metrics=metrics
         )
+    return _power_iterate(
+        graph,
+        lambda shares: edge_map(
+            graph, shares, message=F.col("share"), combiner="sum",
+            direction="shuffle",
+        ),
+        damping, tol, max_iters, metrics, checkpointer,
+    )
+
+
+def _power_iterate(
+    graph: Graph, gather, damping: float, tol: float, max_iters: int,
+    metrics: IterMetrics | None, checkpointer=None,
+) -> DataFrame:
+    """The distributed PageRank rounds. ``gather(shares)`` maps
+    ``(id, share)`` to the per-destination sums ``(id, msg)``."""
     n = graph.n
     if n == 0:
         return graph.spark.createDataFrame([], "id long, rank double")
@@ -90,13 +109,10 @@ def pagerank(
 
     timer = Timer()
     for it in range(start_iter, max_iters):
-        contribs = (
-            state.where(F.col("out_deg") > 0)
-            .select("id", (F.col("rank") / F.col("out_deg")).alias("share"))
-            .withColumnRenamed("id", "src")
-            .join(graph.edges_by_src, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("share").alias("contrib"))
+        contribs = gather(
+            state.where(F.col("out_deg") > 0).select(
+                "id", (F.col("rank") / F.col("out_deg")).alias("share")
+            )
         )
         # PR_Vertex_F (PageRank.C:44-56) as a vertex_map: the damped
         # rank update is a pure columnar expression over gathered state
@@ -104,7 +120,7 @@ def pagerank(
             state.join(contribs, "id", "left"),
             {
                 "rank_next": F.lit(base)
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                + F.lit(damping) * F.coalesce("msg", F.lit(0.0))
             },
         ).select("id", "out_deg", "rank", "rank_next")
         nxt, got = commit(
@@ -133,8 +149,9 @@ def pagerank_delta(
 ) -> DataFrame:
     """Delta-filtered PageRank (apps/PageRankDelta.C:27-127): after the
     first round only vertices with ``|Δ| > eps2 · p`` remain in the
-    frontier, so late rounds push from a sparse frontier (broadcast
-    zero-shuffle plan) instead of rescanning dense state."""
+    frontier, so late rounds push from a sparse frontier (``edge_map``'s
+    m/20 rule picks the broadcast zero-shuffle plan) instead of
+    rescanning dense state."""
     # Derivation: with the power iteration p_{t+1} = base + d·A·p_t and
     # p_0 = 1/n, the deltas δ_t = p_t − p_{t-1} satisfy
     #   δ_1 = d·A·δ_0 + (base − 1/n)   with δ_0 = 1/n,
@@ -157,17 +174,12 @@ def pagerank_delta(
     frontier_n = n
     timer = Timer()
     for it in range(max_iters):
-        use_broadcast = frontier_n * 20 < n  # m/20-style heuristic on rows
-        fr = frontier.where(F.col("out_deg") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("delta") / F.col("out_deg")).alias("share"),
+        shares = frontier.where(F.col("out_deg") > 0).select(
+            "id", (F.col("delta") / F.col("out_deg")).alias("share")
         )
-        if use_broadcast:
-            live = graph.edges_by_dst.join(F.broadcast(fr), "src")
-        else:
-            live = graph.edges_by_src.join(fr, "src")
-        contribs = live.groupBy(F.col("dst").alias("id")).agg(
-            F.sum("share").alias("contrib")
+        contribs = edge_map(
+            graph, shares, message=F.col("share"), combiner="sum",
+            frontier_size=frontier_n,
         )
         kick = (base - 1.0 / n) if it == 0 else 0.0
         nxt = state.join(contribs, "id", "left").select(
@@ -175,7 +187,7 @@ def pagerank_delta(
             "out_deg",
             (
                 F.col("p")
-                + F.coalesce(F.lit(damping) * F.col("contrib"), F.lit(0.0))
+                + F.coalesce(F.lit(damping) * F.col("msg"), F.lit(0.0))
                 + F.lit(kick)
             ).alias("p_new"),
             "p",

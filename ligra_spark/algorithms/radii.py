@@ -248,24 +248,22 @@ def kbfs_exact(
         from ligra_spark.algorithms.closed import eccentricity_closed
 
         return eccentricity_closed(view, metrics=metrics)
-    from math import ceil
-
     from pyspark.sql import Window
 
-    from ligra_spark.algorithms._iter import materialize
-
     g = graph.symmetrized() if not graph.symmetric else graph
-    n = g.n
     # deterministic batches by id rank (single-partition window — exact
-    # eccentricity is a small/medium-graph operation by nature)
-    verts = materialize(
+    # eccentricity is a small/medium-graph operation by nature); the
+    # batch count rides the commit, so no separate vertex count runs
+    verts, got = commit(
         g.vertices.withColumn(
             "batch",
             ((F.row_number().over(Window.orderBy("id")) - 1) / batch).cast("long"),
-        )
+        ),
+        nb=F.max("batch"),
     )
+    n_batches = 0 if got["nb"] is None else got["nb"] + 1
     ecc = g.vertices.select("id", F.lit(-1).alias("radius"))
-    for b in range(ceil(n / batch)):
+    for b in range(n_batches):
         srcs = verts.where(F.col("batch") == b).select("id")
         part = radii(g, symmetrize=False, metrics=metrics, sources=srcs)
         ecc = materialize(

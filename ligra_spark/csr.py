@@ -171,44 +171,16 @@ def pagerank_csr(
 ) -> DataFrame:
     """PageRank over CSR blocks — identical semantics to
     algorithms.pagerank (damping 0.85, L1 < tol, dangling mass lost),
-    with the join replaced by the Arrow gather-scatter kernel."""
-    from ligra_spark.algorithms._iter import Timer, commit, derive, materialize
+    with the same rounds and the Arrow gather-scatter kernel as the
+    gather."""
+    from ligra_spark.algorithms.pagerank import _power_iterate
 
-    n = graph.n
-    if n == 0:
-        return graph.spark.createDataFrame([], "id long, rank double")
-    base = (1.0 - damping) / n
     P = graph.num_partitions
     blocks = build_csr_blocks(graph.edges_by_src, P)
     blocks.count()  # build once
-
-    state = materialize(
-        graph.degrees.select("id", "out_deg", F.lit(1.0 / n).alias("rank"))
+    ranks = _power_iterate(
+        graph, lambda shares: csr_spmv(blocks, shares, P),
+        damping, tol, max_iters, metrics,
     )
-    timer = Timer()
-    for it in range(max_iters):
-        shares = state.where(F.col("out_deg") > 0).select(
-            "id", (F.col("rank") / F.col("out_deg")).alias("share")
-        )
-        contribs = csr_spmv(blocks, shares, P)
-        nxt = state.join(contribs, "id", "left").select(
-            "id",
-            "out_deg",
-            "rank",
-            (F.lit(base) + F.lit(damping) * F.coalesce("msg", F.lit(0.0))).alias(
-                "rank_next"
-            ),
-        )
-        nxt, got = commit(
-            nxt, state, l1=F.sum(F.abs(F.col("rank_next") - F.col("rank")))
-        )
-        l1 = float(got["l1"] or 0.0)
-        state = derive(
-            nxt.select("id", "out_deg", F.col("rank_next").alias("rank")), nxt
-        )
-        if metrics is not None:
-            metrics.record(it, l1=l1, wall_s=timer.lap())
-        if l1 < tol:
-            break
     blocks.unpersist()
-    return state.select("id", "rank")
+    return ranks

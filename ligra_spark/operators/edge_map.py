@@ -25,12 +25,25 @@ choice:
   output already is, since it came out of a ``groupBy(dst)``) against
   the ``src``-partitioned edge table exchange-free, then shuffle only
   the partially-aggregated messages into ``groupBy(dst)``. One bounded
-  exchange per iteration; the edge table never moves.
+  exchange per iteration. Under the broadcast threshold Spark may
+  broadcast the cached edge table instead (distributed PageRank's
+  rounds on the 29,932-edge R-MAT graph do).
 
 Skew: hub destinations are handled by Spark's partial (map-side)
 aggregation — each task pre-combines its messages per ``dst`` before the
 exchange, so a hub costs one partial row per map task, not one row per
 in-edge — plus AQE skew handling.
+
+Callers: every distributed round that gathers one value per destination
+runs through this operator (PageRank, PageRankDelta, label propagation,
+hash-min CC, BFSCC's flood, BFS, Bellman-Ford, MIS, BC's forward pass,
+Δ-stepping, the local-cluster apps), so the direction rule exists
+only here. Left outside, because they key by more than the destination
+or restrict both endpoints: ``radii._propagate`` (``(dst, slot)``
+registers), ``eccentricity._multi_root_bfs`` (``(root, id)``), CF's
+K-vector sums, BC's backward pass and RV's parent join (both endpoints
+restricted by level), set cover's claims (uncovered elements only) and
+the hypergraph MIS counts.
 """
 
 from __future__ import annotations
@@ -43,15 +56,14 @@ from ligra_spark.graph import Graph
 # updateAtomic analogs (utils.h:304-364): every reference app's combiner
 # is commutative+associative, which is what Spark's partial+final
 # aggregation requires. CAS-claim-once (BFS.C:33-35) maps to `min` for a
-# deterministic winner.
+# deterministic winner. `mode` (label propagation) combines per-dst
+# label->count maps map-side; ties go to the minimum label.
 COMBINERS = {
     "sum": F.sum,
     "min": F.min,
     "max": F.max,
-    "count": lambda c: F.count(F.lit(1)),
-    "bit_or": F.bit_or,
-    "bit_and": F.bit_and,
     "any": F.max,  # over booleans
+    "mode": lambda c: F.mode(c, deterministic=True),
 }
 
 # Below this many frontier rows, ship the frontier to every task instead

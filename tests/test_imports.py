@@ -77,3 +77,18 @@ def test_library_env_reads():
         "SPARK_GRAFT_PRETOUCH",
         "LIGRA_LOCAL_GRAPH_EDGES",
     }
+
+
+def test_direction_rule_only_in_edge_map():
+    """The push/pull choice lives in edge_map alone: no algorithm or
+    operator builds its own broadcast frontier join or m/20 rule."""
+    root = Path(__file__).resolve().parent.parent / "ligra_spark"
+    hits = [
+        f"{path.parent.name}/{path.name}:{i}"
+        for sub in ("algorithms", "operators")
+        for path in sorted((root / sub).glob("*.py"))
+        if path.name != "edge_map.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "F.broadcast(" in line or re.search(r"\*\s*20\b", line)
+    ]
+    assert hits == []

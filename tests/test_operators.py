@@ -1,6 +1,6 @@
-"""Operator-level contracts: edge_map's destination membership and
-direction check, edge_map_count semantics (both grouping sides),
-pack_edges, vertex_map/vertex_filter."""
+"""Operator-level contracts: edge_map's destination membership, mode
+combiner and direction check, edge_map_count semantics (both grouping
+sides), pack_edges, vertex_map/vertex_filter."""
 
 from __future__ import annotations
 
@@ -75,6 +75,29 @@ def test_edge_map_zero_share_destinations(spark):
             ).collect()
         }
         assert got == {1: 0.0, 2: 0.0, 3: 1.0}, direction
+    g.unpersist()
+
+
+def test_edge_map_mode_ties_to_min_label(spark):
+    """The ``mode`` combiner (label propagation's gather): the most
+    frequent label wins, a frequency tie goes to the minimum label, on
+    both plans."""
+    # dst 9 receives labels {5, 5, 7, 7, 9}: 5 and 7 tie at two each
+    g = Graph(
+        spark.createDataFrame(
+            [(1, 9), (2, 9), (3, 9), (4, 9), (6, 9)], "src long, dst long"
+        ),
+        num_partitions=2,
+    )
+    frontier = spark.createDataFrame(
+        [(1, 7), (2, 5), (3, 9), (4, 7), (6, 5)], "id long, label long"
+    )
+    for direction in ("broadcast", "shuffle"):
+        got = edge_map(
+            g, frontier, message=F.col("label"), combiner="mode",
+            direction=direction,
+        ).collect()
+        assert [(r["id"], r["msg"]) for r in got] == [(9, 5)], direction
     g.unpersist()
 
 
