@@ -18,10 +18,9 @@ Two deliberate semantic reproductions for 1e-6 parity:
   partially-aggregated contributions. It is not exchange-free. Under
   the broadcast threshold (64 MB from ``get_spark``) Spark broadcasts
   the cached edge table every round (a ``BroadcastHashJoin`` on the
-  29,932-edge R-MAT graph), and the checkpointed state carries no
-  partitioning (``_iter._reset_stats``), so the state ⋈ contributions
-  join exchanges it on ``id``. ``csr.pagerank_csr`` runs the same
-  round loop with the Arrow CSR kernel as its gather.
+  29,932-edge R-MAT graph), and under AQE the checkpointed state
+  reports no partitioning, so the state ⋈ contributions join exchanges
+  it on ``id``.
 
 ``pagerank_delta`` is the frontier-sparsifying variant
 (apps/PageRankDelta.C): only vertices whose rank moved by more than
@@ -39,7 +38,6 @@ from ligra_spark.algorithms._iter import (
     Timer,
     commit,
     derive,
-    materialize,
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
@@ -73,46 +71,28 @@ def pagerank(
         return pagerank_closed(
             view, damping=damping, tol=tol, max_iters=max_iters, metrics=metrics
         )
-    return _power_iterate(
-        graph,
-        lambda shares: edge_map(
-            graph, shares, message=F.col("share"), combiner="sum",
-            direction="shuffle",
-        ),
-        damping, tol, max_iters, metrics, checkpointer,
-    )
-
-
-def _power_iterate(
-    graph: Graph, gather, damping: float, tol: float, max_iters: int,
-    metrics: IterMetrics | None, checkpointer=None,
-) -> DataFrame:
-    """The distributed PageRank rounds. ``gather(shares)`` maps
-    ``(id, share)`` to the per-destination sums ``(id, msg)``."""
-    n = graph.n
+    # state: (id, out_deg, rank); its first commit counts n and m
+    state = graph.degrees.select("id", "out_deg")
+    start_iter = 0
+    resumed = checkpointer.resume() if checkpointer is not None else None
+    if resumed is not None:
+        start_iter, st = resumed
+        state = state.join(st, "id")
+    state, n = _commit_degrees(graph, state)
     if n == 0:
         return graph.spark.createDataFrame([], "id long, rank double")
+    if resumed is None:
+        state = derive(state.withColumn("rank", F.lit(1.0 / n)), state)
     base = (1.0 - damping) / n
-
-    # state: (id, out_deg, rank). Its checkpoint has no partitioning
-    # Spark can see, so every round exchanges it on id again.
-    state = graph.degrees.select(
-        "id", "out_deg", F.lit(1.0 / n).alias("rank")
-    )
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start_iter, st = resumed
-            state = graph.degrees.select("id", "out_deg").join(st, "id")
-    state = materialize(state)
 
     timer = Timer()
     for it in range(start_iter, max_iters):
-        contribs = gather(
+        contribs = edge_map(
+            graph,
             state.where(F.col("out_deg") > 0).select(
                 "id", (F.col("rank") / F.col("out_deg")).alias("share")
-            )
+            ),
+            message=F.col("share"), combiner="sum", direction="shuffle",
         )
         # PR_Vertex_F (PageRank.C:44-56) as a vertex_map: the damped
         # rank update is a pure columnar expression over gathered state
@@ -139,6 +119,16 @@ def _power_iterate(
     return state.select("id", "rank")
 
 
+def _commit_degrees(graph: Graph, state: DataFrame) -> tuple[DataFrame, int]:
+    """Commit a loop's starting state (one row per vertex, with
+    ``out_deg``) and read ``n`` and ``m = Σ out_deg`` off the same job.
+    Both are cached on ``graph``, so neither the loop nor ``edge_map``'s
+    m/20 rule runs a count job for them."""
+    state, got = commit(state, n=F.count(F.lit(1)), m=F.sum("out_deg"))
+    graph._n, graph._m = got["n"], got["m"] or 0
+    return state, got["n"]
+
+
 def pagerank_delta(
     graph: Graph,
     damping: float = 0.85,
@@ -158,17 +148,18 @@ def pagerank_delta(
     #   δ_{t+1} = d·A·δ_t              for t ≥ 1,
     # so converged p equals plain PageRank exactly — matching the
     # first-round special case in PageRankDelta.C:47-85.
-    n = graph.n
+    state, n = _commit_degrees(graph, graph.degrees.select("id", "out_deg"))
     if n == 0:
         return graph.spark.createDataFrame([], "id long, rank double")
     base = (1.0 - damping) / n
-    state = materialize(
-        graph.degrees.select(
+    state = derive(
+        state.select(
             "id",
             "out_deg",
             F.lit(1.0 / n).alias("p"),
             F.lit(1.0 / n).alias("delta"),
-        )
+        ),
+        state,
     )
     frontier = state.select("id", "out_deg", "delta")
     frontier_n = n

@@ -20,14 +20,16 @@ choice:
   **no exchange at all** — a zero-shuffle iteration. (Cost: a full scan
   of the cached columnar edge table, which whole-stage codegen makes
   cheap.)
-- **shuffle / co-partitioned plan** (large or whole-vertex frontier):
-  join frontier state (hash-partitioned on ``id`` — which iteration
-  output already is, since it came out of a ``groupBy(dst)``) against
-  the ``src``-partitioned edge table exchange-free, then shuffle only
-  the partially-aggregated messages into ``groupBy(dst)``. One bounded
-  exchange per iteration. Under the broadcast threshold Spark may
-  broadcast the cached edge table instead (distributed PageRank's
-  rounds on the 29,932-edge R-MAT graph do).
+- **shuffle plan** (large or whole-vertex frontier): join frontier
+  state against the ``src``-partitioned edge table, then shuffle only
+  the partially-aggregated messages into ``groupBy(dst)``. The join
+  would be exchange-free for a frontier hash-partitioned on ``id``, but
+  loop state is not: under AQE (``get_spark``'s default, the mode the
+  loops run in) a ``localCheckpoint`` reports ``UnknownPartitioning``,
+  so the plan exchanges the state on ``id`` each round. Under the
+  broadcast threshold (64 MB) Spark broadcasts the cached edge table
+  instead (distributed PageRank's rounds on the 29,932-edge R-MAT graph
+  do).
 
 Skew: hub destinations are handled by Spark's partial (map-side)
 aggregation — each task pre-combines its messages per ``dst`` before the

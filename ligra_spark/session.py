@@ -10,6 +10,7 @@ bench uses the core count).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -55,11 +56,20 @@ _DEFAULTS = {
     "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "134217728",
     "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "134217728",
     "spark.ui.enabled": "false",
-    # local mode runs executors inside the driver JVM: size the heap for
-    # (concurrent tasks × per-task working set); 8g starves 32 tasks
-    # into shuffle spills (measured: 32 cores slower than 8)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
+
+# Local mode runs executors inside the driver JVM: size the heap for
+# (concurrent tasks × per-task working set). 8g starved 32 tasks into
+# shuffle spills (measured: 32 cores slower than 8) and 48g did not, so
+# a task slot gets 1.5 GiB of heap.
+_HEAP_PER_SLOT_GB = 1.5
+# What the host must keep beside the heap per task slot: one Python
+# worker (numpy/pyarrow/pandas plus the 128 MiB malloc arena above) and
+# the JVM's own off-heap share. A lazy -Xmx above the host's memory let
+# G1 grow the driver until the kernel's OOM killer took it (16 GB host,
+# local[8] tests).
+_WORKER_RESERVE_GB = 1.0
+_MIN_HEAP_GB = 1  # Spark's own default driver heap
 
 # Commit AND pre-fault the whole heap at JVM start. Spark sets only
 # -Xmx, so the heap grows lazily under load and the kernel zeroes each
@@ -90,6 +100,31 @@ def _mem_available_gb() -> int | None:
     except OSError:
         pass
     return None
+
+
+def _task_slots(master: str) -> int:
+    """Concurrent tasks of ``master``: N for ``local[N]`` / ``local[N,F]``,
+    1 for ``local``, else (``local[*]``, a cluster) the host's cores."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
+    return int(m.group(1)) if m else os.cpu_count() or 1
+
+
+def _driver_mem(
+    master: str, avail_gb: int | None, override: str | None = None
+) -> str:
+    """``spark.driver.memory`` for a session on ``master``: ``override``
+    (``SPARK_GRAFT_DRIVER_MEM``) if set, else the smaller of 1.5 GiB a
+    task slot and the host's ``avail_gb`` (MemAvailable) less 1 GiB a
+    slot for the Python workers; never below 1 GiB."""
+    if override:
+        return override
+    slots = _task_slots(master)
+    heap = _HEAP_PER_SLOT_GB * slots
+    if avail_gb is not None:
+        heap = min(heap, avail_gb - _WORKER_RESERVE_GB * slots)
+    return f"{max(int(heap), _MIN_HEAP_GB)}g"
 
 
 def _xms_for(driver_mem: str) -> str | None:
@@ -128,6 +163,9 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
+    conf["spark.driver.memory"] = _driver_mem(
+        master, _mem_available_gb(), os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # Ship the package to Python workers (the `spark-submit --py-files
     # ligra_spark.zip` analog): module-level kernel functions (e.g. the

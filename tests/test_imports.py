@@ -26,7 +26,6 @@ PUBLIC_MODULES = [
     "ligra_spark.plans",
     "ligra_spark.graph",
     "ligra_spark.hypergraph",
-    "ligra_spark.csr",
     "ligra_spark.checkpoint",
     "ligra_spark.queries",
     "ligra_spark.session",
@@ -42,6 +41,26 @@ def test_cold_import(mod):
         timeout=120,
     )
     assert proc.returncode == 0, f"import {mod} failed cold:\n{proc.stderr}"
+
+
+def test_driver_heap_fits_host():
+    """The default driver heap: 1.5 GiB a task slot, capped so that heap
+    plus 1 GiB a slot for the Python workers fits MemAvailable, never
+    below 1 GiB; SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from ligra_spark.session import _driver_mem, _task_slots
+
+    for slots in (1, 2, 4, 8, 32):
+        for avail in range(slots + 1, 300):
+            heap = int(_driver_mem(f"local[{slots}]", avail)[:-1])
+            assert heap >= 1 and heap + slots <= avail, (slots, avail)
+    assert _driver_mem("local[8]", 15) == "7g"  # the test session's heap
+    assert _driver_mem("local[4,4]", 15) == "6g"
+    assert _driver_mem("local[32]", 256) == "48g"
+    assert _driver_mem("local[8]", 4) == "1g"
+    assert _driver_mem("local[8]", None) == "12g"
+    assert _driver_mem("local[8]", 15, "3g") == "3g"
+    assert _task_slots("local") == 1
+    assert _task_slots("local[*]") == _task_slots("spark://h:7077") >= 1
 
 
 def test_auto_partitions_sizing():

@@ -9,6 +9,7 @@ import pytest
 from conftest import CHAIN_64, STAR_HUB, TWO_COMPONENTS
 from ligra_spark.algorithms import pagerank, pagerank_delta
 from ligra_spark.algorithms._iter import IterMetrics
+from ligra_spark.graph import Graph
 from oracles import pagerank_oracle
 
 
@@ -34,6 +35,40 @@ def test_pagerank_chain(mk_graph):
 
 def test_pagerank_two_components(mk_graph):
     _check(mk_graph, TWO_COMPONENTS)
+
+
+# two cliques joined both ways and a chain: the fixture graphs above
+# take the local kernel, so this one runs the distributed round loop
+DIST_EDGES = TWO_COMPONENTS + [(0, 10), (16, 4)] + CHAIN_64
+
+
+def test_pagerank_distributed(mk_graph, monkeypatch):
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
+    _check(mk_graph, DIST_EDGES)
+
+
+def test_distributed_pagerank_counts_n_in_its_commit(mk_graph, monkeypatch):
+    """On a cold generic graph the distributed loops read ``n`` and ``m``
+    off their first state commit, never through ``Graph.n`` (a degree
+    count job of its own)."""
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
+    calls = []
+    real_n = Graph.n
+    monkeypatch.setattr(
+        Graph, "n", property(lambda g: calls.append(g) or real_n.fget(g))
+    )
+    want = pagerank_oracle(DIST_EDGES, max_iters=1)
+    keys = sorted(want)
+    for algo in (pagerank, pagerank_delta):
+        g = mk_graph(DIST_EDGES)
+        got = {r["id"]: r["rank"] for r in algo(g, max_iters=1).collect()}
+        assert calls == [], algo.__name__
+        assert set(got) == set(want)
+        assert np.allclose(
+            [got[k] for k in keys], [want[k] for k in keys], rtol=1e-12, atol=0
+        ), algo.__name__
+        assert g.m == len(DIST_EDGES)
+        g.unpersist()
 
 
 def test_pagerank_sink_mass_is_lost(mk_graph):
