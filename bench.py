@@ -25,7 +25,8 @@ PageRank + CC on the transcript-derived edge graph):
 - minhash_lsh_docs, ann_topk: training-data-pipeline headliners.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_ONLY (comma-separated
+query subset; default all).
 """
 
 from __future__ import annotations
@@ -59,14 +60,10 @@ from ligra_spark.session import get_spark  # noqa: E402
 from ligra_spark.sources import derive_edges, generate_transcripts  # noqa: E402
 from ligra_spark.sources.events import edges_from_events  # noqa: E402
 from ligra_spark.sources.rmat import rmat_graph_df  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PR_ITERS = int(os.environ.get("SPARK_GRAFT_PR_ITERS", "20"))
-# override the sf-derived transcript size (used by bench_scaling.py to
-# run a compute-dominated input where per-job overhead amortizes)
-N_CONV = os.environ.get("SPARK_GRAFT_NCONV")
+PR_ITERS = 20
 # comma-separated subset of queries to run (empty = all)
 ONLY = {q for q in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if q}
 
@@ -162,17 +159,7 @@ def main() -> None:
     # ---- transcript-derived link graph (the north-star input) -------------
     transcript_queries = ("pagerank_transcripts", "cc_transcripts", "lp_transcripts")
     if any(_want(q) for q in transcript_queries):
-        n_conv = int(N_CONV) if N_CONV else max(200, int(200_000 * sf))
-        # SPARK_GRAFT_TRANSCRIPTS_PARQUET: pre-generated transcripts
-        # table (bench_scaling writes it once) — generating 400k
-        # deterministic conversations costs 2-4 min per fresh JVM and
-        # is pure warmup; reading parquet removes that noise from the
-        # untimed setup without touching any timed path
-        pq = os.environ.get("SPARK_GRAFT_TRANSCRIPTS_PARQUET")
-        if pq:
-            transcripts = spark.read.parquet(pq)
-        else:
-            transcripts = generate_transcripts(spark, n_conv)
+        transcripts = generate_transcripts(spark, max(200, int(200_000 * sf)))
         # closure_key: the transcript link graph is conversation-closed,
         # so PageRank/LP/CC dispatch to the fused partition-local Arrow
         # kernels (closed.py) — zero per-iteration shuffle, exact results
@@ -333,68 +320,16 @@ def main() -> None:
         extras["rmat_triangles"] = tri
         rg.unpersist()
 
-    # ---- generic-path PageRank on the transcript graph (ADVICE r04:
-    # report the generic shuffling engine's scaling efficiency
-    # ALONGSIDE the closed-kernel numbers, not averaged into them).
-    # Opt-in (must be named in SPARK_GRAFT_ONLY — bench_scaling adds
-    # it): same derived edge table as the closed queries but the Graph
-    # is built WITHOUT the closure key, so PageRank takes the generic
-    # one-message-shuffle-per-round SpMV path. A deterministic quarter
-    # of the conversations keeps the generic run (~2 orders slower
-    # per edge on one box) inside the trial budget; the edge count is
-    # reported so efficiency is computed per-edge either way.
-    if ONLY and "pagerank_generic_transcripts" in ONLY:
-        from ligra_spark.algorithms._iter import IterMetrics
-        from ligra_spark.algorithms._iter import unpersist as _unp_gen
-
-        n_conv = int(N_CONV) if N_CONV else max(200, int(200_000 * sf))
-        pq = os.environ.get("SPARK_GRAFT_TRANSCRIPTS_PARQUET")
-        tr = (
-            spark.read.parquet(pq) if pq else generate_transcripts(spark, n_conv)
-        )
-        tr = tr.where(F.crc32(F.col("conv_id").cast("string")) % 4 == 0)
-        gg = Graph(derive_edges(tr), num_partitions=CPUS)
-        m_gen = gg.m
-        extras["pagerank_generic_edges"] = m_gen
-        try:
-            wu = pagerank(gg, max_iters=2)
-            wu.count()
-            _unp_gen(wu)
-        except Exception as exc:
-            print(f"[bench] pagerank_generic warmup failed: {exc}", file=sys.stderr)
-        gen_ms: list[IterMetrics] = []
-
-        def _pr_gen_trial():
-            m_ = IterMetrics()
-            gen_ms.append(m_)
-            r = pagerank(gg, max_iters=PR_ITERS, metrics=m_)
-            n_ = r.count()
-            _unp_gen(r)
-            return n_
-
-        timed("pagerank_generic_transcripts", _pr_gen_trial, trials=3)
-        extras["pagerank_generic_edges_per_sec"] = round(
-            m_gen * PR_ITERS / timings["pagerank_generic_transcripts"], 1
-        )
-        best_gen = min(
-            gen_ms, key=lambda m_: sum(r.get("wall_s", 0.0) for r in m_.rounds)
-        )
-        extras["pagerank_generic_iter_walls"] = [
-            round(r.get("wall_s", 0.0), 2) for r in best_gen.rounds
-        ]
-        gg.unpersist()
-
     # ---- 10× closed-kernel input (VERDICT r04 item 8): one driver-
     # harness row at a compute-dominated scale (~6M derived edges) so
     # the closed path's edges/s claim is pinned by the authoritative
-    # artifact, not only bench_scaling. The transcripts table is
-    # generated once into a /tmp parquet cache shared with
-    # bench_scaling (same path convention, keyed by n_conv).
+    # artifact. The transcripts table is generated once into a /tmp
+    # parquet cache keyed by n_conv.
     if _want("pagerank_transcripts_10x"):
         from ligra_spark.algorithms._iter import IterMetrics
         from ligra_spark.algorithms._iter import unpersist as _unp_big
 
-        n_big = int(os.environ.get("SPARK_GRAFT_NCONV_BIG", "250000"))
+        n_big = 250_000
         big_pq = f"/tmp/ligra_bench_transcripts_{n_big}.parquet"
         if not Path(big_pq).exists():
             generate_transcripts(spark, n_big).write.mode("ignore").parquet(big_pq)
@@ -512,8 +447,8 @@ def main() -> None:
 
         from ligra_spark.functions.similarity import cosine_topk_parquet
 
-        ann_n = int(os.environ.get("SPARK_GRAFT_ANN_N", max(20_000, int(4_000_000 * sf))))
-        ann_q = int(os.environ.get("SPARK_GRAFT_ANN_Q", max(100, ann_n // 200)))
+        ann_n = max(20_000, int(4_000_000 * sf))
+        ann_q = max(100, ann_n // 200)
         dim = 128
 
         def gen_vecs(batches):
@@ -535,11 +470,11 @@ def main() -> None:
         # the parquet vectorized reader hands the Arrow UDF columnar
         # batches nearly for free — and disk-resident parquet is the
         # honest 100-TB shape for a corpus anyway. Feed granularity is
-        # CPUS×4 files (LIGRA_ANN_FEED_MULT): with per-task fixed cost
+        # CPUS×4 files: with per-task fixed cost
         # now small, 4 waves of work-stealing absorb the host's
         # bimodal-vCPU straggler effect that a 1-task-per-core barrier
         # is fully exposed to (BENCH.md r05 note).
-        ann_mult = int(os.environ.get("LIGRA_ANN_FEED_MULT", "4"))
+        ann_mult = 4
         ann_pq = f"/tmp/ligra_ann_{ann_n}_{dim}_{CPUS}x{ann_mult}.parquet"
         if not os.path.exists(ann_pq):
             (

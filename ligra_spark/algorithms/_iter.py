@@ -29,6 +29,7 @@ import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _log = logging.getLogger("ligra_spark")
 _warned_fallback = False
@@ -121,6 +122,16 @@ def commit(
         df.observe(obs, *(c.alias(k) for k, c in stats.items())), prev
     )
     return out, obs.get
+
+
+def commit_degrees(graph, state: DataFrame) -> tuple[DataFrame, int]:
+    """Commit a loop's starting state (one row per vertex, with
+    ``out_deg``) and read ``n`` and ``m = Σ out_deg`` off the same job.
+    Both are cached on ``graph``, so neither the loop nor ``edge_map``'s
+    m/20 rule runs a count job for them."""
+    state, got = commit(state, n=F.count(F.lit(1)), m=F.sum("out_deg"))
+    graph._n, graph._m = got["n"], got["m"] or 0
+    return state, got["n"]
 
 
 def derive(df: DataFrame, base: DataFrame) -> DataFrame:

@@ -37,6 +37,7 @@ from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
     commit,
+    commit_degrees,
     derive,
     materialize,
     unpersist,
@@ -88,15 +89,16 @@ def _hash_min(
     (rMat: 4 rounds at any jump count)."""
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
 
-    state = g.vertices.select("id", F.col("id").alias("comp"))
+    # (id, out_deg, comp): its first commit counts n and m
+    state = g.degrees.select("id", "out_deg", F.col("id").alias("comp"))
     start_iter = 0
     if checkpointer is not None:
         resumed = checkpointer.resume()
         if resumed is not None:
-            start_iter, state = resumed
-    state = materialize(state)
+            start_iter, st = resumed
+            state = state.drop("comp").join(st, "id")
+    state, frontier_n = commit_degrees(g, state)
     frontier = state
-    frontier_n = g.n
 
     timer = Timer()
     for it in range(start_iter, max_iters):

@@ -19,15 +19,17 @@ here:
 Spark realization: both sketches run on ``radii._propagate``, the one
 register-propagation loop of the family (Radii and kBFS run on it with
 a single 64-bit slot). State is ``(id, slot, reg, r)`` rows, one per
-counter; one round = frontier ⋈ edges → ``groupBy(dst, slot).agg(
-bit_or|max)`` — the composite-key form of edgeMapReduce,
-partial-aggregated map-side — and ONE commit that also counts the
-changed rows. ``r`` is the last round a row changed, and ``ecc`` is
-its ``groupBy(id).max``. The frontier is the rows that changed, so it
-shrinks like the reference's and late rounds are cheap.
+counter; one round = ``edge_map`` keyed by ``slot`` (``bit_or`` or
+``max`` per ``(dst, slot)``, partial-aggregated map-side) and ONE
+commit that also counts the changed rows. ``r`` is the last round a
+row changed, and ``ecc`` is its ``groupBy(id).max``. The frontier is
+the rows that changed, so it shrinks like the reference's and late
+rounds are cheap.
 
 RV and CLRSTV share ``_sample_w_ngh`` (components, sample, w, Ngh_s
-and the exact set) and differ only in their estimate formula.
+and the exact set) and differ only in their estimate formula. Their
+BFSes, and Takes-Kosters', run ``_multi_root_bfs``: one ``edge_map``
+keyed by ``root`` a round.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.radii import _propagate
 from ligra_spark.graph import Graph
+from ligra_spark.operators.edge_map import edge_map
 
 
 def _sketch_ecc(
@@ -61,14 +64,21 @@ def _sketch_ecc(
     changed."""
     g = graph.symmetrized() if symmetrize and not graph.symmetric else graph
     slot = F.explode(F.sequence(F.lit(0), F.lit(counters - 1))).alias("slot")
-    state = g.vertices.select("id", slot).select(
-        "id", "slot", init_reg.alias("reg"), F.lit(0).alias("r")
+    state = g.degrees.select("id", "out_deg", slot).select(
+        "id", "out_deg", "slot", init_reg.alias("reg"), F.lit(0).alias("r")
     )
     return (
         _propagate(g, state, merge, max_iters, metrics)
         .groupBy("id")
         .agg(F.max("r").cast("int").alias("ecc"))
     )
+
+
+def _lowest_bit(counters: int, seed: int):
+    """The lowest set bit of each ``(id, slot)`` register's hash ``h``
+    (the reference's ``1 << log2(h & -h)``; 1 when ``h`` is 0)."""
+    h = F.abs(F.xxhash64(F.col("id") * counters + F.col("slot") + F.lit(seed)))
+    return F.when(h == 0, F.lit(1)).otherwise(h.bitwiseAND(-h))
 
 
 def fm_ecc(
@@ -81,13 +91,9 @@ def fm_ecc(
 ) -> DataFrame:
     """``(id, ecc INT)`` — Flajolet-Martin eccentricity estimate (a
     deterministic lower bound; exact whp for large ``counters``)."""
-    h = F.abs(F.xxhash64(F.col("id") * counters + F.col("slot") + F.lit(seed)))
-    # lowest set bit of h == the reference's 1 << log2(h & -h)
-    init = F.when(h == 0, F.lit(1)).otherwise(
-        h.bitwiseAND(-h)
-    )
     return _sketch_ecc(
-        graph, counters, init, "bit_or", symmetrize, max_iters, metrics
+        graph, counters, _lowest_bit(counters, seed), "bit_or", symmetrize,
+        max_iters, metrics,
     )
 
 
@@ -101,10 +107,8 @@ def loglog_ecc(
 ) -> DataFrame:
     """``(id, ecc INT)`` — LogLog-Ecc.C variant: registers hold the
     geometric rank (lowest-set-bit position) and merge by MAX."""
-    h = F.abs(F.xxhash64(F.col("id") * counters + F.col("slot") + F.lit(seed)))
-    lowest = F.when(h == 0, F.lit(1)).otherwise(h.bitwiseAND(-h))
     # log2 of a power of two = bit position = HLL rank
-    init = F.log2(lowest.cast("double")).cast("long")
+    init = F.log2(_lowest_bit(counters, seed).cast("double")).cast("long")
     return _sketch_ecc(
         graph, counters, init, "max", symmetrize, max_iters, metrics
     )
@@ -191,16 +195,15 @@ def tk_ecc(
             else F.col("low").asc()
         )
         w = Window.partitionBy("comp").orderBy(key, F.col("id").asc())
-        picks = materialize(
-            state.where(F.col("ecc").isNull())
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= batch)
-            .select(F.col("id").alias("root"), "comp")
-        )
         # multi-root BFS keeping per-root distances (at most `batch`
         # roots per component, so the (root, id) state is
         # comp-partitioned)
-        vis = _multi_root_bfs(g, picks)
+        picks, vis = _multi_root_bfs(
+            g,
+            state.where(F.col("ecc").isNull())
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= batch),
+        )
         eccw = vis.groupBy("root").agg(F.max("dist").alias("eccw"))
         # aggregate bound deltas over ALL roots that reached a vertex
         delta = (
@@ -242,24 +245,27 @@ def tk_ecc(
     )
 
 
-def _multi_root_bfs(g: Graph, roots: DataFrame) -> DataFrame:
-    """``(root, id, dist)`` — per-root BFS distances from every row of
-    ``roots`` (column ``root``), all roots advancing in ONE synchronous
+def _multi_root_bfs(g: Graph, picks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(roots, vis)``: ``picks`` ``(id, comp)`` committed as ``roots``
+    ``(root, comp)``, and ``vis`` ``(root, id, dist)`` — per-root BFS
+    distances from every root, all roots advancing in ONE synchronous
     fixpoint. The reference runs its sample/neighborhood BFSes serially
-    (RV.C:176-188, 276-284); batching them keys the frontier by
-    (root, id) instead, trading state size for fixpoint count — the
-    right trade on Spark, where each round is a scheduled job. Round
-    0's visited set stays lazy: it derives from ``roots``, which every
-    caller has already materialized."""
+    (RV.C:176-188, 276-284); batching them keys the frontier by (root,
+    id) instead, trading state size for fixpoint count — the right
+    trade on Spark, where each round is a scheduled job. Each round is
+    one ``edge_map`` keyed by ``root``; the first round's frontier size
+    rides the roots' commit, and round 0's visited set stays lazy (it
+    derives from ``roots``)."""
+    roots, got = commit(
+        picks.select(F.col("id").alias("root"), "comp"), n=F.count(F.lit(1))
+    )
     vis = roots.select("root", F.col("root").alias("id"), F.lit(0).alias("dist"))
-    frontier = vis
+    frontier, frontier_n = vis, got["n"]
     r = 0
     while True:
-        msgs = (
-            frontier.select("root", F.col("id").alias("src"))
-            .join(g.edges_by_src, "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
+        msgs = edge_map(
+            g, frontier.select("id", "root"), message=F.lit(True),
+            combiner="any", frontier_size=frontier_n, keys=("root",),
         )
         new = msgs.join(vis.select("root", "id"), ["root", "id"], "left_anti")
         vis, got = commit(
@@ -267,10 +273,10 @@ def _multi_root_bfs(g: Graph, roots: DataFrame) -> DataFrame:
             vis if r > 0 else None,
             f=F.count_if(F.col("dist") == r + 1),
         )
-        frontier = vis.where(F.col("dist") == r + 1)
+        frontier, frontier_n = vis.where(F.col("dist") == r + 1), got["f"]
         r += 1
-        if got["f"] == 0:
-            return vis
+        if frontier_n == 0:
+            return roots, vis
 
 
 def _sample_w_ngh(
@@ -323,12 +329,12 @@ def _sample_w_ngh(
         ),
     )
     thr = F.round(F.lit(101.0) * samp_sz / F.col("csz"))
-    S = materialize(
+    S, distS = _multi_root_bfs(
+        g,
         big.where(
             ((F.col("id") * 31 + 7) % 101 < thr) | (F.col("id") == F.col("comp"))
-        ).select(F.col("id").alias("root"), "comp")
+        ),
     )
-    distS = _multi_root_bfs(g, S)
     eccS = distS.groupBy("root").agg(F.max("dist").alias("ecc"))
     per_v = distS.groupBy("id").agg(
         F.max("dist").alias("maxd"), F.min("dist").alias("mind")
@@ -338,13 +344,12 @@ def _sample_w_ngh(
     wv = Window.partitionBy("comp").orderBy(
         F.col("mind").desc(), F.col("id").asc()
     )
-    W = materialize(
+    W, distW = _multi_root_bfs(
+        g,
         big.join(per_v, "id")
         .withColumn("_rn", F.row_number().over(wv))
-        .where(F.col("_rn") == 1)
-        .select(F.col("id").alias("root"), "comp")
+        .where(F.col("_rn") == 1),
     )
-    distW = _multi_root_bfs(g, W)
     eccW = distW.groupBy("root").agg(F.max("dist").alias("ecc"))
 
     # Ngh_s: first nghSize vertices in (level, id) BFS order from w
@@ -361,13 +366,12 @@ def _sample_w_ngh(
     )
     dW = distW.join(W, "root")  # (root=w, id, dist, comp)
     nw = Window.partitionBy("comp").orderBy(F.col("dist").asc(), F.col("id").asc())
-    N = materialize(
+    N, distN = _multi_root_bfs(
+        g,
         dW.withColumn("_rn", F.row_number().over(nw))
         .join(scal.select("comp", "ngh"), "comp")
-        .where(F.col("_rn") <= F.col("ngh"))
-        .select(F.col("id").alias("root"), "comp")
+        .where(F.col("_rn") <= F.col("ngh")),
     )
-    distN = _multi_root_bfs(g, N)
     eccN = distN.groupBy("root").agg(F.max("dist").alias("ecc"))
 
     # exact (S ∪ {w} ∪ Ngh_s), then each app's estimate for the rest

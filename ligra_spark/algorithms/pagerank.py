@@ -37,6 +37,7 @@ from ligra_spark.algorithms._iter import (
     IterMetrics,
     Timer,
     commit,
+    commit_degrees,
     derive,
 )
 from ligra_spark.algorithms.dispatch import choose_backend
@@ -78,7 +79,7 @@ def pagerank(
     if resumed is not None:
         start_iter, st = resumed
         state = state.join(st, "id")
-    state, n = _commit_degrees(graph, state)
+    state, n = commit_degrees(graph, state)
     if n == 0:
         return graph.spark.createDataFrame([], "id long, rank double")
     if resumed is None:
@@ -119,16 +120,6 @@ def pagerank(
     return state.select("id", "rank")
 
 
-def _commit_degrees(graph: Graph, state: DataFrame) -> tuple[DataFrame, int]:
-    """Commit a loop's starting state (one row per vertex, with
-    ``out_deg``) and read ``n`` and ``m = Σ out_deg`` off the same job.
-    Both are cached on ``graph``, so neither the loop nor ``edge_map``'s
-    m/20 rule runs a count job for them."""
-    state, got = commit(state, n=F.count(F.lit(1)), m=F.sum("out_deg"))
-    graph._n, graph._m = got["n"], got["m"] or 0
-    return state, got["n"]
-
-
 def pagerank_delta(
     graph: Graph,
     damping: float = 0.85,
@@ -148,7 +139,7 @@ def pagerank_delta(
     #   δ_{t+1} = d·A·δ_t              for t ≥ 1,
     # so converged p equals plain PageRank exactly — matching the
     # first-round special case in PageRankDelta.C:47-85.
-    state, n = _commit_degrees(graph, graph.degrees.select("id", "out_deg"))
+    state, n = commit_degrees(graph, graph.degrees.select("id", "out_deg"))
     if n == 0:
         return graph.spark.createDataFrame([], "id long, rank double")
     base = (1.0 - damping) / n

@@ -9,10 +9,9 @@ the eccentricity app family (kBFS-Ecc, FM-Ecc, LogLog-Ecc).
 
 Spark realization: the mask is a LONG register in ``_propagate``, the
 one register-propagation loop of the family (eccentricity.py's
-sketches run on it too). A round joins the frontier rows to
-``edges_by_src`` and merges per ``(dst, slot)`` with ``bit_or`` — the
-composite-key form of edgeMapReduce, which ``edge_map`` (keyed by
-``dst`` alone) does not cover. Radii and kBFS use the single slot 0.
+sketches run on it too). A round is one ``edge_map`` keyed by
+``slot``: the frontier rows' registers merge per ``(dst, slot)`` with
+``bit_or``. Radii and kBFS use the single slot 0.
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ from ligra_spark.algorithms._iter import (
 )
 from ligra_spark.algorithms.dispatch import choose_backend
 from ligra_spark.graph import Graph
+from ligra_spark.operators.edge_map import edge_map
 
 
 def _propagate(
@@ -43,33 +43,38 @@ def _propagate(
     ``(id, slot, reg, r)``: one row per vertex register (``slot`` 0 for
     the 64-bit BFS masks, ``0..counters-1`` for the sketches) and ``r``
     each row's starting round value. Each round the frontier rows send
-    their register along out-edges and ``groupBy(dst, slot)`` merges
-    them with ``merge`` (``bit_or`` — writeOr, Radii.C:27-32 and Ecc_F,
-    FM-Ecc.C:48-56 — or ``max``, LogLog-Ecc.C) until no register
-    changes. Returns ``(id, slot, reg, r)``, ``r`` = the last round the
-    row changed (its starting value if it never did).
+    their register along out-edges, ``edge_map(..., keys=("slot",))``
+    merges them per ``(dst, slot)`` with ``merge`` (``bit_or`` —
+    writeOr, Radii.C:27-32 and Ecc_F, FM-Ecc.C:48-56 — or ``max``,
+    LogLog-Ecc.C) until no register changes. Returns ``(id, slot, reg,
+    r)``, ``r`` = the last round the row changed (its starting value if
+    it never did). A ``state`` built from ``g.degrees`` may carry
+    ``out_deg``: then ``m`` rides the first commit, and ``edge_map``'s
+    m/20 rule runs no count job.
 
     The first frontier is every row with ``reg != 0`` and later ones are
     the rows that just changed. That is exact because 0 is the identity
     of both merges (of ``max`` since its registers are >= 0), and both
     merges are idempotent, so re-sending an unchanged register changes
     nothing."""
-    agg = F.bit_or if merge == "bit_or" else F.max
     msg = F.coalesce("msg", F.lit(0))
     merged = (
         F.col("reg").bitwiseOR(msg) if merge == "bit_or" else F.greatest("reg", msg)
     )
-    state, got = commit(state, f=F.count_if(F.col("reg") != 0))
+    stats = dict(f=F.count_if(F.col("reg") != 0))
+    if "out_deg" in state.columns:
+        stats["m"] = F.sum(F.when(F.col("slot") == 0, F.col("out_deg")))
+    state, got = commit(state, **stats)
+    g._m = got.get("m", g._m)
     frontier = state.where(F.col("reg") != 0).select("id", "slot", "reg")
     frontier_n = got["f"]
     timer = Timer()
     for it in range(max_iters):
         if frontier_n == 0:
             break
-        msgs = (
-            g.edges_by_src.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"), "slot")
-            .agg(agg("reg").alias("msg"))
+        msgs = edge_map(
+            g, frontier, message=F.col("reg"), combiner=merge,
+            frontier_size=frontier_n, keys=("slot",),
         )
         nxt = state.join(msgs, ["id", "slot"], "left").select(
             "id", "slot", "reg", "r", merged.alias("reg_new")
@@ -122,8 +127,9 @@ def radii(
             "CAST(row_number() OVER (ORDER BY id) - 1 AS INT))"
         ),
     )
-    state = g.vertices.join(sample.select("id", "bit"), "id", "left").select(
+    state = g.degrees.join(sample.select("id", "bit"), "id", "left").select(
         "id",
+        "out_deg",
         F.lit(0).alias("slot"),
         F.coalesce("bit", F.lit(0)).alias("reg"),
         F.when(F.col("bit").isNotNull(), 0).otherwise(F.lit(-1)).alias("r"),
@@ -183,42 +189,36 @@ def kbfs_sampled_ecc(
         labels = connected_components(g, symmetrize=False)
     labels = materialize(labels.select("id", "comp"))
 
-    def _ecc(sources: DataFrame) -> DataFrame:
+    def _ecc(ranked: DataFrame) -> DataFrame:
         """(id, ecc) = the last round each vertex's per-component mask
-        changed (0 if never reached beyond init)."""
-        state = labels.join(sources.select("id", "bit"), "id", "left").select(
+        changed (0 if never reached beyond init). The sources are the
+        rows of ``ranked`` ``(id, rn)`` with ``rn <= k``, on bit
+        ``rn - 1``."""
+        bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(rn - 1 AS INT))")
+        state = ranked.select(
             "id",
             F.lit(0).alias("slot"),
-            F.coalesce("bit", F.lit(0)).alias("reg"),
+            F.when(F.col("rn") <= k, bit).otherwise(0).alias("reg"),
             F.lit(0).alias("r"),
         )
         return _propagate(g, state, "bit_or", 1000, metrics).select(
             "id", F.col("r").alias("ecc")
         )
 
-    def _bits(ranked: DataFrame) -> DataFrame:
-        return ranked.where(F.col("rn") <= k).select(
-            "id",
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(rn - 1 AS INT))"
-            ).alias("bit"),
-        )
-
-    w1 = Window.partitionBy("comp").orderBy(sample_rank.asc(), F.col("id").asc())
-    srcs1 = _bits(labels.select("id", "comp", F.row_number().over(w1).alias("rn")))
-    ecc = _ecc(srcs1)
+    comp = Window.partitionBy("comp")
+    w1 = comp.orderBy(sample_rank.asc(), F.col("id").asc())
+    ecc = _ecc(labels.select("id", F.row_number().over(w1).alias("rn")))
     if phases >= 2:
-        sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("csz"))
-        big = labels.join(sizes, "comp").where(F.col("csz") >= F.lit(fringe_min_size))
-        w2 = Window.partitionBy("comp").orderBy(
-            F.col("e1").desc(), F.col("id").asc()
+        w2 = comp.orderBy(F.col("e1").desc(), F.col("id").asc())
+        ecc2 = _ecc(
+            labels.join(ecc.withColumnRenamed("ecc", "e1"), "id").select(
+                "id",
+                F.when(
+                    F.count(F.lit(1)).over(comp) >= fringe_min_size,
+                    F.row_number().over(w2),
+                ).alias("rn"),
+            )
         )
-        fringe = _bits(
-            big.join(ecc.withColumnRenamed("ecc", "e1"), "id")
-            .select("id", "comp", "e1")
-            .select("id", "comp", F.row_number().over(w2).alias("rn"))
-        )
-        ecc2 = _ecc(fringe)
         ecc = ecc.join(ecc2.withColumnRenamed("ecc", "e2"), "id").select(
             "id", F.greatest("ecc", "e2").alias("ecc")
         )

@@ -36,16 +36,25 @@ aggregation — each task pre-combines its messages per ``dst`` before the
 exchange, so a hub costs one partial row per map task, not one row per
 in-edge — plus AQE skew handling.
 
-Callers: every distributed round that gathers one value per destination
-runs through this operator (PageRank, PageRankDelta, label propagation,
+Keys: ``keys=`` names frontier columns that key each message beside its
+destination (Ligra's ``vertexSubsetData`` payload, ligra.h:233-283),
+so the aggregation is ``groupBy(id, *keys)``. The broadcast plan stays
+exchange-free: ``hashpartitioning(dst)`` satisfies any grouping that
+contains ``id``.
+
+Callers: every distributed round that gathers along out-edges runs
+through this operator (PageRank, PageRankDelta, label propagation,
 hash-min CC, BFSCC's flood, BFS, Bellman-Ford, MIS, BC's forward pass,
-Δ-stepping, the local-cluster apps), so the direction rule exists
-only here. Left outside, because they key by more than the destination
-or restrict both endpoints: ``radii._propagate`` (``(dst, slot)``
-registers), ``eccentricity._multi_root_bfs`` (``(root, id)``), CF's
-K-vector sums, BC's backward pass and RV's parent join (both endpoints
-restricted by level), set cover's claims (uncovered elements only) and
-the hypergraph MIS counts.
+Δ-stepping, the local-cluster apps; keyed: ``radii._propagate``'s
+``(dst, slot)`` registers for Radii, kBFS and FM/LogLog-Ecc, and
+``eccentricity._multi_root_bfs``'s ``(root, id)`` visits for TK, RV
+and CLRSTV), so the direction rule exists only here. Left outside,
+because they read destination state, restrict both endpoints or do not
+gather: BC's backward pass (``bc.py``), CF's K-vector sums
+(``cf.py``), BFSCC's remainder subgraph (``components.py``), RV's
+parent join (``eccentricity.py``), the hypergraph k-core and MIS
+counts (``hyper.py``), the heat-kernel walk step (``local.py``) and
+set cover's claims (``setcover.py``).
 """
 
 from __future__ import annotations
@@ -65,6 +74,7 @@ COMBINERS = {
     "min": F.min,
     "max": F.max,
     "any": F.max,  # over booleans
+    "bit_or": F.bit_or,
     "mode": lambda c: F.mode(c, deterministic=True),
 }
 
@@ -83,9 +93,10 @@ def edge_map(
     *,
     direction: str = "auto",
     frontier_size: int | None = None,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Gather ``message`` along every out-edge of ``frontier`` and
-    combine per destination.
+    combine per destination and ``keys``.
 
     Parameters
     ----------
@@ -97,10 +108,14 @@ def edge_map(
     combiner : one of COMBINERS — the ``updateAtomic`` analog.
     direction : one of DIRECTIONS; 'auto' picks by the m/20 rule.
     frontier_size : pass a known size to skip the count job in 'auto'.
+    keys : frontier columns that key the message alongside the
+        destination (``vertexSubsetData``'s payload as a key: a
+        register slot, a BFS root); each ``(id, *keys)`` combines on
+        its own.
 
-    Returns ``(id, msg)`` — one row per destination that received at
-    least one message (the new-frontier candidate set; ``cond``/apply
-    filtering is the caller's algorithm logic).
+    Returns ``(id, *keys, msg)`` — one row per destination (and key)
+    that received at least one message (the new-frontier candidate
+    set; ``cond``/apply filtering is the caller's algorithm logic).
     """
     if combiner not in COMBINERS:
         raise ValueError(f"unknown combiner {combiner!r}; use {sorted(COMBINERS)}")
@@ -135,8 +150,8 @@ def edge_map(
         else:
             live = graph.edges_by_src.join(fr, "src", "inner")
 
-    msgs = live.select(F.col("dst").alias("id"), msg_col.alias("_m"))
-    return msgs.groupBy("id").agg(agg(F.col("_m")).alias("msg"))
+    msgs = live.select(F.col("dst").alias("id"), *keys, msg_col.alias("_m"))
+    return msgs.groupBy("id", *keys).agg(agg(F.col("_m")).alias("msg"))
 
 
 def edge_map_count(

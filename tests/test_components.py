@@ -13,6 +13,7 @@ from ligra_spark.algorithms import (
 )
 from ligra_spark.algorithms._iter import IterMetrics
 from ligra_spark.algorithms.components import _hash_min
+from ligra_spark.graph import Graph
 from oracles import (
     components_oracle,
     kcore_oracle,
@@ -38,6 +39,30 @@ def test_cc_plain_hash_min_ligra_semantics(mk_graph):
     _cc_check(mk_graph, TWO_COMPONENTS + [(0, 10)], _hash_min,
               contract=False, jumps=0, metrics=m)
     assert [r["frontier"] for r in m.rounds] == [11, 6, 0]
+
+
+def test_hash_min_counts_n_in_its_commit(mk_graph, monkeypatch):
+    """Directed CC on a cold generic graph runs the hash-min loop, which
+    reads ``n`` and ``m`` off its first state commit, never through
+    ``Graph.n`` (a degree count job of its own). Every edge points away
+    from its component's minimum, so the directed labels are the
+    undirected ones."""
+    monkeypatch.setenv("LIGRA_LOCAL_GRAPH_EDGES", "0")
+    calls = []
+    real_n = Graph.n
+    monkeypatch.setattr(
+        Graph, "n", property(lambda g: calls.append(g) or real_n.fget(g))
+    )
+    edges = CHAIN_64 + [(100, 101), (101, 102), (100, 103), (103, 102)]
+    g = mk_graph(edges)
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components(g, symmetrize=False).collect()
+    }
+    assert calls == []
+    assert got == components_oracle(edges)
+    assert g.m == len(edges)
+    g.unpersist()
 
 
 def test_cc_two_components(mk_graph):

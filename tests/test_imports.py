@@ -9,6 +9,7 @@ algorithms/__init__ -> setcover -> back into the half-initialized
 buckets). Subprocesses are the only honest check.
 """
 
+import ast
 import re
 import subprocess
 import sys
@@ -98,9 +99,40 @@ def test_library_env_reads():
     }
 
 
+def _joins_edge_table(source: str) -> bool:
+    """True when ``source`` calls ``.join`` on or with ``edges_by_src`` /
+    ``edges_by_dst``, directly or through a name assigned from one."""
+    tree = ast.parse(source)
+    tables = {"edges_by_src", "edges_by_dst"}
+
+    def mentions(node, names):
+        return any(
+            (isinstance(n, ast.Attribute) and n.attr in tables)
+            or (isinstance(n, ast.Name) and n.id in names)
+            for n in ast.walk(node)
+        )
+
+    aliases = {
+        t.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Assign) and mentions(n.value, set())
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    return any(
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "join"
+        and mentions(n, aliases)
+        for n in ast.walk(tree)
+    )
+
+
 def test_direction_rule_only_in_edge_map():
     """The push/pull choice lives in edge_map alone: no algorithm or
-    operator builds its own broadcast frontier join or m/20 rule."""
+    operator builds its own broadcast frontier join or m/20 rule, and
+    the algorithms that still join the edge tables themselves are
+    exactly the ones edge_map's docstring lists as left outside."""
     root = Path(__file__).resolve().parent.parent / "ligra_spark"
     hits = [
         f"{path.parent.name}/{path.name}:{i}"
@@ -111,3 +143,12 @@ def test_direction_rule_only_in_edge_map():
         if "F.broadcast(" in line or re.search(r"\*\s*20\b", line)
     ]
     assert hits == []
+    own_joins = {
+        path.name
+        for path in (root / "algorithms").glob("*.py")
+        if _joins_edge_table(path.read_text())
+    }
+    doc = ast.get_docstring(ast.parse((root / "operators" / "edge_map.py").read_text()))
+    left_outside = doc.split("Left outside", 1)[1]
+    assert own_joins == set(re.findall(r"``(\w+\.py)``", left_outside))
+    assert "radii.py" not in own_joins

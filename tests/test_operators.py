@@ -1,8 +1,11 @@
 """Operator-level contracts: edge_map's destination membership, mode
-combiner and direction check, edge_map_count semantics (both grouping
-sides), pack_edges, vertex_map/vertex_filter."""
+combiner, keyed gather and direction check, edge_map_count semantics
+(both grouping sides), pack_edges, vertex_map/vertex_filter."""
 
 from __future__ import annotations
+
+import functools
+import operator
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,6 +101,39 @@ def test_edge_map_mode_ties_to_min_label(spark):
             direction=direction,
         ).collect()
         assert [(r["id"], r["msg"]) for r in got] == [(9, 5)], direction
+    g.unpersist()
+
+
+def test_edge_map_keys_combine_per_destination_and_key(spark):
+    """``keys=("slot",)`` combines each ``(destination, slot)`` on its
+    own (the register gather of radii and the sketches, the per-root
+    visit of the multi-root BFS), for ``bit_or``, ``max`` and ``any``
+    on both plans, against a pure-Python gather."""
+    g = _g(spark)
+    rows = [(0, 0, 1), (0, 1, 4), (1, 0, 2), (1, 1, 8), (2, 1, 3)]
+    frontier = spark.createDataFrame(rows, "id long, slot int, reg long")
+    sent: dict[tuple[int, int], list[int]] = {}
+    for src, dst, _ in EDGES:
+        for vid, slot, reg in rows:
+            if vid == src:
+                sent.setdefault((dst, slot), []).append(reg)
+    oracle = {
+        "bit_or": {k: functools.reduce(operator.or_, v) for k, v in sent.items()},
+        "max": {k: max(v) for k, v in sent.items()},
+        "any": dict.fromkeys(sent, True),
+    }
+    for combiner, message in (
+        ("bit_or", F.col("reg")), ("max", F.col("reg")), ("any", F.lit(True))
+    ):
+        for direction in ("broadcast", "shuffle"):
+            got = {
+                (r["id"], r["slot"]): r["msg"]
+                for r in edge_map(
+                    g, frontier, message=message, combiner=combiner,
+                    direction=direction, keys=("slot",),
+                ).collect()
+            }
+            assert got == oracle[combiner], (combiner, direction)
     g.unpersist()
 
 

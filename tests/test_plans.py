@@ -5,6 +5,8 @@ fails at scale."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,14 +47,29 @@ def test_segment_spend_broadcasts(spark):
 
 
 def test_edge_map_broadcast_mode_plan(spark, mk_graph):
+    """The broadcast plan, plain and keyed by ``slot``: the frontier is
+    broadcast, and the final aggregation reads the partial one with no
+    exchange between them, since the edge table's
+    ``hashpartitioning(dst)`` satisfies ``(id)`` and ``(id, slot)``
+    alike (AQE drops the exchange once the cached scan reports its
+    partitioning, so the check reads the executed plan)."""
     from ligra_spark.operators.edge_map import edge_map
+    from ligra_spark.plans import physical_plan
 
     g = mk_graph([(0, 1), (1, 2), (2, 3), (3, 0)])
-    frontier = spark.createDataFrame([(0,)], "id long")
-    msgs = edge_map(g, frontier, message=F.col("src"), combiner="min",
-                    direction="broadcast", frontier_size=1)
-    assert_broadcast_join(msgs, at_least=1, label="edge_map broadcast")
-    assert_no_cartesian(msgs, "edge_map broadcast")
+    plain = spark.createDataFrame([(0,)], "id long")
+    keyed = spark.createDataFrame([(0, 5)], "id long, slot int")
+    for frontier, keys in ((plain, ()), (keyed, ("slot",))):
+        label = f"edge_map broadcast keys={keys}"
+        msgs = edge_map(g, frontier, message=F.col("src"), combiner="min",
+                        direction="broadcast", frontier_size=1, keys=keys)
+        assert_broadcast_join(msgs, at_least=1, label=label)
+        assert_no_cartesian(msgs, label)
+        msgs.collect()
+        plan = physical_plan(msgs)
+        assert re.search(
+            r"HashAggregate \(\d+\)\n\s*\+- \* HashAggregate \(\d+\)", plan
+        ), f"{label}: exchange between the aggregations:\n{plan}"
 
 
 def test_edge_map_shuffle_mode_no_broadcast_of_edges(spark, mk_graph):
